@@ -62,16 +62,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _released(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
-    """Release the PREVIOUS query's tracked persisted frames before
-    building this one's plan. By the time the harness calls the next
-    query, the prior result has been collected, so its caches are dead
-    weight — without this, a 98-query session accumulates persisted
-    frames and the tail pays the memory/GC bill."""
+    """Release the PREVIOUS query's tracked persists and checkpoint
+    blocks before building this one's plan. By the time the harness
+    calls the next query, the prior result has been collected, so its
+    caches are dead weight — without this, a long session accumulates
+    persisted frames and checkpoint blocks, and the tail pays the
+    memory/GC bill and the dead-block race."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from football_etl_pipeline_spark.operators.registry import release_persists
+        from football_etl_pipeline_spark.operators.registry import release_checkpoints
 
-        release_persists()
+        release_checkpoints(spark)
         return fn(spark, sf_dir)
 
     return wrapped
@@ -83,5 +84,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
+    """DuckDB-runnable ANSI SQL twin for every query."""
     return dict(ORACLES)

@@ -699,17 +699,13 @@ def main() -> None:
     # run; only JIT/codegen state carries over (steady-state
     # throughput, the number that extrapolates to a long-running
     # cluster).
-    from football_etl_pipeline_spark.operators.registry import (
-        release_checkpoints,
-        release_persists,
-    )
+    from football_etl_pipeline_spark.operators.registry import release_checkpoints
 
     warm_dir = "/root/testdata/sf0.001"
     for name in headline:
         fn = QUERIES.get(name)
         if fn is not None:
             fn(spark, warm_dir).count()
-            release_persists()
             release_checkpoints(spark)
 
     # Median of N_RUNS per query, releasing tracked persisted frames
@@ -741,17 +737,16 @@ def main() -> None:
                 t0 = time.time()
                 n = fn(spark, sf_dir).count()
                 runs.append(time.time() - t0)
-                release_persists()
                 # r16 measurement fix (documented in
-                # OPTIMIZATION_r16.md): also blocking-release the
-                # run's localCheckpoint blocks. They are not tracked
-                # persists, and leaving them to the async
-                # ContextCleaner let dead blocks from run k race run
-                # k+1's executors — measured 3.3/7.0/22.8s across
-                # three identical back-to-back dedup_semantic_
-                # incremental runs. Same clean-cache-per-run protocol
-                # the BENCH_r02/r05 lessons established, extended to
-                # the r15/r16 checkpoint-heavy plans.
+                # OPTIMIZATION_r16.md): release the run's tracked
+                # persists AND blocking-release its localCheckpoint
+                # blocks. Leaving those to the async ContextCleaner
+                # let dead blocks from run k race run k+1's executors
+                # — measured 3.3/7.0/22.8s across three identical
+                # back-to-back dedup_semantic_incremental runs. Same
+                # clean-cache-per-run protocol the BENCH_r02/r05
+                # lessons established, extended to the r15/r16
+                # checkpoint-heavy plans.
                 release_checkpoints(spark)
             out[name] = round(sorted(runs)[N_RUNS // 2], 3)
             print(

@@ -119,10 +119,10 @@ def cmd_query(args: argparse.Namespace) -> int:
 
 
 def cmd_list(args: argparse.Namespace) -> int:
-    from .operators import ORACLES, QUERIES
+    from .operators import QUERIES
 
     for name in sorted(QUERIES):
-        print(f"{name}\t{'oracled' if name in ORACLES else 'rows-only'}")
+        print(f"{name}\toracled")  # finalize_order requires an oracle per query
     return 0
 
 

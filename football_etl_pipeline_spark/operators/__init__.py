@@ -1,9 +1,9 @@
 """Query-operator library.
 
 Each operator is a named (spark, sf_dir) -> DataFrame callable
-registered in ``registry.QUERIES`` with (where SQL-expressible) a
-DuckDB oracle twin in ``registry.ORACLES``. Importing this package
-imports every operator module so the registry is fully populated.
+registered in ``registry.QUERIES`` with a DuckDB oracle twin in
+``registry.ORACLES``. Importing this package imports every operator
+module so the registry is fully populated.
 """
 
 from . import registry

@@ -32,10 +32,11 @@ ORACLES: dict[str, str] = {}
 # persist must outlive the operator function — the caller triggers the
 # action later — so a try/finally inside the operator would defeat it.
 # Instead every such persist is *tracked*, and harnesses (bench,
-# verify, the driver adapter) call release_persists() once the
-# previous query's action has run. Without this, a long session
-# accumulates cached frames and later queries pay the memory/GC bill
-# (measured 2.4× inflation on BENCH_r02 tail queries).
+# verify, the driver adapter) call release_checkpoints(spark), which
+# releases it, once the previous query's action has run. Without
+# this, a long session accumulates cached frames and later queries pay
+# the memory/GC bill (measured 2.4× inflation on BENCH_r02 tail
+# queries).
 #
 # NOT thread-safe by design: the tracker is a plain module-level list,
 # matching the single-threaded harness contract (bench/verify/driver
@@ -65,29 +66,33 @@ def release_persists() -> int:
 
 
 def release_checkpoints(spark) -> int:
-    """Blocking-unpersist EVERY still-cached RDD — the companion to
-    ``release_persists`` for ``localCheckpoint`` blocks, which are not
-    tracked frames and otherwise die only when the async
-    ContextCleaner gets to them after a driver GC (r16 finding: dead
-    checkpoint blocks from a query's prior runs raced the next run's
-    executors — ``dedup_semantic_incremental`` measured 3.3 → 7.0 →
-    22.8 s across three back-to-back identical runs).
+    """The one release call every harness surface makes between
+    queries: release the tracked persists first (so the CacheManager
+    drops their frames instead of keeping stale entries whose RDDs are
+    gone), then blocking-unpersist every remaining persistent RDD.
+    Those are mostly ``localCheckpoint`` blocks, which are not tracked
+    frames and otherwise die only when the async ContextCleaner gets
+    to them after a driver GC (r16 finding: dead checkpoint blocks from
+    a query's prior runs raced the next run's executors —
+    ``dedup_semantic_incremental`` measured 3.3 → 7.0 → 22.8 s across
+    three back-to-back identical runs).
 
     ONLY call between queries when no returned-but-unexecuted plan is
     still alive: a localCheckpointed frame's lineage is truncated, so
     unpersisting it makes any later action on it fail loudly (which is
     the correct failure mode for a harness bug, not silent recompute).
-    Returns how many RDDs were unpersisted."""
-    jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for jrdd in jrdds.values():
+    Returns how many tracked frames and RDDs were released."""
+    n = release_persists()
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         jrdd.unpersist(True)
         n += 1
     return n
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a query operator and (optionally) its oracle."""
+    """Decorator: register a query operator and its oracle. A module
+    may pass ``oracle=None`` and set ``ORACLES[name]`` itself later;
+    ``finalize_order`` requires every query to have one."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
@@ -136,18 +141,18 @@ def finalize_order() -> None:
     """Reorder QUERIES/ORACLES so the frozen driver window is the
     first 50 keys regardless of which source module a later query
     was added to. Idempotent; raises if a window key is missing
-    (deleting a window query IS a contract break and must be loud)."""
+    (deleting a window query IS a contract break and must be loud) or
+    if a query has no oracle (every query is checked against DuckDB)."""
     missing = [k for k in DRIVER_WINDOW_R04 if k not in QUERIES]
     if missing:
         raise RuntimeError(
             f"frozen driver-window queries missing from registry: {missing}"
         )
+    unoracled = [k for k in QUERIES if k not in ORACLES]
+    if unoracled:
+        raise RuntimeError(f"queries registered without an oracle: {unoracled}")
     rest = [k for k in QUERIES if k not in DRIVER_WINDOW_R04]
     for mapping in (QUERIES, ORACLES):
-        ordered = {
-            k: mapping[k]
-            for k in (*DRIVER_WINDOW_R04, *rest)
-            if k in mapping
-        }
+        ordered = {k: mapping[k] for k in (*DRIVER_WINDOW_R04, *rest)}
         mapping.clear()
         mapping.update(ordered)

@@ -1,0 +1,209 @@
+"""The one Spark-vs-DuckDB result check.
+
+Every harness surface runs a query through ``check``: the tier-1
+registry tests, ``tools/verify_oracle.py`` (and through its ``sweep``
+the round gate) and ``tools/judge_sample.py``. It mirrors the driver's
+correctness gate and is stricter than it, so a pass here implies a
+driver pass:
+
+- canonical outputs: the driver canonicalizes both results through a
+  pandas frame (sort + value-hash). ``Decimal`` cells hash differently
+  from the ``float64`` DuckDB's client yields, and list/dict cells are
+  unhashable, so the Spark side's final schema must hold no Decimal,
+  Array, Map or Struct column, and the DuckDB side no Decimal or
+  list/dict cell. Decimal math stays internal to a query (it is what
+  makes double sums order-insensitive) and the final projection casts
+  it to DOUBLE;
+- the same column-name set and row count;
+- an order-insensitive exact value compare: cells normalized to
+  strings, floats via ``repr`` so bit-level drift fails loudly;
+- pandas dtype-class parity: a column that is int64 on one side and
+  float64 on the other hashes differently in the driver even when
+  every value matches (DuckDB ``SUM(BIGINT)`` returns HUGEINT, which
+  pandas renders as float64, so integer-sum oracles need ``::BIGINT``).
+"""
+
+from __future__ import annotations
+
+import datetime
+import decimal
+import math
+import time
+from collections.abc import Callable
+
+import duckdb
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.conversion import LocalDataToArrowConversion
+
+
+# Leading words of the ``err`` parts for the two driver-canonical
+# checks, which tests assert on separately.
+SCHEMA_PROBLEM = "non-canonical spark final columns"
+DTYPE_PROBLEM = "pandas dtype classes"
+
+
+def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per testdata table in ``sf_dir``."""
+    from football_etl_pipeline_spark.sources.testdata import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def normalize_cell(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, float):
+        # repr keeps full double precision: bit-level mismatches show.
+        return "NaN" if math.isnan(v) else repr(v)
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat()
+    if isinstance(v, list):
+        return "[" + ",".join(normalize_cell(x) for x in v) + "]"
+    if isinstance(v, (bytes, bytearray)):
+        return v.hex()
+    return str(v)
+
+
+def multiset(rows, colnames) -> list[str]:
+    """Sorted row strings with columns in name order."""
+    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
+    return sorted("|".join(normalize_cell(r[i]) for i in order) for r in rows)
+
+
+def _bad_fields(schema: T.StructType) -> list[str]:
+    """Final Spark columns the driver's canonicalizer mishandles."""
+    return [
+        f"{f.name}: {f.dataType.simpleString()}"
+        for f in schema.fields
+        if isinstance(f.dataType, (T.DecimalType, T.ArrayType, T.MapType, T.StructType))
+    ]
+
+
+def non_canonical_types(rows) -> set[str]:
+    """Cell types the driver's canonicalizer mishandles. Types are
+    uniform per column except for NULLs, so each column is judged by
+    its first non-NULL cell, however deep that is: a leading-NULL
+    column must not escape the check."""
+    bad: set[str] = set()
+    if not rows:
+        return bad
+    for i in range(len(rows[0])):
+        for r in rows:
+            v = r[i]
+            if v is None:
+                continue
+            if isinstance(v, decimal.Decimal):
+                bad.add("Decimal")
+            elif isinstance(v, (list, tuple, dict, set)):
+                bad.add(type(v).__name__)
+            break
+    return bad
+
+
+_INTS = {"int8", "int16", "int32", "int64", "uint8", "uint16", "uint32", "uint64"}
+
+
+def _dtype_class(dt: str) -> str:
+    if dt in _INTS:
+        return "int"
+    if dt.startswith("datetime"):
+        return "datetime"
+    return dt  # object (strings, dates), float64, bool, ...
+
+
+def _to_pandas(spark: SparkSession, rows: list, schema: T.StructType):
+    """``sdf.toPandas()`` for rows already collected from ``sdf``: the
+    same function of rows and schema, with no second execution of the
+    query. The rows go to Spark as an Arrow table, because a local list
+    goes through a Python-worker job that costs 0.6-0.9 s per call
+    (about 7x the Arrow route on 4 cores); Arrow cannot take zero rows."""
+    if not rows:
+        return spark.createDataFrame([], schema).toPandas()
+    table = LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
+    return spark.createDataFrame(table, schema).toPandas()
+
+
+def _dtype_mismatches(spdf, odf) -> list[str]:
+    """Columns whose pandas dtype classes differ. Int width (int32 vs
+    int64) and datetime precision (ns vs us) hash equal in the driver,
+    and object-vs-datetime for date cells is green there, so those
+    pairs are allowed; int-vs-float is the class this blocks."""
+    bad = []
+    for c in odf.columns:
+        if c not in spdf.columns:
+            continue
+        a, b = _dtype_class(str(spdf[c].dtype)), _dtype_class(str(odf[c].dtype))
+        if a != b and {a, b} != {"object", "datetime"}:
+            bad.append(f"{c}: spark={spdf[c].dtype} duck={odf[c].dtype}")
+    return bad
+
+
+def check(
+    spark: SparkSession,
+    con: duckdb.DuckDBPyConnection,
+    build: Callable[[], DataFrame],
+    sql: str,
+) -> dict:
+    """Build and collect the Spark side once, run ``sql`` on ``con``
+    and compare. Returns ``{"status": "ok"|"fail", "secs": float,
+    "rows": int|None, "err": str|None}``."""
+    t0 = time.time()
+
+    def record(status: str, rows: int | None, err: str | None = None) -> dict:
+        return {"status": status, "secs": round(time.time() - t0, 2),
+                "rows": rows, "err": err}
+
+    try:
+        sdf = build()
+        schema = sdf.schema
+        srows = sdf.collect()
+    except Exception as ex:
+        return record("fail", None, f"spark error: {ex}")
+    try:
+        rel = con.execute(sql)
+        ocols = [d[0] for d in rel.description]
+        orows = rel.fetchall()
+        # df() needs a fresh result; DuckDB re-runs the oracle cheaply.
+        odf = con.execute(sql).df()
+    except Exception as ex:
+        return record("fail", len(srows), f"duckdb error: {ex}")
+    problems = []
+    bad = _bad_fields(schema)
+    if bad:
+        problems.append(
+            f"{SCHEMA_PROBLEM} {bad}: cast DECIMAL to "
+            "DOUBLE and serialize arrays/maps/structs in the final projection"
+        )
+    bad = non_canonical_types(orows)
+    if bad:
+        problems.append(
+            f"non-canonical oracle cell types {sorted(bad)} "
+            "(driver canonicalizer breaks on these)"
+        )
+    scols = schema.names
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"schema: spark={sorted(scols)} oracle={sorted(ocols)}")
+    if len(srows) != len(orows):
+        problems.append(f"rowcount: spark={len(srows)} oracle={len(orows)}")
+    if not problems:
+        sm, om = multiset(srows, scols), multiset(orows, ocols)
+        if sm != om:
+            diffs = [(a, b) for a, b in zip(sm, om) if a != b][:3]
+            problems.append(f"values: first diffs {diffs}")
+    # Judged on the shared columns whatever else failed, so a report
+    # names every class of defect at once.
+    bad = _dtype_mismatches(_to_pandas(spark, srows, schema), odf)
+    if bad:
+        problems.append(
+            f"{DTYPE_PROBLEM} {bad}: cast the oracle (::BIGINT for "
+            "integer sums) or the Spark output into the same class"
+        )
+    if problems:
+        return record("fail", len(srows), "; ".join(problems))
+    return record("ok", len(srows))

@@ -3,7 +3,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -27,12 +26,32 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    from football_etl_pipeline_spark.sources.testdata import TABLES
+    from football_etl_pipeline_spark.oracle import make_duck
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = make_duck(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def query_check(spark, sf_dir, duck):
+    """``oracle.check`` for a registered query, memoized for the session.
+    The registry-wide tests each assert their part of the same record,
+    so every query is built and executed once per tier-1 run."""
+    from football_etl_pipeline_spark.operators import ORACLES, QUERIES
+    from football_etl_pipeline_spark.operators.registry import release_checkpoints
+    from football_etl_pipeline_spark.oracle import check
+
+    records: dict[str, dict] = {}
+
+    def get(name: str) -> dict:
+        if name not in records:
+            try:
+                records[name] = check(
+                    spark, duck, lambda: QUERIES[name](spark, sf_dir), ORACLES[name]
+                )
+            finally:
+                release_checkpoints(spark)
+        return records[name]
+
+    return get

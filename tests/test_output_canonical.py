@@ -7,86 +7,35 @@ shapes break that canonicalizer even when the values are exact:
 - ``DecimalType`` final columns: Spark returns ``decimal.Decimal``
   cells while DuckDB's pandas client returns ``float64`` — the value
   hashes diverge although a strict cell compare matches.
-- ``ArrayType`` / ``MapType`` final columns: pandas cannot hash list
-  cells (``TypeError: unhashable type: 'list'``).
+- ``ArrayType`` / ``MapType`` / ``StructType`` final columns: pandas
+  cannot hash list cells (``TypeError: unhashable type: 'list'``).
 
-Repo rule (README "Determinism"): decimal math stays *internal* (it is
-what makes double sums order-insensitive) but every query's FINAL
-schema is scalar, non-decimal. This test asserts the rule for every
-registered query so a driver-list expansion can never re-introduce the
-round-1 red rows.
+A column that is int64 on one side and float64 on the other hashes
+differently too, even when every value matches.
+
+Both rules are part of ``oracle.check``; these tests assert them per
+query from the same memoized record ``test_queries_oracle`` asserts
+(the ``query_check`` fixture), so no query is built a second time.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import types as T
 
-from football_etl_pipeline_spark.operators import QUERIES as ALL_QUERIES
-
-
-def _bad_fields(schema: T.StructType) -> list[str]:
-    bad = []
-    for f in schema.fields:
-        dt = f.dataType
-        if isinstance(dt, (T.DecimalType, T.ArrayType, T.MapType, T.StructType)):
-            bad.append(f"{f.name}: {dt.simpleString()}")
-    return bad
+from football_etl_pipeline_spark.operators import QUERIES
+from football_etl_pipeline_spark.oracle import DTYPE_PROBLEM, SCHEMA_PROBLEM
 
 
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
-def test_final_schema_is_scalar_non_decimal(name, spark, sf_dir):
-    df = ALL_QUERIES[name](spark, sf_dir)
-    bad = _bad_fields(df.schema)
-    assert not bad, (
-        f"query {name!r} has non-canonical final columns {bad}; "
-        "cast DECIMAL results to DOUBLE and serialize arrays/maps "
-        "(array_join/to_json) in the final projection of BOTH dialects"
-    )
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_final_schema_is_scalar_non_decimal(name, query_check):
+    rec = query_check(name)
+    assert rec["rows"] is not None, f"{name}: {rec['err']}"
+    assert SCHEMA_PROBLEM not in (rec["err"] or ""), f"{name}: {rec['err']}"
 
 
-# ---- pandas dtype-class parity (the driver's actual compare path) ----
-
-_INTS = {"int8", "int16", "int32", "int64", "uint8", "uint16", "uint32", "uint64"}
-
-
-def _dtype_class(dt: str) -> str:
-    if dt in _INTS:
-        return "int"
-    if dt.startswith("datetime"):
-        return "datetime"
-    if dt == "object":  # strings / date objects — hash per-value
-        return "object"
-    return dt  # float64, bool, ...
-
-
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
-def test_pandas_dtype_class_parity(name, spark, sf_dir, duck):
-    """The driver canonicalizes BOTH engines through pandas frames; a
-    column that is int64 on one side and float64 on the other hashes
-    differently even when every value matches. Round-1 evidence shows
-    int-width (int32 vs int64) and datetime-precision (ns vs us)
-    differences hash equal, and object-vs-datetime for date cells is
-    green — so those are allowed; int-vs-float is the class this test
-    exists to block (DuckDB SUM(BIGINT) returns HUGEINT, which pandas
-    renders as float64 — every integer-sum oracle needs ::BIGINT)."""
-    from football_etl_pipeline_spark.operators import ORACLES
-
-    if name not in ORACLES:
-        pytest.skip("rows-only query")
-    sdf = ALL_QUERIES[name](spark, sf_dir).toPandas()
-    odf = duck.execute(ORACLES[name]).df()
-    bad = []
-    for c in odf.columns:
-        if c not in sdf.columns:
-            continue
-        a, b = _dtype_class(str(sdf[c].dtype)), _dtype_class(str(odf[c].dtype))
-        if a != b and not (
-            {a, b} == {"object", "datetime"}
-        ):
-            bad.append(f"{c}: spark={sdf[c].dtype} duck={odf[c].dtype}")
-    assert not bad, (
-        f"query {name!r} has pandas dtype-class mismatches {bad}; "
-        "cast the oracle output (::BIGINT for integer sums) or the "
-        "Spark output so both sides land in the same dtype class"
-    )
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_pandas_dtype_class_parity(name, query_check):
+    rec = query_check(name)
+    err = rec["err"] or ""
+    assert rec["rows"] is not None and "duckdb error" not in err, f"{name}: {err}"
+    assert DTYPE_PROBLEM not in err, f"{name}: {err}"

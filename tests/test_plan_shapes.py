@@ -32,6 +32,32 @@ def _final(plan: str) -> str:
     return plan.split("== Initial Plan ==")[0]
 
 
+def _final_regions(plan: str) -> str:
+    """Every final-plan region: the outer plan's and each subquery's.
+    ``_final`` stops at the first "== Initial Plan ==" echo, which may
+    be a subquery's. AQE runs subqueries concurrently, and an exchange
+    two of them share is printed in full in whichever ran it first and
+    as a ReusedExchange in the others, so a node can sit past that cut
+    on some runs. This drops every echo instead: each marker line and
+    the lines indented deeper than it."""
+
+    def lead(line: str) -> int:
+        return len(line) - len(line.lstrip(" "))
+
+    out: list[str] = []
+    skip_below: int | None = None
+    for line in plan.split("\n"):
+        if skip_below is not None:
+            if not line.strip() or lead(line) > skip_below:
+                continue
+            skip_below = None
+        if "== Initial Plan ==" in line:
+            skip_below = lead(line)
+            continue
+        out.append(line)
+    return "\n".join(out)
+
+
 def _outer_final(plan: str) -> str:
     """The OUTER final-plan region only. ``_final``'s naive split breaks
     when the plan embeds an InMemoryRelation: the cached frame's own
@@ -926,8 +952,10 @@ def test_average_precision_ranks_ride_range_exchange(spark):
 def test_permutation_test_explodes_then_reduces(spark):
     """The ×32 relabeling must ride a Generate (explode) of the
     per-user frame and partial-aggregate to 32 moment rows — never a
-    cartesian or a join against the raw events."""
-    final = _final(_plan(spark, "stats_permutation_test"))
+    cartesian or a join against the raw events. The explode's
+    broadcast is shared by several scalar subqueries, so the whole
+    final plan is searched."""
+    final = _final_regions(_plan(spark, "stats_permutation_test"))
     assert "Generate" in final
     assert "CartesianProduct" not in final
 

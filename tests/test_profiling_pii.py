@@ -67,11 +67,8 @@ def test_spark_and_duckdb_agree_on_hostile_corpus(spark):
         EMAIL_RE,
         PHONE_RE,
     )
-    from tests.oracle_util import assert_matches_oracle
+    from football_etl_pipeline_spark.oracle import check
 
-    sdf = pii_stats(
-        spark.createDataFrame(HOSTILE_DOCS, "source string, txt string")
-    )
     duck = duckdb.connect()
     duck.execute(
         "CREATE TABLE hostile(source VARCHAR, txt VARCHAR)"
@@ -79,9 +76,12 @@ def test_spark_and_duckdb_agree_on_hostile_corpus(spark):
     duck.executemany(
         "INSERT INTO hostile VALUES (?, ?)", HOSTILE_DOCS
     )
-    assert_matches_oracle(
-        sdf,
+    rec = check(
+        spark,
         duck,
+        lambda: pii_stats(
+            spark.createDataFrame(HOSTILE_DOCS, "source string, txt string")
+        ),
         f"""
         SELECT source,
                len(regexp_extract_all(txt, '{EMAIL_RE}')) AS n_email,
@@ -92,5 +92,5 @@ def test_spark_and_duckdb_agree_on_hostile_corpus(spark):
                     '{PHONE_RE}', '<PHONE>', 'g')))::INT AS chars_removed
         FROM hostile
         """,
-        name="pii_hostile",
     )
+    assert rec["status"] == "ok", rec["err"]

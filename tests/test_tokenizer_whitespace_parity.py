@@ -12,8 +12,7 @@ import duckdb
 import pytest
 
 from football_etl_pipeline_spark.operators import ORACLES, QUERIES
-
-from .oracle_util import assert_matches_oracle
+from football_etl_pipeline_spark.oracle import check
 
 HOSTILE = [
     (1, "\tleading tab then words"),
@@ -56,8 +55,10 @@ def hostile_duck(hostile_sf_dir):
 def test_python_tokenizers_match_oracle_on_hostile_whitespace(
     name, spark, hostile_sf_dir, hostile_duck
 ):
-    sdf = QUERIES[name](spark, hostile_sf_dir)
-    assert_matches_oracle(sdf, hostile_duck, ORACLES[name], name)
+    rec = check(
+        spark, hostile_duck, lambda: QUERIES[name](spark, hostile_sf_dir), ORACLES[name]
+    )
+    assert rec["status"] == "ok", rec["err"]
 
 
 def test_udtf_arrow_path_matches_row_path(spark, hostile_sf_dir):

@@ -8,7 +8,7 @@ target SF with the bench's own action (`.count()`), and record
   - how many Exchange nodes the final plan has (shuffle count),
   - the physical plan (optional, --plans DIR writes <name><suffix>.txt).
 
-r16 fixes over measure_r15 (ADVICE items):
+r16 fixes over the round-15 harness this replaced (ADVICE items):
   - --top resolves the NEWEST BENCH_DETAIL_r*.json by glob instead of
     hardcoding r14 (stale + FileNotFoundError on fresh checkouts);
   - job counts come from an explicit per-measurement job group, so a
@@ -70,10 +70,7 @@ def main() -> None:
     names += args
 
     from football_etl_pipeline_spark.operators import QUERIES
-    from football_etl_pipeline_spark.operators.registry import (
-        release_checkpoints,
-        release_persists,
-    )
+    from football_etl_pipeline_spark.operators.registry import release_checkpoints
     from football_etl_pipeline_spark.session import get_spark
     from football_etl_pipeline_spark.sources.testdata import load_tables
 
@@ -95,7 +92,6 @@ def main() -> None:
             continue
         sc.setJobGroup(f"warm:{name}", f"warm:{name}")
         fn(spark, warm_dir).count()
-        release_persists()
         release_checkpoints(spark)
         sc._jvm.System.gc()
         group = f"measure:{name}"
@@ -111,7 +107,6 @@ def main() -> None:
         # host noise.
         runs = [dt]
         for _ in range(2):
-            release_persists()
             release_checkpoints(spark)
             sc._jvm.System.gc()
             t0b = time.time()
@@ -127,7 +122,6 @@ def main() -> None:
             re.findall(r"ReusedExchange", plan)
         )
         n_reuse = len(re.findall(r"ReusedExchange", plan))
-        release_persists()
         release_checkpoints(spark)
         if plans_dir:
             with open(

@@ -66,7 +66,6 @@ def run_canary() -> dict:
 def summarize(results: dict) -> dict:
     return {
         "ok": sum(1 for r in results.values() if r["status"] == "ok"),
-        "weak": sum(1 for r in results.values() if r["status"] == "weak"),
         "fail": sum(1 for r in results.values() if r["status"] == "fail"),
         "total": len(results),
         "secs": round(sum(r["secs"] for r in results.values()), 1),
@@ -157,8 +156,8 @@ def main() -> int:
                 results = sweep(spark, sf_dir, verbose=True)
             summary = summarize(results)
             gate["sweeps"][sf_dir] = {"summary": summary, "queries": results}
-            print(f"{sf_dir}: {summary['ok']} ok, {summary['weak']} weak, "
-                  f"{summary['fail']} FAIL in {summary['secs']}s")
+            print(f"{sf_dir}: {summary['ok']} ok, {summary['fail']} FAIL "
+                  f"in {summary['secs']}s")
             failed = failed or summary["fail"] > 0
 
     gate["passed"] = not failed

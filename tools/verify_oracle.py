@@ -1,17 +1,17 @@
 """Local stand-in for the driver's t2 correctness gate.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
-on DuckDB at the given sf dir, then compares row-count, column names,
-and an order-insensitive value comparison (exact string equality of
-normalized cells — STRICTER than tolerant float compare, so passing
-here means the driver's value-hash should match too).
+on DuckDB at the given sf dir through
+``football_etl_pipeline_spark.oracle.check`` (canonical outputs,
+column names, row count, exact string-normalized values, pandas
+dtype classes — stricter than the driver, so passing here means the
+driver's value-hash should match too).
 
 Usage: python tools/verify_oracle.py [sf_dir] [name_filter...]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
@@ -19,132 +19,15 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def non_canonical_types(rows) -> set[str]:
-    """Cell types the DRIVER's pandas canonicalizer mishandles even
-    when str-equal across engines: Decimal hashes differently than the
-    float64 the DuckDB client yields, and list/dict cells are
-    unhashable. A local pass must imply a driver pass, so these are
-    hard failures here. Types are uniform per column except for NULLs,
-    so each column is judged by its first NON-NULL cell — scanning
-    however deep that takes (a leading-NULL column must not escape
-    the gate)."""
-    import decimal
-
-    bad: set[str] = set()
-    if not rows:
-        return bad
-    for i in range(len(rows[0])):
-        for r in rows:
-            v = r[i]
-            if v is None:
-                continue
-            if isinstance(v, decimal.Decimal):
-                bad.add("Decimal")
-            elif isinstance(v, (list, tuple, dict, set)):
-                bad.add(type(v).__name__)
-            break  # first non-null cell decides the column
-    return bad
-
-
-def normalize_cell(v):
-    import datetime
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # repr keeps full double precision — bit-level mismatches WILL show.
-        return repr(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    if isinstance(v, list):
-        return "[" + ",".join(normalize_cell(x) for x in v) + "]"
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    return str(v)
-
-
-def rows_to_multiset(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(
-        "|".join(normalize_cell(r[i]) for i in order) for r in rows
-    )
-
-
-def check_one(spark, con, sf_dir: str, name: str, qs, oracles) -> dict:
-    """Run one query on both engines and compare. Returns a record
-    ``{"status": "ok"|"weak"|"fail", "secs": float, "rows": int|None,
-    "err": str|None}`` — the unit both the CLI and the round gate
-    (``tools/round_gate.py``) consume."""
-    t0 = time.time()
-    try:
-        sdf = qs[name](spark, sf_dir)
-        scols = sdf.columns
-        srows = sdf.collect()
-    except Exception as ex:
-        return {"status": "fail", "secs": round(time.time() - t0, 2),
-                "rows": None, "err": f"spark error: {ex}"}
-    if name not in oracles:
-        bad = non_canonical_types([tuple(r) for r in srows])
-        dt = round(time.time() - t0, 2)
-        if bad:
-            return {"status": "fail", "secs": dt, "rows": len(srows),
-                    "err": f"non-canonical cell types {sorted(bad)} in rows-only query"}
-        return {"status": "weak", "secs": dt, "rows": len(srows), "err": None}
-    try:
-        rel = con.execute(oracles[name])
-        ocols = [d[0] for d in rel.description]
-        orows = rel.fetchall()
-    except Exception as ex:
-        return {"status": "fail", "secs": round(time.time() - t0, 2),
-                "rows": len(srows), "err": f"duckdb error: {ex}"}
-    problems = []
-    for side, rws in (("spark", srows), ("oracle", orows)):
-        bad = non_canonical_types(rws)
-        if bad:
-            problems.append(
-                f"non-canonical {side} cell types {sorted(bad)} "
-                "(driver canonicalizer breaks on these)"
-            )
-    if sorted(scols) != sorted(ocols):
-        problems.append(f"schema: spark={sorted(scols)} oracle={sorted(ocols)}")
-    if len(srows) != len(orows):
-        problems.append(f"rowcount: spark={len(srows)} oracle={len(orows)}")
-    if not problems:
-        sm = rows_to_multiset([tuple(r) for r in srows], scols)
-        om = rows_to_multiset(orows, ocols)
-        if sm != om:
-            diffs = [(a, b) for a, b in zip(sm, om) if a != b][:3]
-            problems.append(f"values: first diffs {diffs}")
-    dt = round(time.time() - t0, 2)
-    if problems:
-        return {"status": "fail", "secs": dt, "rows": len(srows),
-                "err": "; ".join(problems)}
-    return {"status": "ok", "secs": dt, "rows": len(srows), "err": None}
-
-
-def make_duck(sf_dir: str):
-    import duckdb
-
-    from football_etl_pipeline_spark.sources.testdata import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
-
-
 def sweep(
     spark, sf_dir: str, name_filter=(), verbose: bool = True, exact: bool = False
 ) -> dict:
     """Run every registered query against its oracle at ``sf_dir``.
-    Returns ``{name: record}`` (see ``check_one``). ``name_filter``
+    Returns ``{name: record}`` (see ``oracle.check``). ``name_filter``
     entries match by substring (the CLI convenience) unless ``exact``
     (the incremental gate passes exact names)."""
     import __spark_entry__ as e
+    from football_etl_pipeline_spark.oracle import check, make_duck
 
     con = make_duck(sf_dir)
     qs, oracles = e.queries(), e.oracle_sql()
@@ -154,13 +37,11 @@ def sweep(
         names = [n for n in qs if not name_filter or any(f in n for f in name_filter)]
     results = {}
     for name in names:
-        rec = check_one(spark, con, sf_dir, name, qs, oracles)
+        rec = check(spark, con, lambda: qs[name](spark, sf_dir), oracles[name])
         results[name] = rec
         if verbose:
             if rec["status"] == "fail":
                 print(f"FAIL  {name} ({rec['secs']}s): {rec['err']}")
-            elif rec["status"] == "weak":
-                print(f"weak  {name}: rows={rec['rows']} (no oracle; rows-only check)")
             else:
                 print(f"ok    {name} ({rec['secs']}s, {rec['rows']} rows)")
     con.close()
@@ -181,10 +62,8 @@ def main() -> int:
 
     spark = get_spark("verify_oracle")
     results = sweep(spark, sf_dir, name_filter)
-    n_pass = sum(1 for r in results.values() if r["status"] == "ok")
-    n_weak = sum(1 for r in results.values() if r["status"] == "weak")
     n_fail = sum(1 for r in results.values() if r["status"] == "fail")
-    print(f"\n{n_pass} ok, {n_weak} weak (rows-only), {n_fail} FAIL")
+    print(f"\n{len(results) - n_fail} ok, {n_fail} FAIL")
     return 1 if n_fail else 0
 
 
