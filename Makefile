@@ -6,7 +6,7 @@ SF_MED   := /root/testdata/sf0.01
 SF_BIG   := /root/testdata/sf0.1
 ROUND    ?= 8
 
-.PHONY: test canary gate verify verify-big bench bench-smoke entry plans round-close
+.PHONY: test canary gate verify verify-big bench bench-smoke entry plans scale round-close
 
 test:        ## tier-1: full pytest suite, exactly as ROADMAP.md runs it
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
@@ -36,6 +36,11 @@ entry:       ## driver t1 smoke: entry() runs and returns rows
 
 plans:       ## regenerate PLANS.md from the showcase set
 	python tools/dump_plans.py $(SF_MED)
+
+# The 10x SemDeDup fixed-cells rung outgrows a 16 GB host's memory at
+# the default 16g driver heap; a 4g heap spills to disk instead.
+scale:       ## 1x vs 10x scale probe on write_corpus output -> SCALE.md
+	SPARK_GRAFT_DRIVER_MEM=$${SPARK_GRAFT_DRIVER_MEM:-4g} python tools/scale_probe.py
 
 # END-OF-ROUND ritual: full pytest, then the closing gate (its count
 # must equal len(QUERIES) at snapshot time, both SFs), then a full

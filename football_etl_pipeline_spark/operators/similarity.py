@@ -2178,32 +2178,13 @@ SEMDEDUP_NPROBE = 2  # multi-probe membership: each vector also joins
                      # (measured sf0.1 recall 0.39 → 0.79 on this
                      # corpus's worst-case ~60° borderline pairs)
 
-# The K∝n production dial, promoted from docstring prose to a config
-# knob (the SPARK_GRAFT_LP_CAP_MODE pattern): the per-cell candidate
-# surface is Σ|cell|² ≈ n²·P²/K, so a growing corpus keeps per-cell
-# work flat by raising K with n (the 65k-cell codebook at 100 TB).
-# The knob is read ONCE at import and consumed by BOTH the Spark plan
-# (quantizer training / assignment) and the oracle CTE chain, so the
-# gate stays green at any setting — results legitimately differ
-# across settings (different quantizer ⇒ different candidate sets),
-# which is why both sides must move together. Default keeps the
-# fixture-scale K the recall tests were tuned on.
-SEMDEDUP_CELLS_ENV = "SPARK_GRAFT_SEMDEDUP_CELLS"
-
-
-def _semdedup_cells() -> int:
-    import os
-
-    raw = os.environ.get(SEMDEDUP_CELLS_ENV, "").strip()
-    if not raw:
-        return IVF_K
-    k = int(raw)
-    if k < 1:
-        raise ValueError(f"{SEMDEDUP_CELLS_ENV} must be >= 1, got {k}")
-    return k
-
-
-SEMDEDUP_CELLS = _semdedup_cells()
+# The K∝n production dial: the per-cell candidate surface is
+# Σ|cell|² ≈ n²·P²/K, so a growing corpus keeps per-cell work flat by
+# raising K with n (the 65k-cell codebook at 100 TB). The registered
+# queries and their oracles use the fixture-scale K the recall tests
+# were tuned on; ``dedup_semantic_clusters(cells=...)`` takes a larger
+# K for scale runs.
+SEMDEDUP_CELLS = IVF_K
 
 
 def _semdedup_oracle() -> str:

@@ -1,1415 +1,285 @@
-"""Scale rehearsal for the subquadratic-candidate claims.
+"""Scale probe: candidate volume and wall time at 1x vs Nx corpus size.
 
-The 100-TB story of the dedup/ANN ladder rests on candidate-volume
-bounds measured at sf0.1. This probe synthesizes a 10x corpus — a
-union of key-shifted, CONTENT-DISJOINT copies of the sf0.1 tables —
-and records candidate-pair counts and wall time for each banded/
-bucketed rung at 1x vs 10x. A sound rung's candidate volume grows
-~linearly (each copy contributes its own collisions, none across
-copies); superlinear growth means a banding key went hot.
+The engine's dedup, ANN and graph operators claim subquadratic
+candidate volume. This probe writes two corpora with
+``perfbench.corpus.write_corpus`` under ``spark-warehouse/scale_probe/``:
+a 1x base (``sf0.1``) and the union of ``--copies`` key-shifted,
+content-disjoint copies of it (``sf1`` for 10 copies). Each copy
+reproduces the base's pair, key and session structure and no true pair
+crosses copies, so a sound operator grows ~linearly:
+``growth / linear = value_Nx / value_1x / copies`` stays near 1.0 (or
+below, for bounded reports); above 1 a banding key went hot.
 
-Content disjointness matters: a naive 10x union of IDENTICAL copies
-makes every doc a true near-dup of its 9 siblings, so TRUE pairs grow
-45x and candidate growth is unreadable. Instead copy k prefixes every
-token with ``c<k>`` (documents) / rolls the embedding vector by k
-positions (embeddings — intra-copy cosines are permutation-invariant,
-cross-copy cosines drop to background), so each copy reproduces the
-1x pair structure exactly and the linear-growth yardstick is honest.
+Every probe runs once on the 1x corpus to warm up, then once on each
+corpus. A dial row runs only on the Nx corpus, with its dial scaled by
+``copies``, and takes its 1x figures from its base probe. Cached and
+checkpointed blocks are released after every run. The table is written
+to SCALE.md and printed.
 
-IVF note: ``dedup_embedding_ivf``'s candidate volume is
-~n^2 * nprobe^2 / CELLS by construction — at FIXED cells a 10x corpus
-must grow candidates ~100x/10 = 10x-per-doc. The production dial is
-CELLS ~ n (the operator's docstring names the 65k-cell codebook at
-100 TB), so the probe measures it BOTH ways: fixed 32 cells (expect
-superlinear, documenting the failure mode) and cells x10 (expect
-~linear, demonstrating the dial).
+The corpus directories are named by their scale factor, so
+``SPARK_GRAFT_SF_DIR=spark-warehouse/scale_probe/sf1 python bench.py``
+benches the 10x corpus.
 
-Writes SCALE.md at the repo root and prints the same table. Synthetic
-data lands under spark-warehouse/scale_probe/ (never touches the
-read-only testdata).
-
-Round-11 additions:
-- ``--validate100``: builds a 100x documents/embeddings corpus and
-  re-probes the two cheapest banded rungs (minhash_lsh, ann_lsh) at
-  1x vs 100x, APPENDING a validation section to SCALE.md — two
-  decades of measured linearity instead of one decade extrapolated.
-- synthetic ORDERS corpus (key-shifted + date-shifted copies, same
-  disjointness discipline as events) so the orders-side heavies
-  (`orders_series_diagnostics`, `stats_kruskal_wallis_priority`) get
-  wall-growth rows; `dedup_cluster_size_histogram` joins the
-  documents-side composed list.
-
-Usage: python tools/scale_probe.py [--copies 10] [--validate100]
+Usage: python tools/scale_probe.py [--copies 10]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-BASE_SF = "/root/testdata/sf0.1"
-OFFSET = 10_000_000
+sys.path.insert(0, REPO)
+
+SEED = 1
+BASE_SF = 0.1  # write_corpus builds one sf0.1-shaped copy per copy
 
 
-def build_synthetic(spark, copies: int) -> str:
-    """Union of key-shifted content-disjoint copies of documents +
-    embeddings, written once under spark-warehouse/scale_probe/."""
+def corpus_dir(copies: int) -> str:
+    return os.path.join(REPO, "spark-warehouse", "scale_probe", f"sf{BASE_SF * copies:g}")
+
+
+def growth(n1: float, nN: float, copies: int) -> float:
+    return round(nN / n1 / copies, 2) if n1 else float("nan")
+
+
+def table_rows(names, dials, runs, copies: int) -> list[tuple]:
+    """Rows ``(name, n1, nN, growth, w1, wN, wall growth)``: one per probe
+    in ``names``, then one per ``(dial, base)`` in ``dials`` carrying its
+    base probe's 1x figures. ``runs`` maps a probe to ``(n1, w1, nN, wN)``
+    and a dial to ``(nN, wN)``."""
+    runs_1x_nx = [(name, *runs[name]) for name in names]
+    runs_1x_nx += [(dial, *runs[base][:2], *runs[dial]) for dial, base in dials]
+    return [
+        (name, n1, nN, growth(n1, nN, copies), w1, wN, growth(w1, wN, copies))
+        for name, n1, w1, nN, wN in runs_1x_nx
+    ]
+
+
+def overlap_cell_candidates(spark, d: str) -> int:
+    """Pairs the interval-overlap join's refine predicate examines:
+    sum of C(n, 2) over the 15-minute grid cells."""
     from pyspark.sql import functions as F
 
-    out = os.path.join(REPO, "spark-warehouse", "scale_probe", f"x{copies}")
-    marker = os.path.join(out, "_PROBE_COPIES")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    docs = spark.read.parquet(os.path.join(BASE_SF, "documents.parquet"))
-    parts = []
-    for k in range(copies):
-        c = docs.select(
-            (F.col("doc_id") + F.lit(k * OFFSET)).alias("doc_id"),
-            (
-                F.col("text")
-                if k == 0
-                else F.regexp_replace("text", r"(\S+)", f"c{k}$1")
-            ).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        parts.append(c)
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    union.coalesce(4).write.mode("overwrite").parquet(
-        os.path.join(out, "documents.parquet")
+    from football_etl_pipeline_spark.operators.events import OVERLAP_GRAIN_US, session_intervals
+
+    g = F.lit(OVERLAP_GRAIN_US)
+    cells = session_intervals(spark, d).withColumn(
+        "cell", F.explode(F.sequence(F.floor(F.col("s_us") / g), F.floor(F.col("e_us") / g)))
     )
-    emb = spark.read.parquet(os.path.join(BASE_SF, "embeddings.parquet"))
-    dim = len(emb.limit(1).collect()[0]["embedding"])
-    parts = []
-    for k in range(copies):
-        roll = k % dim
-        if roll == 0:
-            v = F.col("embedding")
-        else:
-            v = F.expr(
-                f"concat(slice(embedding, {roll + 1}, {dim - roll}),"
-                f" slice(embedding, 1, {roll}))"
-            )
-        parts.append(
-            emb.select(
-                (F.col("vec_id") + F.lit(k * OFFSET)).alias("vec_id"),
-                v.cast("array<float>").alias("embedding"),
-                "label",
-            )
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    union.coalesce(4).write.mode("overwrite").parquet(
-        os.path.join(out, "embeddings.parquet")
+    return (
+        cells.groupBy("cell").count()
+        .agg(F.sum(F.expr("count * (count - 1) / 2")).cast("bigint"))
+        .first()[0]
     )
-    with open(marker, "w") as f:
-        f.write(str(copies))
-    return out
 
 
-def build_synthetic_events(spark, copies: int) -> str:
-    """Union of key-shifted, TIME-shifted copies of sf0.1 events,
-    written next to the documents/embeddings synthetic corpus.
-
-    Disjointness here is two-dimensional: copy k shifts user_id /
-    event_id by k*OFFSET (no cross-copy graph edges) AND shifts ts by
-    k*(span + 1 day) (no cross-copy grid-cell collisions in the
-    bucketed interval-overlap join). Each copy therefore reproduces
-    the 1x session/edge structure exactly, and linear growth of cell
-    candidates, wedges, and edges is the soundness bar — a 10x corpus
-    that is merely DENSER in the same time window would grow overlap
-    OUTPUT quadratically by problem semantics, which is a different
-    (and unreadable) experiment."""
+def wedge_candidates(spark, d: str, cap: int | None) -> int:
+    """Common-neighbour candidates of link prediction: sum of C(d, 2)
+    over wedge centres, optionally only centres of degree <= ``cap``."""
     from pyspark.sql import functions as F
 
-    out = os.path.join(REPO, "spark-warehouse", "scale_probe", f"x{copies}")
-    marker = os.path.join(out, "_PROBE_EVENTS")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
+    from football_etl_pipeline_spark.operators.events import events_interval_overlap_join
+
+    edges = events_interval_overlap_join(spark, d).select(
+        F.col("user_a").alias("u"), F.col("user_b").alias("v")
+    ).distinct()
+    deg = edges.union(edges.select("v", "u")).groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    if cap is not None:
+        deg = deg.filter(F.col("d") <= cap)
+    return deg.agg(F.sum(F.expr("d * (d - 1) / 2")).cast("bigint")).first()[0] or 0
+
+
+def families(spark, copies: int) -> list[tuple]:
+    """``(title, preamble, probes, dials)`` per SCALE.md section. A probe
+    is ``(name, fn)`` and a dial ``(name, base, fn)``; ``fn(d)`` returns
+    the probe's count on the corpus dir ``d``."""
+    from football_etl_pipeline_spark.operators import QUERIES, dedup, similarity, textops
+    from football_etl_pipeline_spark.operators.graph import LP_CENTER_DEG_CAP
     from football_etl_pipeline_spark.sources.testdata import load_table
 
-    ev = load_table(spark, BASE_SF, "events")
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    span_us = (hi - lo) + 86_400_000_000  # + 1 day of slack
-    parts = []
-    for k in range(copies):
-        parts.append(
-            ev.select(
-                (F.col("event_id") + F.lit(k * OFFSET)).alias("event_id"),
-                F.timestamp_micros(
-                    F.unix_micros("ts") + F.lit(k * span_us)
-                ).alias("ts"),
-                (F.col("user_id") + F.lit(k * OFFSET)).alias("user_id"),
-                "event_type",
-                "value",
-                "props",
-            )
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    union.coalesce(4).write.mode("overwrite").parquet(
-        os.path.join(out, "events.parquet")
-    )
-    with open(marker, "w") as f:
-        f.write(str(copies))
-    return out
-
-
-def build_synthetic_orders(spark, copies: int) -> str:
-    """Union of key-shifted, DATE-shifted copies of sf0.1 orders.
-    Copy k shifts o_orderkey/o_custkey by k*OFFSET (rank/grouping
-    structure reproduced per copy, no cross-copy key collisions) and
-    o_orderdate by k*(span + 1 day) (the daily series gets N times
-    LONGER, not denser — the honest growth axis for time-series
-    diagnostics, same discipline as the events time shift)."""
-    from pyspark.sql import functions as F
-
-    out = os.path.join(REPO, "spark-warehouse", "scale_probe", f"x{copies}")
-    marker = os.path.join(out, "_PROBE_ORDERS")
-    # Cache is valid only if every expected output exists: pre-round-11
-    # probe dirs were built before lineitem.parquet was added, so the
-    # marker alone would hand a stale/incomplete dir to orders-composed
-    # probes (e.g. graph_hits_hubs_authorities).
-    if os.path.exists(marker) and os.path.exists(
-        os.path.join(out, "lineitem.parquet")
-    ):
-        return out
-    os.makedirs(out, exist_ok=True)
-    from football_etl_pipeline_spark.sources.testdata import load_table
-
-    o = load_table(spark, BASE_SF, "orders")
-    lo, hi = o.agg(
-        F.min(F.unix_micros(F.col("o_orderdate").cast("timestamp"))),
-        F.max(F.unix_micros(F.col("o_orderdate").cast("timestamp"))),
-    ).first()
-    span_us = (hi - lo) + 86_400_000_000
-    parts = []
-    for k in range(copies):
-        parts.append(
-            o.select(
-                (F.col("o_orderkey") + F.lit(k * OFFSET)).alias("o_orderkey"),
-                (F.col("o_custkey") + F.lit(k * OFFSET)).alias("o_custkey"),
-                "o_orderstatus",
-                "o_totalprice",
-                F.timestamp_micros(
-                    F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-                    + F.lit(k * span_us)
-                ).alias("o_orderdate"),
-                "o_orderpriority",
-            )
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    union.coalesce(4).write.mode("overwrite").parquet(
-        os.path.join(out, "orders.parquet")
-    )
-    # round-11: matching key-shifted lineitem so the bipartite
-    # customer->part graph (HITS) reproduces the 1x structure per
-    # copy — orderkey/partkey/suppkey all shift together, so each
-    # copy is a disjoint bipartite component with the 1x degrees.
-    li = load_table(spark, BASE_SF, "lineitem")
-    llo, lhi = li.agg(
-        F.min(F.unix_micros(F.col("l_shipdate").cast("timestamp"))),
-        F.max(F.unix_micros(F.col("l_shipdate").cast("timestamp"))),
-    ).first()
-    lspan_us = (lhi - llo) + 86_400_000_000
-    lparts = []
-    for k in range(copies):
-        lparts.append(
-            li.select(
-                (F.col("l_orderkey") + F.lit(k * OFFSET)).alias(
-                    "l_orderkey"
-                ),
-                (F.col("l_partkey") + F.lit(k * OFFSET)).alias(
-                    "l_partkey"
-                ),
-                (F.col("l_suppkey") + F.lit(k * OFFSET)).alias(
-                    "l_suppkey"
-                ),
-                "l_linenumber",
-                "l_quantity",
-                "l_extendedprice",
-                "l_discount",
-                "l_tax",
-                "l_returnflag",
-                "l_linestatus",
-                F.timestamp_micros(
-                    F.unix_micros(F.col("l_shipdate").cast("timestamp"))
-                    + F.lit(k * lspan_us)
-                ).alias("l_shipdate"),
-            )
-        )
-    lunion = lparts[0]
-    for p in lparts[1:]:
-        lunion = lunion.unionByName(p)
-    lunion.coalesce(8).write.mode("overwrite").parquet(
-        os.path.join(out, "lineitem.parquet")
-    )
-    with open(marker, "w") as f:
-        f.write(str(copies))
-    return out
-
-
-def validate100() -> None:
-    """Two-decade linearity check for the two cheapest banded rungs:
-    1x vs 100x candidate growth for minhash_lsh and ann_lsh. Appends
-    a section to SCALE.md (the full 10x table stays authoritative for
-    the wide sweep; this section validates the 10x->100x
-    extrapolation the 100-TB story rests on)."""
-    from football_etl_pipeline_spark.operators import dedup, similarity
-    from football_etl_pipeline_spark.operators.registry import release_persists
-    from football_etl_pipeline_spark.session import get_spark
-    from football_etl_pipeline_spark.sources.testdata import load_table
-
-    copies = 100
-    spark = get_spark("scale_probe_100x")
-    big = build_synthetic(spark, copies)
-
-    PROBES = {
-        "dedup_minhash_lsh": lambda d: dedup.minhash_lsh_pairs(
-            load_table(spark, d, "documents"), candidates_only=True
-        ),
-        "similarity_ann_lsh": lambda d: similarity.similarity_ann_lsh(
-            spark, d, candidates_only=True
-        ),
-    }
-    rows = []
-    for name, fn in PROBES.items():
-        fn("/root/testdata/sf0.001").count()
-        release_persists()
-        t0 = time.time()
-        n1 = fn(BASE_SF).count()
-        w1 = round(time.time() - t0, 2)
-        release_persists()
-        t0 = time.time()
-        nN = fn(big).count()
-        wN = round(time.time() - t0, 2)
-        release_persists()
-        growth = nN / n1 / copies if n1 else float("nan")
-        rows.append((name, n1, nN, round(growth, 2), w1, wN))
-        print(f"# {name}: 1x={n1} 100x={nN} growth/linear={growth:.2f}")
-
-    lines = [
-        "",
-        "## 100x validation (two measured decades, not one extrapolated)",
-        "",
-        "Same content-disjoint construction at 100 copies (500k docs / "
-        "200k vectors). These two rungs are the cheapest banded "
-        "candidate generators; their staying ~linear across TWO decades "
-        "validates the 10x->100x extrapolation the rest of the table "
-        "rides (every other rung shares the same banding discipline).",
-        "",
-        "| rung | candidates 1x | candidates 100x | growth / linear | "
-        "wall 1x (s) | wall 100x (s) |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, g, w1, wN in rows:
-        lines.append(f"| {name} | {n1} | {nN} | {g} | {w1} | {wN} |")
-
-    # Round-12: the heavies that previously rode a 10x-only
-    # extrapolation get their own second decade — the composed dedup
-    # pipeline (documents side) and one iterative graph rung (events
-    # side). These return REPORT frames, so the soundness metric is
-    # wall growth vs linear (superlinear wall = a candidate explosion
-    # inside the composition).
-    from football_etl_pipeline_spark.operators import QUERIES
-
-    build_synthetic_events(spark, copies)
-    composed_rows = []
-    for name in ("dedup_pipeline_e2e", "graph_label_propagation"):
-        qfn = QUERIES[name]
-        qfn(spark, "/root/testdata/sf0.001").count()
-        release_persists()
-        t0 = time.time()
-        n1 = qfn(spark, BASE_SF).count()
-        w1 = round(time.time() - t0, 2)
-        release_persists()
-        t0 = time.time()
-        nN = qfn(spark, big).count()
-        wN = round(time.time() - t0, 2)
-        release_persists()
-        wg = wN / w1 / copies if w1 else float("nan")
-        composed_rows.append((name, n1, nN, w1, wN, round(wg, 2)))
-        print(
-            f"# {name}: wall 1x={w1}s 100x={wN}s"
-            f" wall-growth/linear={wg:.2f}"
-        )
-    lines += [
-        "",
-        "Second decade for the composed heavies (round-12): the "
-        "production dedup pipeline over 500k docs and one iterative "
-        "graph rung over the 100x events corpus — bounded report "
-        "outputs, so wall growth vs linear is the soundness bar "
-        "(a candidate explosion inside the composition would surface "
-        "as superlinear wall).",
-        "",
-        "| composed rung | rows 1x | rows 100x | wall 1x (s) | "
-        "wall 100x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, w1, wN, wg in composed_rows:
-        lines.append(f"| {name} | {n1} | {nN} | {w1} | {wN} | {wg} |")
-    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
-
-
-def round13() -> None:
-    """Probe rows for the round-12 iterative heavies (r12 verdict
-    task #2), APPENDED to SCALE.md like the 100x validation:
-
-    - ``text_unigram_lm_train`` / ``text_unigram_segment_stats``:
-      their scale argument is that EM/DP rounds run on the word-TYPE
-      frame, not the corpus — so the probe measures BOTH the type
-      count and the wall at 1x vs 10x. The synthetic corpus is the
-      Heaps'-law WORST case (copy vocabularies fully disjoint →
-      types grow exactly linearly); real corpora grow types
-      sublinearly, so a ~linear wall bound here is conservative.
-    - ``eval_bradley_terry_ratings``: the data-sized half is one
-      stride self-join; every MM round runs on ≤|sources|² aggregate
-      frames that do NOT grow with the corpus (copies reuse the same
-      20 source labels), so wall must grow ~linearly and rows stay 20.
-    - ``dedup_semantic_incremental``: the claim is per-day cost ~
-      |batch|, not |corpus|. Probe: FIXED 10x corpus, standing
-      membership materialized (the warehouse state, untimed), then
-      the batch-side screen (assign + cell join + cosine verify)
-      measured at batch = 1% vs 10% of the corpus — candidates and
-      wall must track the 10x batch ratio, not the constant corpus.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from football_etl_pipeline_spark.operators import (
-        QUERIES,
-        similarity as sim,
-        textops,
-    )
-    from football_etl_pipeline_spark.operators.registry import (
-        persist_tracked,
-        release_persists,
-    )
-    from football_etl_pipeline_spark.session import get_spark
-    from football_etl_pipeline_spark.sources.testdata import load_table
-
-    copies = 10
-    spark = get_spark("scale_probe_r13")
-    big = build_synthetic(spark, copies)
-
-    def measure(fn, d):
-        t0 = time.time()
-        n = fn(d).count()
-        wall = time.time() - t0
-        release_persists()
-        return n, round(wall, 2)
-
-    def word_types(d) -> int:
-        return (
-            load_table(spark, d, "documents")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .select(F.explode(F.expr(textops.TOKENS_SPARK)).alias("w"))
-            .distinct()
-            .count()
-        )
-
-    types1 = word_types(BASE_SF)
-    typesN = word_types(big)
-    print(f"# word types: 1x={types1} {copies}x={typesN} "
-          f"growth/linear={typesN / types1 / copies:.2f}")
-
-    text_rows = []
-    for name in (
-        "text_unigram_lm_train",
-        "text_unigram_segment_stats",
-        "eval_bradley_terry_ratings",
-    ):
-        qfn = QUERIES[name]
-        qfn(spark, "/root/testdata/sf0.001").count()
-        release_persists()
-        n1, w1 = measure(lambda d: qfn(spark, d), BASE_SF)
-        nN, wN = measure(lambda d: qfn(spark, d), big)
-        wg = wN / w1 / copies if w1 else float("nan")
-        text_rows.append((name, n1, nN, w1, wN, round(wg, 2)))
-        print(f"# {name}: wall 1x={w1}s {copies}x={wN}s "
-              f"wall-growth/linear={wg:.2f}")
-
-    def incr_screen(mod: int):
-        """Batch-side screen cost on the FIXED 10x corpus: standing
-        membership + quantizer are warehouse state (untimed); timed =
-        batch assignment + cell join vs standing + cosine verify —
-        exactly the per-ingest work of dedup_semantic_incremental."""
-        eall = persist_tracked(sim._normed(spark, big))
-        eall.count()
-        standing = eall.filter(F.col("vec_id") % mod != 0)
-        cents = sim._train_centroids(spark, standing, sim.KMEANS_ITERS)
-        cent = sim._cent_df(spark, cents)
-        ccos = F.expr(sim._dot_spark("v", "cv")) / (
-            F.col("nrm") * F.col("cnrm")
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("ccos").desc(), F.col("c_id").asc()
-        )
-
-        def memb_of(df):
-            return (
-                df.join(F.broadcast(cent))
-                .withColumn("ccos", ccos)
-                .withColumn("crank", F.row_number().over(w))
-                .filter(F.col("crank") <= sim.SEMDEDUP_NPROBE)
-                .select("vec_id", "v", "nrm", F.col("c_id").alias("cell"))
-            )
-
-        m_stand = persist_tracked(memb_of(standing))
-        m_stand.count()  # materialized standing membership — untimed
-        batch = eall.filter(F.col("vec_id") % mod == 0)
-        n_batch = batch.count()
-        t0 = time.time()
-        cand = (
-            memb_of(batch)
-            .alias("b")
-            .join(m_stand.alias("s"), F.col("b.cell") == F.col("s.cell"))
-        )
-        n_cand = cand.count()
-        bcos = F.expr(sim._dot_spark("b.v", "s.v")) / (
-            F.col("b.nrm") * F.col("s.nrm")
-        )
-        n_drop = (
-            cand.filter(bcos >= sim.SEMDEDUP_TAU)
-            .select(F.col("b.vec_id"))
-            .distinct()
-            .count()
-        )
-        wall = round(time.time() - t0, 2)
-        release_persists()
-        return n_batch, n_cand, n_drop, wall
-
-    incr_rows = []
-    for mod in (100, 10):  # batch = 1% then 10% of the fixed corpus
-        nb, nc, nd, wl = incr_screen(mod)
-        incr_rows.append((mod, nb, nc, nd, wl))
-        print(f"# incr screen mod={mod}: batch={nb} candidates={nc} "
-              f"dropped={nd} wall={wl}s")
-    (m1, b1, c1, _d1, w1), (m2, b2, c2, _d2, w2) = incr_rows
-    batch_ratio = b2 / b1 if b1 else float("nan")
-    cand_ratio = c2 / c1 if c1 else float("nan")
-    wall_ratio = w2 / w1 if w1 else float("nan")
-
-    lines = [
-        "",
-        "## Round-13: iterative heavies (type-frame and batch-bound "
-        "claims, measured)",
-        "",
-        f"Word types on the content-disjoint corpus: 1x={types1}, "
-        f"{copies}x={typesN} (growth/linear="
-        f"{typesN / types1 / copies:.2f} — the synthetic construction "
-        "is the Heaps'-law WORST case: copy vocabularies are fully "
-        "disjoint, so types grow exactly linearly; real corpora grow "
-        "types sublinearly, making the wall bounds below conservative).",
-        "",
-        "| query | rows 1x | rows "
-        f"{copies}x | wall 1x (s) | wall {copies}x (s) | "
-        "wall growth / linear |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, w1_, wN, wg in text_rows:
-        lines.append(f"| {name} | {n1} | {nN} | {w1_} | {wN} | {wg} |")
-    lines += [
-        "",
-        "Incremental semantic screen, FIXED "
-        f"{copies}x corpus ({copies * 2000} vectors), standing "
-        "membership materialized (warehouse state, untimed); timed = "
-        "batch assignment + cell join + cosine verify — the per-ingest "
-        "work. Candidates and wall must track |batch|, not |corpus|:",
-        "",
-        "| batch fraction | batch size | candidates | wall (s) |",
-        "|---|---|---|---|",
-        f"| 1/{m1} | {b1} | {c1} | {w1} |",
-        f"| 1/{m2} | {b2} | {c2} | {w2} |",
-        "",
-        f"batch ratio {batch_ratio:.1f}x -> candidates "
-        f"{cand_ratio:.1f}x, wall {wall_ratio:.1f}x — per-day cost "
-        "tracks the batch, the standing corpus enters only through "
-        "the (materialized) membership it is screened against.",
-    ]
-    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
-
-
-def round13b() -> None:
-    """Wall-growth rows for the round-13 composed heavies (the two
-    slowest new bench lines), appended to SCALE.md:
-
-    - ``dedup_semantic_recall_sweep``: its candidate side is the
-      probed SemDeDup banding; the ground-truth all-pairs side is a
-      measurement harness that IS quadratic by design (documented:
-      run on a fixed-size sample at scale) — so the probe reports the
-      wall split honestly rather than pretending the whole query is
-      linear.
-    - ``dedup_keep_best_quality``: composes the probed Jaccard pairs
-      + star components with one quality projection and per-component
-      windows — wall must track the (linear) candidate volume.
-    """
-    from football_etl_pipeline_spark.operators import QUERIES
-    from football_etl_pipeline_spark.operators.registry import (
-        release_persists,
-    )
-    from football_etl_pipeline_spark.session import get_spark
-
-    copies = 10
-    spark = get_spark("scale_probe_r13b")
-    big = build_synthetic(spark, copies)
-
-    def measure(fn, d):
-        t0 = time.time()
-        n = fn(d).count()
-        wall = time.time() - t0
-        release_persists()
-        return n, round(wall, 2)
-
-    rows = []
-    for name in (
-        "dedup_keep_best_quality",
-        "dedup_semantic_recall_sweep",
-    ):
-        qfn = QUERIES[name]
-        qfn(spark, "/root/testdata/sf0.001").count()
-        release_persists()
-        n1, w1 = measure(lambda d: qfn(spark, d), BASE_SF)
-        nN, wN = measure(lambda d: qfn(spark, d), big)
-        wg = wN / w1 / copies if w1 else float("nan")
-        rows.append((name, n1, nN, w1, wN, round(wg, 2)))
-        print(f"# {name}: wall 1x={w1}s {copies}x={wN}s "
-              f"wall-growth/linear={wg:.2f}")
-
-    lines = [
-        "",
-        "## Round-13b: the new composed heavies",
-        "",
-        "`dedup_keep_best_quality` composes the probed Jaccard +",
-        "star-component rungs with a quality projection and",
-        "per-component windows — wall must track the linear candidate",
-        "volume. `dedup_semantic_recall_sweep` carries a deliberately",
-        "quadratic MEASUREMENT side (brute-force ground truth, run on",
-        "a fixed-size sample at production scale per its docstring);",
-        "its growth row documents that trade explicitly instead of",
-        "hiding it — superlinear wall here is the harness, the",
-        "screen side stays banded (SemDeDup rows above).",
-        "",
-        f"| query | rows 1x | rows {copies}x | wall 1x (s) | "
-        f"wall {copies}x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, w1, wN, wg in rows:
-        lines.append(f"| {name} | {n1} | {nN} | {w1} | {wN} | {wg} |")
-    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
-
-
-def round14() -> None:
-    """Re-measure ``dedup_semantic_recall_sweep`` after the round-14
-    in-query ground-truth cohort cap (hash-rank top-K, K=512): the
-    truth side is now K²/2 exact cosines at ANY corpus size, so the
-    Round-13b 1.9×/linear wall (11.1s → 211.0s at 10×) should
-    collapse to ~linear — only the banded screen side still grows."""
-    from football_etl_pipeline_spark.operators import QUERIES
-    from football_etl_pipeline_spark.operators.registry import (
-        release_persists,
-    )
-    from football_etl_pipeline_spark.session import get_spark
-
-    copies = 10
-    spark = get_spark("scale_probe_r14")
-    big = build_synthetic(spark, copies)
-    name = "dedup_semantic_recall_sweep"
-    qfn = QUERIES[name]
-    qfn(spark, "/root/testdata/sf0.001").count()
-    release_persists()
-
-    def measure(d):
-        t0 = time.time()
-        n = qfn(spark, d).count()
-        wall = time.time() - t0
-        release_persists()
-        return n, round(wall, 2)
-
-    n1, w1 = measure(BASE_SF)
-    nN, wN = measure(big)
-    wg = wN / w1 / copies if w1 else float("nan")
-    lines = [
-        "",
-        "## Round-14: recall-sweep ground truth capped in-query",
-        "",
-        "The Round-13b row measured the sweep's brute-force ground",
-        "truth at 1.9x/linear wall (the harness was honest but",
-        "unbounded). Round 14 moves the fixed-size sample INSIDE the",
-        "registered query: a deterministic hash-rank cohort of",
-        "K=512 vec_ids (the text_uniform_sample pattern) gates the",
-        "exact-cosine join, so the truth side is K^2/2 pairs at any",
-        "corpus size; the banded screen side is unchanged.",
-        "",
-        f"| query | rows 1x | rows {copies}x | wall 1x (s) | "
-        f"wall {copies}x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|",
-        f"| {name} | {n1} | {nN} | {w1} | {wN} | {round(wg, 2)} |",
-    ]
-    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
-
-
-def round14_knob() -> None:
-    """The SEMDEDUP_CELLS env knob exercised END-TO-END at the
-    production setting: the REGISTERED dedup_semantic_clusters query
-    runs in subprocesses (the knob is import-time, consumed by both
-    the Spark plan and the oracle text) — 1× corpus at the default
-    K=8, 10× corpus at K=80 (K∝n). Candidate volume per doc should
-    stay ~flat (n·P²/K constant), the fixed-K failure mode the
-    SemDeDup SCALE rows document being dialed away by config instead
-    of code."""
-    import subprocess
-
-    spark = None  # all work happens in subprocesses
-    inner = r'''
-import sys, time
-sys.path.insert(0, "/root/repo")
-from football_etl_pipeline_spark.session import get_spark
-from football_etl_pipeline_spark.operators import similarity
-from football_etl_pipeline_spark.operators.registry import release_persists
-spark = get_spark("knob_probe")
-sf = sys.argv[1]
-similarity.dedup_semantic_clusters(spark, "/root/testdata/sf0.001").count()
-release_persists()
-t0 = time.time()
-cand = similarity.dedup_semantic_clusters(spark, sf, candidates_only=True).count()
-wall = time.time() - t0
-print(f"KNOBROW {cand} {wall:.2f}")
-'''
-    # build the 10x corpus with a throwaway session first
-    from football_etl_pipeline_spark.session import get_spark
-
-    big = build_synthetic(get_spark("knob_probe_build"), 10)
-    rows = []
-    for sf, cells in ((BASE_SF, None), (big, "80")):
-        env = dict(os.environ)
-        env.pop("SPARK_GRAFT_SEMDEDUP_CELLS", None)
-        if cells:
-            env["SPARK_GRAFT_SEMDEDUP_CELLS"] = cells
-        r = subprocess.run(
-            [sys.executable, "-c", inner, sf],
-            env=env, capture_output=True, text=True,
-        )
-        got = [ln for ln in r.stdout.splitlines()
-               if ln.startswith("KNOBROW")]
-        if r.returncode != 0 or not got:
-            # a silently missing row would read as "nothing to
-            # report" — fail loudly instead (round-14 review find)
-            raise RuntimeError(
-                f"knob probe subprocess failed for {sf} cells={cells}:"
-                f" rc={r.returncode}\n{r.stderr[-2000:]}"
-            )
-        _, cand, wall = got[-1].split()
-        from football_etl_pipeline_spark.operators.similarity import IVF_K
-
-        rows.append((sf, cells or f"{IVF_K} (default)", int(cand),
-                     float(wall)))
-    lines = [
-        "",
-        "## Round-14: SEMDEDUP_CELLS knob at the production setting",
-        "",
-        "The K∝n dial, now an env knob (SPARK_GRAFT_SEMDEDUP_CELLS)",
-        "read by BOTH the registered Spark plan and its oracle:",
-        "10x corpus at K=80 vs 1x at the default K=8 — candidate",
-        "volume per doc stays ~flat instead of growing 10x.",
-        "",
-        "| corpus | cells | candidate pairs | cand/doc | wall (s) |",
-        "|---|---|---|---|---|",
-    ]
-    n_docs = {BASE_SF: 2000, big: 20000}
-    for sf, cells, cand, wall in rows:
-        nd = n_docs.get(sf, 0)
-        lines.append(
-            f"| {'1x' if sf == BASE_SF else '10x'} | {cells} | {cand} |"
-            f" {cand / nd:.1f} | {wall} |"
-        )
-    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
-
-
-def round14b() -> None:
-    """Wall-growth rows for the round-14 additions that scan the
-    documents/embeddings corpus — aHash near-dup (banded Hamming
-    candidates must grow ~linearly: each content-disjoint copy
-    reproduces its own band collisions), per-domain quota sampling
-    (one window + one agg — linear), and the quantile sketch rollup
-    (bounded histogram rows — the 10x corpus only grows the FIRST
-    aggregate's input). events/documents synthetic corpora reuse
-    build_synthetic / build_synthetic_events."""
-    from football_etl_pipeline_spark.operators import QUERIES
-    from football_etl_pipeline_spark.operators.registry import (
-        release_persists,
-    )
-    from football_etl_pipeline_spark.session import get_spark
-
-    copies = 10
-    spark = get_spark("scale_probe_r14b")
-    big_docs = build_synthetic(spark, copies)
-    big_events = build_synthetic_events(spark, copies)
-
-    def measure(name, d):
-        qfn = QUERIES[name]
-        t0 = time.time()
-        n = qfn(spark, d).count()
-        wall = time.time() - t0
-        release_persists()
-        return n, round(wall, 2)
-
-    rows = []
-    for name, big in (
-        ("multimodal_image_ahash_neardup", big_docs),
-        ("text_domain_quota_sample", big_docs),
-        ("events_quantile_sketch_rollup", big_events),
-    ):
-        QUERIES[name](spark, "/root/testdata/sf0.001").count()
-        release_persists()
-        n1, w1 = measure(name, BASE_SF)
-        nN, wN = measure(name, big)
-        wg = wN / w1 / copies if w1 else float("nan")
-        rows.append((name, n1, nN, w1, wN, round(wg, 2)))
-        print(f"# {name}: wall 1x={w1}s {copies}x={wN}s "
-              f"growth/linear={wg:.2f}")
-
-    lines = [
-        "",
-        "## Round-14b: the new corpus-scanning additions",
-        "",
-        "aHash near-dup candidates come from 8-bit band buckets —",
-        "content-disjoint copies reproduce the 1x collision structure",
-        "(cross-copy band collisions add only exact-Hamming-verified",
-        "rejects). Domain quota is one window + one agg. The quantile",
-        "rollup's second stage is bounded by the grid, so only the",
-        "first aggregate sees the 10x corpus.",
-        "",
-        f"| query | rows 1x | rows {copies}x | wall 1x (s) | "
-        f"wall {copies}x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, w1, wN, wg in rows:
-        lines.append(f"| {name} | {n1} | {nN} | {w1} | {wN} | {wg} |")
-    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
-
-
-
-
-def round15() -> None:
-    """Round-15 probe rows (VERDICT r14 items 1 & 5), appended to
-    SCALE.md:
-
-    - ``multimodal_image_ahash_neardup`` at 1x vs 100x — the second
-      decade the widened fixture unlocks. The old base pattern
-      repeated mod ~3328 families, so a 100x corpus manufactured
-      cross-copy true pairs quadratically and the decade measured the
-      FIXTURE, not the banding. With the murmur-mixed per-(family,
-      block) bitmap, cross-family collisions are ~zero and pair
-      growth must be ~linear in copies.
-    - the incremental perceptual screen's |batch| claim: FIXED 10x
-      corpus, standing fingerprint STORE materialized once through
-      the gated maintenance merge (the warehouse state, untimed),
-      then the daily screen (batch decode + band join against the
-      store read) measured at batch = 1% vs 10% of the corpus —
-      wall must track the ~10x batch ratio, not the constant corpus
-      (the pre-store plan re-decoded standing payloads, so both
-      walls were identical and corpus-sized).
-    """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from football_etl_pipeline_spark.operators import QUERIES
-    from football_etl_pipeline_spark.operators import multimodal as mm
-    from football_etl_pipeline_spark.operators.registry import (
-        persist_tracked,
-        release_persists,
-    )
-    from football_etl_pipeline_spark.session import get_spark
-    from football_etl_pipeline_spark.streaming.ahash_maintenance import (
-        merge_batch_fingerprints,
-        read_fingerprints,
-    )
-
-    spark = get_spark("scale_probe_r15")
-    lines = [
-        "",
-        "## Round-15: aHash second decade + batch-proportional "
-        "incremental screen",
-        "",
-    ]
-
-    # ---- probe 1: the 100x decade ------------------------------------
-    copies = 100
-    big = build_synthetic(spark, copies)
-    name = "multimodal_image_ahash_neardup"
-    QUERIES[name](spark, "/root/testdata/sf0.001").count()
-    release_persists()
-    t0 = time.time()
-    n1 = QUERIES[name](spark, BASE_SF).count()
-    w1 = round(time.time() - t0, 2)
-    release_persists()
-    t0 = time.time()
-    nN = QUERIES[name](spark, big).count()
-    wN = round(time.time() - t0, 2)
-    release_persists()
-    pg = round(nN / n1 / copies, 2) if n1 else float("nan")
-    wg = round(wN / w1 / copies, 2) if w1 else float("nan")
-    print(f"# {name}: pairs 1x={n1} 100x={nN} pair-growth/linear={pg}"
-          f" wall 1x={w1}s 100x={wN}s wall-growth/linear={wg}")
-    lines += [
-        "The widened fixture (murmur-mixed per-(family, block) base "
-        "bitmap, round 15) makes true-pair density constant in corpus "
-        "size, so this decade measures BANDING:",
-        "",
-        "| rung | pairs 1x | pairs 100x | pair growth / linear | "
-        "wall 1x (s) | wall 100x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|---|",
-        f"| {name} | {n1} | {nN} | {pg} | {w1} | {wN} | {wg} |",
-    ]
-
-    # ---- probe 2: screen cost tracks |batch|, not |corpus| -----------
-    #
-    # The SAME 100-image batch (base-copy ids, (media_id//5) % 10 == 0)
-    # screened against corpora spanning two decades: if the screen
-    # re-decoded standing payloads (the pre-store plan), wall would
-    # grow ~linearly with the corpus; reading the maintained store, it
-    # must stay ~flat (the band join fans in more standing rows, but
-    # those are 16-byte fingerprints, not decodes).
-    batch_filter = (F.col("media_id") < OFFSET) & (
-        (F.col("media_id") / 5).cast("long") % 10 == 0
-    )
-    rows2 = []
-    for label, d in (
-        ("1x", BASE_SF),
-        ("10x", build_synthetic(spark, 10)),
-        ("100x", big),
-    ):
-        m = (
-            mm.media_table(spark, d)
-            .filter(F.col("mime") == "image/png")
-            .select("media_id")
-        )
-        state = os.path.join(
-            tempfile.mkdtemp(prefix=f"r15_fp_{label}_"), "fp"
-        )
-        # warehouse state: standing fingerprints maintained at prior
-        # ingests (untimed - the store pre-exists the daily run)
-        merge_batch_fingerprints(
-            spark, m.filter(~batch_filter), state, batch_id=0
-        )
-        s = read_fingerprints(spark, state).select(
-            "media_id", "ahash_hi", "ahash_lo"
-        )
-        n_standing = s.count()
-
-        def screen():
-            t0 = time.time()
-            b = persist_tracked(
-                m.filter(batch_filter).mapInPandas(
-                    mm._ahash_batches, schema=mm._AHASH_SCHEMA
-                )
-            )
-            n = mm._ahash_screen(b, s).count()
-            w = round(time.time() - t0, 2)
-            release_persists()
-            return n, w
-
-        screen()  # warm the path once per corpus
-        n, w = screen()
-        rows2.append((label, n_standing, n, w))
-        print(f"# screen vs {label} corpus: standing={n_standing}"
-              f" batch_rows={n} wall={w}s")
-    flat = round(rows2[-1][3] / rows2[0][3], 2) if rows2[0][3] else 0
-    lines += [
-        "",
-        "Incremental screen, SAME 100-image batch, corpus spanning two "
-        "decades with the standing fingerprint STORE pre-materialized "
-        "through the gated maintenance merge (the warehouse state, "
-        "untimed): per-run cost must be corpus-INDEPENDENT - the "
-        "pre-store plan re-decoded standing payloads and would grow "
-        "~100x here.",
-        "",
-        "| corpus | standing fingerprints | screen rows | wall (s) |",
-        "|---|---|---|---|",
-    ]
-    for label, ns, n, w in rows2:
-        lines.append(f"| {label} | {ns} | {n} | {w} |")
-    lines += [
-        "",
-        f"wall 100x/1x = {flat} - the daily run pays |batch| "
-        "decode+hash plus a fingerprint-store band join; standing "
-        "payloads are never re-read.",
-    ]
-    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
-
-
-def main() -> None:
-    copies = 10
-    if "--copies" in sys.argv:
-        copies = int(sys.argv[sys.argv.index("--copies") + 1])
-    if "--round14-knob" in sys.argv:
-        round14_knob()
-        return
-    if "--round14b" in sys.argv:
-        round14b()
-        return
-    if "--round15" in sys.argv:
-        round15()
-        return
-    if "--validate100" in sys.argv:
-        validate100()
-        return
-    if "--round13" in sys.argv:
-        round13()
-        return
-    if "--round13b" in sys.argv:
-        round13b()
-        return
-    if "--round14" in sys.argv:
-        round14()
-        return
-
-    from football_etl_pipeline_spark.operators import dedup, similarity, textops
-    from football_etl_pipeline_spark.operators.registry import (
-        release_persists,
-    )
-    from football_etl_pipeline_spark.session import get_spark
-    from football_etl_pipeline_spark.sources.testdata import load_table
-
-    spark = get_spark("scale_probe")
-    big = build_synthetic(spark, copies)
-
-    def docs_of(d):
+    def docs(d):
         return load_table(spark, d, "documents")
 
-    PROBES = {
-        "dedup_ngram_jaccard": lambda d: dedup.dedup_ngram_jaccard(
-            spark, d, candidates_only=True
-        ),
-        "dedup_minhash_lsh": lambda d: dedup.minhash_lsh_pairs(
-            docs_of(d), candidates_only=True
-        ),
-        "dedup_simhash": lambda d: dedup.simhash_banded_pairs(
-            dedup.simhash_values(docs_of(d)), candidates_only=True
-        ),
-        "similarity_ann_lsh": lambda d: similarity.similarity_ann_lsh(
-            spark, d, candidates_only=True
-        ),
-        "dedup_embedding_ivf": lambda d: dedup.dedup_embedding_ivf(
-            spark, d, candidates_only=True
-        ),
-        # round-12 SemDeDup rung, both ways like the IVF probe: fixed
-        # trained cells (expect superlinear per-doc growth — the
-        # documented failure mode) and cells x10 (the production dial:
-        # K ~ n keeps per-cell work flat, expect ~linear).
-        "dedup_semantic_clusters (fixed 8 cells)": lambda d: (
-            similarity.dedup_semantic_clusters(
-                spark, d, candidates_only=True
-            )
-        ),
-        "dedup_semantic_clusters (cells x10)": lambda d: (
-            similarity.dedup_semantic_clusters(
-                spark,
-                d,
-                candidates_only=True,
-                cells=(
-                    similarity.IVF_K
-                    if d == BASE_SF or d.startswith("/root/testdata")
-                    else similarity.IVF_K * 10
-                ),
-            )
-        ),
-        "text_cooccurrence (V=64)": lambda d: textops.cooccurrence_candidates(
-            docs_of(d)
-        ),
-    }
+    def query(name):
+        return name, lambda d: QUERIES[name](spark, d).count()
 
-    def measure(fn, d):
-        t0 = time.time()
-        n = fn(d).count()
-        wall = time.time() - t0
-        release_persists()
-        return n, round(wall, 2)
+    def ivf_scaled(d):
+        saved = dedup.EMB_DUP_CELLS
+        dedup.EMB_DUP_CELLS = saved * copies
+        try:
+            return dedup.dedup_embedding_ivf(spark, d, candidates_only=True).count()
+        finally:
+            dedup.EMB_DUP_CELLS = saved
 
-    rows = []
-    for name, fn in PROBES.items():
-        # warmup the codegen path at the smallest SF
-        fn("/root/testdata/sf0.001").count()
-        release_persists()
-        n1, w1 = measure(fn, BASE_SF)
-        nN, wN = measure(fn, big)
-        growth = nN / n1 / copies if n1 else float("nan")
-        rows.append((name, n1, nN, round(growth, 2), w1, wN))
-        print(f"# {name}: 1x={n1} {copies}x={nN} growth/linear={growth:.2f}")
-
-    # Composed pipelines (r7 verdict task #4): each is a composition
-    # of individually-probed rungs, but composition can change
-    # candidate volumes (e.g. LSH runs on exact-dedup survivors; the
-    # recall report runs brute-force top-k as the oracle of LSH), so
-    # they get their own 1x-vs-Nx rows. These return REPORT frames
-    # (bounded rows), so the soundness metric is wall-clock growth
-    # relative to linear — candidate explosions inside the composition
-    # surface as superlinear wall.
-    from football_etl_pipeline_spark.operators import QUERIES
-
-    COMPOSED = [
+    semdedup = f"dedup_semantic_clusters (fixed {similarity.SEMDEDUP_CELLS} cells)"
+    cooc = f"text_cooccurrence (V={textops.COOC_VOCAB_CAP})"
+    rungs = [
+        ("dedup_ngram_jaccard",
+         lambda d: dedup.dedup_ngram_jaccard(spark, d, candidates_only=True).count()),
+        ("dedup_minhash_lsh",
+         lambda d: dedup.minhash_lsh_pairs(docs(d), candidates_only=True).count()),
+        ("dedup_simhash", lambda d: dedup.simhash_banded_pairs(
+            dedup.simhash_values(docs(d)), candidates_only=True).count()),
+        ("similarity_ann_lsh",
+         lambda d: similarity.similarity_ann_lsh(spark, d, candidates_only=True).count()),
+        ("dedup_embedding_ivf",
+         lambda d: dedup.dedup_embedding_ivf(spark, d, candidates_only=True).count()),
+        (semdedup, lambda d: similarity.dedup_semantic_clusters(
+            spark, d, candidates_only=True).count()),
+        (cooc, lambda d: textops.cooccurrence_candidates(docs(d)).count()),
+    ]
+    dials = [
+        (f"dedup_embedding_ivf (cells x{copies})", "dedup_embedding_ivf", ivf_scaled),
+        (f"dedup_semantic_clusters (cells x{copies})", semdedup,
+         lambda d: similarity.dedup_semantic_clusters(
+             spark, d, candidates_only=True, cells=similarity.SEMDEDUP_CELLS * copies).count()),
+        (f"text_cooccurrence (V x{copies})", cooc,
+         lambda d: textops.cooccurrence_candidates(
+             docs(d), vocab_cap=textops.COOC_VOCAB_CAP * copies).count()),
+    ]
+    composed = [query(n) for n in (
         "dedup_pipeline_e2e",
         "dedup_method_agreement",
+        "dedup_cluster_size_histogram",
+        "dedup_keep_best_quality",
+        "dedup_semantic_recall_sweep",
         "similarity_ann_recall_report",
         "similarity_ann_ivf_adc",
-        # the text-curation capstone: gopher flags + LM terciles +
-        # DSIR weights joined per doc -- no pair joins anywhere, so
-        # wall growth must track the token volume linearly.
-        "text_curation_report",
-        # round-10: hybrid RRF composes the dense brute-force ranker
-        # (broadcast 5 queries x corpus) with the DF-capped sparse
-        # shingle-overlap ranker -- the sparse candidate volume is
-        # bounded by DF_CAP x |query shingles| (corpus-independent),
-        # the dense side is 5n scoring rows, so wall must grow
-        # ~linearly with the corpus.
         "similarity_hybrid_rrf",
-        # round-11: the mega-cluster early-warning composition —
-        # re-runs the jaccard rung, star-contracts components, then
-        # histograms cluster sizes; cost is the sum of its rungs, so
-        # wall must track the (linear) candidate volume.
-        "dedup_cluster_size_histogram",
-        # round-11: naive Bayes train+score — two exploded-token hash
-        # aggregates plus a token-keyed likelihood join; every stage
-        # is map-side-partial aggregation or an equi-join on token,
-        # so wall must grow ~linearly with the corpus.
+        "text_curation_report",
         "text_naive_bayes_langid",
-    ]
-    composed_rows = []
-    for name in COMPOSED:
-        qfn = QUERIES[name]
-        qfn(spark, "/root/testdata/sf0.001").count()
-        release_persists()
-        n1, w1 = measure(lambda d: qfn(spark, d), BASE_SF)
-        nN, wN = measure(lambda d: qfn(spark, d), big)
-        wg = wN / w1 / copies if w1 else float("nan")
-        composed_rows.append((name, n1, nN, w1, wN, round(wg, 2)))
-        print(
-            f"# {name}: wall 1x={w1}s {copies}x={wN}s "
-            f"wall-growth/linear={wg:.2f}"
-        )
-
-    # ---- graph / co-activity family (round 9) ------------------------
-    # The co-activity graph is DERIVED (sessionize -> bucketed interval
-    # overlap join -> edges), so its scale story has two layers:
-    # (1) candidate volume of the grid-cell hash join (sum of C(n,2)
-    #     per 15-min cell — the pairs the refine predicate examines),
-    # (2) wedge volume of link prediction (sum of C(d,2) over centers
-    #     — the pairs the common-neighbor aggregate examines), with
-    #     the LP_CENTER_DEG_CAP dial measured capped vs uncapped.
-    # The synthetic events corpus is user-shifted AND time-shifted, so
-    # both layers must grow ~linearly; the composed queries (LPA,
-    # link prediction, modularity) get wall-growth rows like the dedup
-    # pipelines.
-    from pyspark.sql import functions as F
-
-    from football_etl_pipeline_spark.operators import graph as graphmod
-    from football_etl_pipeline_spark.operators.events import (
-        OVERLAP_GRAIN_US,
-        events_interval_overlap_join,
-        session_intervals,
-    )
-
-    build_synthetic_events(spark, copies)
-
-    def overlap_cell_candidates(d):
-        iv = session_intervals(spark, d)
-        g = F.lit(OVERLAP_GRAIN_US)
-        cells = iv.withColumn(
-            "cell",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col("s_us") / g), F.floor(F.col("e_us") / g)
-                )
-            ),
-        )
-        return (
-            cells.groupBy("cell")
-            .count()
-            .agg(
-                F.sum(F.expr("count * (count - 1) / 2")).cast("bigint")
-            )
-            .first()[0]
-        )
-
-    def wedge_candidates(d, cap):
-        pairs = events_interval_overlap_join(spark, d)
-        edges = pairs.select(
-            F.col("user_a").alias("u"), F.col("user_b").alias("v")
-        ).distinct()
-        sym = edges.union(edges.select("v", "u"))
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        if cap is not None:
-            deg = deg.filter(F.col("d") <= cap)
-        agg = deg.agg(F.sum(F.expr("d * (d - 1) / 2")).cast("bigint"))
-        return agg.first()[0] or 0
-
-    def measure_scalar(fn, d):
-        t0 = time.time()
-        n = fn(d)
-        wall = time.time() - t0
-        release_persists()
-        return n, round(wall, 2)
-
-    GRAPH_PROBES = {
-        "overlap_cell_candidates": overlap_cell_candidates,
-        "lp_wedges (capped)": lambda d: wedge_candidates(
-            d, graphmod.LP_CENTER_DEG_CAP
-        ),
-        "lp_wedges (uncapped)": lambda d: wedge_candidates(d, None),
-    }
-    graph_rows = []
-    for name, fn in GRAPH_PROBES.items():
-        fn("/root/testdata/sf0.001")
-        release_persists()
-        n1, w1 = measure_scalar(fn, BASE_SF)
-        nN, wN = measure_scalar(fn, big)
-        growth = nN / n1 / copies if n1 else float("nan")
-        graph_rows.append((name, n1, nN, round(growth, 2), w1, wN))
-        print(f"# {name}: 1x={n1} {copies}x={nN} growth/linear={growth:.2f}")
-
-    GRAPH_COMPOSED = [
+        "text_unigram_lm_train",
+        "text_unigram_segment_stats",
+        "text_domain_quota_sample",
+        "eval_bradley_terry_ratings",
+        "multimodal_image_ahash_neardup",
+        "events_quantile_sketch_rollup",
+    )]
+    graph = [
+        ("overlap_cell_candidates", lambda d: overlap_cell_candidates(spark, d)),
+        ("lp_wedges (capped)", lambda d: wedge_candidates(spark, d, LP_CENTER_DEG_CAP)),
+        ("lp_wedges (uncapped)", lambda d: wedge_candidates(spark, d, None)),
+    ] + [query(n) for n in (
         "graph_label_propagation",
         "graph_link_prediction",
         "graph_modularity_report",
-        # events-family joins riding the same synthetic corpus: the
-        # SCD2 point-in-time lookup's output is one row per matched
-        # purchase and its fan-out is versions-per-user, so both rows
-        # and wall must grow ~linearly; rolling actives must grow its
-        # day grid linearly (the corpus is time-shifted).
+        "graph_kcore",
         "join_scd2_pit_status",
         "events_rolling_active_users",
-        # round-10: the fixed-8-round 3-core peel -- each round is a
-        # degree agg + two joins on a monotonically shrinking edge
-        # frame, so wall must track the edge volume ~linearly (the
-        # localCheckpoint per round makes stage count fixed).
-        "graph_kcore",
-    ]
-    graph_composed_rows = []
-    for name in GRAPH_COMPOSED:
-        qfn = QUERIES[name]
-        qfn(spark, "/root/testdata/sf0.001").count()
-        release_persists()
-        n1, w1 = measure(lambda d: qfn(spark, d), BASE_SF)
-        nN, wN = measure(lambda d: qfn(spark, d), big)
-        wg = wN / w1 / copies if w1 else float("nan")
-        graph_composed_rows.append((name, n1, nN, w1, wN, round(wg, 2)))
-        print(
-            f"# {name}: wall 1x={w1}s {copies}x={wN}s "
-            f"wall-growth/linear={wg:.2f}"
-        )
-
-    # ---- orders family (round 11) -------------------------------------
-    # The two orders-side heavies the r10 verdict flagged as unprobed:
-    # the series-diagnostics composition (five per-day diagnostics over
-    # a date-shifted corpus whose SERIES gets N times longer) and the
-    # KW->Dunn rank machinery (corpus-scale running rank totals through
-    # `_range_prefix` — the range-exchange prefix, never a global
-    # window). Both must grow ~linearly in wall.
-    build_synthetic_orders(spark, copies)
-    ORDERS_COMPOSED = [
+    )]
+    orders = [query(n) for n in (
         "orders_series_diagnostics",
         "stats_kruskal_wallis_priority",
-        # round-11: HITS — one fact-fact edge join (persisted) plus
-        # four Pregel-step equi-join+groupBy rounds; the key-shifted
-        # copies are disjoint bipartite components, so wall must grow
-        # ~linearly (no cross-copy degree inflation).
         "graph_hits_hubs_authorities",
+    )]
+    return [
+        ("Candidate rungs",
+         "Counts are candidate pairs. At fixed cells, IVF and SemDeDup "
+         "candidates are ~n²·nprobe²/cells, so their fixed rows must grow "
+         f"~{copies}x per doc; their `cells x{copies}` dial rows (cells ~ n, "
+         "the trained large-codebook setting) must grow ~linearly. A fixed "
+         "co-occurrence keep-list V spreads its slots across the copies' "
+         "vocabularies once they outnumber V, so that row goes sublinear "
+         f"(coverage, not cost, shrinks); the `V x{copies}` dial row "
+         "restores linear growth.",
+         rungs, dials),
+        ("Composed pipelines",
+         "Registered queries that compose the rungs above or scan the whole "
+         "documents, embeddings or events table. Counts are output rows; most "
+         "are bounded reports, so wall growth is the soundness figure (a "
+         "candidate explosion inside a composition shows as superlinear "
+         "wall). The recall sweep's ground truth is capped in-query to a "
+         "fixed cohort, but its screen trains the fixed SemDeDup cells, so "
+         "its wall grows like the fixed-cells rung above.",
+         composed, []),
+        ("Graph / co-activity",
+         "The graph queries derive their edges (sessionize -> bucketed "
+         "interval-overlap join -> distinct pairs). Events copies are shifted "
+         "in user key and in time, so the grid-cell candidates, the wedges "
+         "and the edges must all grow ~linearly. `lp_wedges` counts "
+         "common-neighbour candidates, sum C(d, 2) over wedge centres, with "
+         f"centres capped at LP_CENTER_DEG_CAP={LP_CENTER_DEG_CAP} and "
+         "uncapped.",
+         graph, []),
+        ("Orders",
+         "Orders and lineitem copies are key-shifted, but order and ship "
+         f"dates are not, so these rows measure a {copies}x denser daily "
+         "series over the same dates, not a longer one. "
+         "`stats_kruskal_wallis_priority`'s running rank totals ride "
+         "`_range_prefix`, not a global window.",
+         orders, []),
     ]
-    orders_composed_rows = []
-    for name in ORDERS_COMPOSED:
-        qfn = QUERIES[name]
-        qfn(spark, "/root/testdata/sf0.001").count()
-        release_persists()
-        n1, w1 = measure(lambda d: qfn(spark, d), BASE_SF)
-        nN, wN = measure(lambda d: qfn(spark, d), big)
-        wg = wN / w1 / copies if w1 else float("nan")
-        orders_composed_rows.append((name, n1, nN, w1, wN, round(wg, 2)))
-        print(
-            f"# {name}: wall 1x={w1}s {copies}x={wN}s "
-            f"wall-growth/linear={wg:.2f}"
-        )
 
-    # the IVF dial: cells scaled with the corpus
-    saved = dedup.EMB_DUP_CELLS
-    try:
-        dedup.EMB_DUP_CELLS = saved * copies
-        fn = PROBES["dedup_embedding_ivf"]
-        nN, wN = measure(fn, big)
-        n1 = rows[-1][1]
-        growth = nN / n1 / copies if n1 else float("nan")
-        rows.append(
-            (f"dedup_embedding_ivf (cells x{copies})", n1, nN,
-             round(growth, 2), rows[-1][4], wN)
-        )
-        print(f"# ivf cells-scaled: {copies}x={nN} growth/linear={growth:.2f}")
-    finally:
-        dedup.EMB_DUP_CELLS = saved
 
-    # the co-occurrence dial: keep-list width scaled with source
-    # diversity. A FIXED V on an N-source corpus spreads the top-V
-    # document-frequency slots across copies (each copy keeps ~V/N of
-    # its vocabulary), so candidates go SUBLINEAR and coverage shrinks
-    # silently — the dial is V ~ diversity, restoring per-copy
-    # structure and ~linear growth (same shape as the IVF CELLS dial).
-    fn = lambda d: textops.cooccurrence_candidates(  # noqa: E731
-        docs_of(d), vocab_cap=64 * copies
-    )
-    nN, wN = measure(fn, big)
-    n1 = next(r[1] for r in rows if r[0] == "text_cooccurrence (V=64)")
-    growth = nN / n1 / copies if n1 else float("nan")
-    rows.append(
-        (f"text_cooccurrence (V x{copies})", n1, nN, round(growth, 2),
-         next(r[4] for r in rows if r[0] == "text_cooccurrence (V=64)"), wN)
-    )
-    print(f"# cooccurrence V-scaled: {copies}x={nN} growth/linear={growth:.2f}")
-
+def render(fams, runs, copies: int, cores: str, secs: float) -> str:
     lines = [
-        "# SCALE — candidate-volume rehearsal (1x vs "
-        f"{copies}x synthetic corpus)",
+        f"# SCALE — 1x vs {copies}x corpus",
         "",
-        "Generated by `tools/scale_probe.py`. Corpus: sf0.1 "
-        f"documents/embeddings x{copies}, key-shifted and "
-        "content-disjoint (token-prefixed copies / dimension-rolled "
-        "embeddings), so each copy reproduces the 1x pair structure "
-        "and NO true pairs cross copies — linear candidate growth is "
-        "the soundness bar for every banded/bucketed rung.",
-        "",
-        "| rung | candidates 1x | candidates "
-        f"{copies}x | growth / linear | wall 1x (s) | wall "
-        f"{copies}x (s) |",
-        "|---|---|---|---|---|---|",
+        f"Generated by `python tools/scale_probe.py --copies {copies}` on "
+        f"{cores}, in {secs:.0f} s. Corpora: `perfbench/corpus.write_corpus` "
+        f"seed {SEED}, one sf0.1-shaped copy (1x) and {copies} key-shifted, "
+        "content-disjoint copies of it (documents token-prefixed per copy, "
+        "embeddings dimension-rolled, events time-shifted), so no key, pair "
+        "or session crosses copies. `growth / linear` = value at "
+        f"{copies}x / value at 1x / {copies}: 1.0 is linear, below 1 "
+        "sublinear, above 1 superlinear. Wall times are single runs after "
+        "a 1x warm-up.",
     ]
-    for name, n1, nN, g, w1, wN in rows:
-        lines.append(f"| {name} | {n1} | {nN} | {g} | {w1} | {wN} |")
-    lines += [
-        "",
-        "## Composed pipelines (wall-clock growth)",
-        "",
-        "Each composes individually-probed rungs; composition can "
-        "change candidate volumes (LSH runs on exact-dedup survivors, "
-        "the recall report runs brute-force as the oracle of LSH), so "
-        "the rehearsal measures the whole composition. Output frames "
-        "are bounded reports — the soundness metric is wall growth "
-        "relative to linear (a candidate explosion inside the "
-        "composition would surface as superlinear wall).",
-        "",
-        f"| pipeline | rows 1x | rows {copies}x | wall 1x (s) | "
-        f"wall {copies}x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, w1, wN, wg in composed_rows:
-        lines.append(f"| {name} | {n1} | {nN} | {w1} | {wN} | {wg} |")
-    lines += [
-        "",
-        "## Graph / co-activity family",
-        "",
-        "The graph queries derive their edge list (sessionize -> "
-        "bucketed interval-overlap join -> distinct pairs), so the "
-        "probe measures both layers. Events corpus: sf0.1 x"
-        f"{copies}, user-shifted AND time-shifted (copies are "
-        "disjoint in the grid-cell join key and the user key), so "
-        "every volume below must grow ~linearly. `lp_wedges` is the "
-        "common-neighbor candidate volume sum(C(d,2)) over wedge "
-        "centers — capped at LP_CENTER_DEG_CAP="
-        f"{graphmod.LP_CENTER_DEG_CAP} (the production dial against "
-        "celebrity hubs) vs uncapped (the exposure the dial bounds). "
-        "Caveat the time shift makes explicit: a corpus that grows by "
-        "getting DENSER in the same time window grows overlap OUTPUT "
-        "quadratically by problem semantics (more concurrent users = "
-        "more truly-overlapping pairs); the probe isolates engine "
-        "soundness from that semantic growth, and the degree cap is "
-        "the dial that bounds the downstream wedge volume either way.",
-        "",
-        f"| metric | 1x | {copies}x | growth / linear | "
-        f"wall 1x (s) | wall {copies}x (s) |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, g, w1, wN in graph_rows:
-        lines.append(f"| {name} | {n1} | {nN} | {g} | {w1} | {wN} |")
-    lines += [
-        "",
-        f"| composed query | rows 1x | rows {copies}x | wall 1x (s) "
-        f"| wall {copies}x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, w1, wN, wg in graph_composed_rows:
-        lines.append(f"| {name} | {n1} | {nN} | {w1} | {wN} | {wg} |")
-    lines += [
-        "",
-        "## Orders family",
-        "",
-        "Synthetic orders: sf0.1 x"
-        f"{copies}, key-shifted AND date-shifted (the daily series "
-        "gets N times LONGER, not denser — the honest growth axis for "
-        "series diagnostics; the rank machinery sees N disjoint "
-        "key/date blocks with the 1x tie structure reproduced per "
-        "copy). `orders_series_diagnostics` composes five per-day "
-        "diagnostics; `stats_kruskal_wallis_priority` is the KW->Dunn "
-        "rank engine whose running totals ride `_range_prefix` (the "
-        "range-exchange prefix) — a global window here would be the "
-        "scale bug these rows guard against.",
-        "",
-        f"| composed query | rows 1x | rows {copies}x | wall 1x (s) "
-        f"| wall {copies}x (s) | wall growth / linear |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, n1, nN, w1, wN, wg in orders_composed_rows:
-        lines.append(f"| {name} | {n1} | {nN} | {w1} | {wN} | {wg} |")
-    lines += [
-        "",
-        "`growth / linear` = candidates_Nx / candidates_1x / N: "
-        "1.0 = perfectly linear, <1 = sublinear (banding keys spread "
-        "thinner in the bigger key space), >1 = superlinear (a "
-        "banding key went hot).",
-        "",
-        "**Co-occurrence**: the fixed-V row is expected SUBLINEAR "
-        "(top-V document-frequency slots spread across sources, so "
-        "per-source coverage silently shrinks — the failure is "
-        "coverage, not cost); the `V x10` row demonstrates the dial "
-        "(keep-list width ~ source diversity) restoring exactly "
-        "linear candidates.",
-        "",
-        "**IVF**: candidate volume is ~n^2 * nprobe^2 / CELLS by "
-        "construction, so at FIXED 32 cells the 10x row is expected "
-        "superlinear — that row documents the failure mode, and the "
-        "`cells x10` row demonstrates the production dial (CELLS ~ n, "
-        "the trained large-codebook path named in the operator's "
-        "docstring) restoring ~linear growth.",
-    ]
+    header = (
+        f"| probe | count 1x | count {copies}x | growth / linear | wall 1x (s) "
+        f"| wall {copies}x (s) | wall growth / linear |"
+    )
+    for title, preamble, probes, dials in fams:
+        names = [name for name, _ in probes]
+        lines += ["", f"## {title}", "", preamble, "", header, "|---" * 7 + "|"]
+        for row in table_rows(names, [(n, b) for n, b, _ in dials], runs, copies):
+            lines.append("| " + " | ".join(str(v) for v in row) + " |")
+    return "\n".join(lines) + "\n"
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description="1x vs Nx scale probe; writes SCALE.md")
+    ap.add_argument("--copies", type=int, default=10, help="copies in the large corpus (default 10)")
+    copies = ap.parse_args(argv).copies
+    if copies < 2:
+        ap.error("--copies must be at least 2")
+
+    from football_etl_pipeline_spark.operators.registry import release_checkpoints
+    from football_etl_pipeline_spark.session import get_spark
+    from perfbench.corpus import write_corpus
+
+    start = time.time()
+    small, big = corpus_dir(1), corpus_dir(copies)
+    write_corpus(small, SEED, 1)
+    write_corpus(big, SEED, copies)
+    spark = get_spark("scale_probe")
+
+    def run(fn, d):
+        t0 = time.time()
+        n = fn(d)
+        wall = round(time.time() - t0, 2)
+        release_checkpoints(spark)
+        return n, wall
+
+    fams = families(spark, copies)
+    runs = {}
+    for _, _, probes, dials in fams:
+        for name, fn in probes:
+            run(fn, small)
+            runs[name] = run(fn, small) + run(fn, big)
+            print(f"# {name}: {runs[name]}", flush=True)
+        for name, _, fn in dials:
+            runs[name] = run(fn, big)
+            print(f"# {name}: {runs[name]}", flush=True)
+
+    cores = f"local[{spark.sparkContext.defaultParallelism}], {os.cpu_count()} cores"
+    text = render(fams, runs, copies, cores, time.time() - start)
     with open(os.path.join(REPO, "SCALE.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines))
+        f.write(text)
+    print(text)
 
 
 if __name__ == "__main__":
