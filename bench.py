@@ -9,13 +9,17 @@ recorded ``"parsed": null`` because the full 70-entry map outgrew it.
 The FULL per-query map is written to ``BENCH_DETAIL.json`` next to
 this file (committed per round) and echoed to stderr.
 
-Each query is executed once after a shared warmup (session + first
-touch of the parquet footers), timed end-to-end including the action
-(count of the result) — i.e. full plan execution, not just planning.
+Each query is timed end-to-end including the action (count of the
+result) — i.e. full plan execution, not just planning — as the median
+of 3 runs after a shared warmup (session + first touch of the parquet
+footers). ``BENCH_DETAIL.json`` also records each query's plan
+fingerprint (``plan_fingerprint``), taken from its first timed run.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
 import re
@@ -373,261 +377,90 @@ HEADLINE = [
 # per-query A/Bs without paying the full sweep.
 FAST_TIER_N = 46
 
-# ---- mechanized contamination protocol (round-11 hardening) ----------
-#
-# Rounds 9-10 hand-discarded bench runs as host/page-cache contention;
-# the judgment was corroborated each time but "builder discards
-# unfavorable runs" must not be judgment. Every run now records
-# telemetry and auto-tags itself:
-#
-#   official     — load1 < LOAD_CEILING at process start, AND
-#                  >= COOLDOWN_SEC since the last heavy sweep (newest
-#                  GATE_r*.json / BENCH_DETAIL*.json / .sweep_stamp
-#                  mtime), AND the frozen r5-anchor subtotal within
-#                  ANCHOR_BAND of the last round-stamped official
-#                  snapshot with at most ANCHOR_MOVERS_MAX diffuse
-#                  movers (>= MOVER_RATIO x its reference AND
-#                  +MOVER_ABS_SEC absolute — the documented
-#                  sub-second +-40% noise band stays exempt).
-#   contaminated — any criterion failed; reasons listed in the JSON.
-#   adhoc        — tiered/partial runs: never an official snapshot.
-#
-# The anchor criteria work because the r5 prefix is FROZEN: its plans
-# never change, so anchor movement is by construction environment, not
-# code. A tag never hides data — contaminated runs keep their full
-# per-query map for the BASELINE.md record; the protocol only decides
-# which run may become the round's official snapshot.
-LOAD_CEILING = 0.5
-COOLDOWN_SEC = 300.0
-ANCHOR_BAND = (0.85, 1.15)
-ANCHOR_MOVERS_MAX = 1
-MOVER_RATIO = 1.5
-MOVER_ABS_SEC = 0.3
-
-# r16 hardening (the r15 verdict's finding #3): the anchor-mover screen
-# only watches the frozen prefix, so a transient 3x outlier OUTSIDE it
-# (r15: text_mixture_execute 14.9s vs 4.6s steady-state, untouched
-# code) could sit in the official snapshot and poison the family
-# subtotals. Any shared NON-anchor query at >= OUTLIER_RATIO x its
-# last-official reference (and over the absolute floor, so sub-second
-# noise stays exempt) is re-timed once before the snapshot is stamped;
-# both readings are recorded in ``outlier_retimes``. The retime result
-# stands either way — a genuine plan regression reproduces, transient
-# contention does not.
-OUTLIER_RATIO = 2.5
-OUTLIER_ABS_SEC = 1.0
-
-
-def flag_outliers(
-    timings: dict[str, float],
-    ref_all: dict[str, float],
-    anchor: set[str],
-) -> list[str]:
-    """Shared non-anchor queries whose timing is anomalously above the
-    last official snapshot (pure function — unit-pinned in
-    tests/test_bench_protocol.py). Anchor-prefix queries are excluded:
-    the mover screen already covers them with a tag-level verdict."""
-    return sorted(
-        q
-        for q, s in timings.items()
-        if q not in anchor
-        and q in ref_all
-        and s >= ref_all[q] * OUTLIER_RATIO
-        and s >= ref_all[q] + OUTLIER_ABS_SEC
-    )
-
 _REPO = os.path.dirname(os.path.abspath(__file__))
 
-# Round-12: the round-11 protocol correctly TAGGED the driver's run
-# contaminated (load1 3.19 at start), but the driver still recorded
-# the noisy number. Now the run first WAITS for the host to go idle —
-# bounded, so a persistently busy host still produces a (tagged) run
-# rather than no run at all.
-IDLE_WAIT_MAX_SEC = 600.0   # give up waiting after 10 minutes
-IDLE_POLL_SEC = 15.0
+# ---- plan fingerprints ------------------------------------------------
+#
+# Each benched query records a fingerprint of its physical operator
+# tree in BENCH_DETAIL.json. Comparing two snapshots is then
+# mechanical: a query whose fingerprint changed moved because of code;
+# one whose fingerprint is unchanged moved because of the environment
+# (tools/bench_compare.py labels its movers that way). Only the tree is
+# hashed: expression details (Expand attribute order, range-exchange
+# bound literals) and a cached frame's runtime AQE plan vary between
+# sessions of the same code.
 
 
-def wait_for_idle(
-    *,
-    max_wait: float = IDLE_WAIT_MAX_SEC,
-    poll: float = IDLE_POLL_SEC,
-    load_fn=None,
-    cooldown_fn=None,
-    sleep_fn=None,
-    clock=None,
-) -> tuple[float, float, float]:
-    """Block until load1 < LOAD_CEILING and the heavy-sweep cooldown
-    has elapsed, or ``max_wait`` seconds pass — whichever first.
-    Returns the FINAL (load1, cooldown_sec, waited_sec) sample, which
-    is what tag_run judges (a run that becomes clean mid-wait is
-    genuinely clean: the criterion is process-start state, and the
-    measured run starts after the wait). All dependencies injectable
-    for unit tests."""
-    import time as _time
-
-    load_fn = load_fn or (lambda: os.getloadavg()[0])
-    cooldown_fn = cooldown_fn or (lambda: last_sweep_age_sec(_time.time()))
-    sleep_fn = sleep_fn or _time.sleep
-    clock = clock or _time.monotonic
-    t0 = clock()
-    while True:
-        load1 = load_fn()
-        cooldown = cooldown_fn()
-        waited = clock() - t0
-        if load1 < LOAD_CEILING and cooldown >= COOLDOWN_SEC:
-            return load1, cooldown, waited
-        if waited >= max_wait:
-            return load1, cooldown, waited
-        sleep_fn(min(poll, max_wait - waited))
+def normalize_plan(text: str) -> str:
+    """Replace the plan tokens that differ between runs of the same
+    code: file paths, expression and plan ids, and the RDD ids and call
+    sites of ``localCheckpoint`` scans."""
+    text = re.sub(r"file:[^\],\s]+", "<path>", text)
+    text = re.sub(r"\[id=#\d+\]", "", text)
+    text = re.sub(r"#\d+", "#*", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=*", text)
+    return re.sub(r"(\w*RDD)\[\d+\] at (.*?):\d+", r"\1[*] at \2", text)
 
 
-def last_sweep_age_sec(now: float) -> float:
-    """Seconds since the newest heavy sweep artifact (gate files,
-    bench detail files, or the explicit .sweep_stamp a full
-    verify_oracle sweep leaves). Returns +inf when none exist."""
-    import glob
-
-    stamps = (
-        glob.glob(os.path.join(_REPO, "GATE_r*.json"))
-        + glob.glob(os.path.join(_REPO, "BENCH_DETAIL*.json"))
-        + glob.glob(os.path.join(_REPO, ".sweep_stamp"))
-    )
-    if not stamps:
-        return float("inf")
-    return now - max(os.path.getmtime(p) for p in stamps)
+_AQE_FINAL_PLAN = re.compile(r"^(\s*)\+- == Final Plan ==$")
 
 
-def full_reference() -> tuple[str | None, dict[str, float]]:
-    """FULL per-query timings from the newest round-stamped official
-    snapshot (BENCH_DETAIL_r*.json with the highest round number) —
-    the anchor screen reads its prefix subset, the r16 outlier retime
-    reads the rest."""
-    import glob
+def plan_fingerprint(text: str) -> str:
+    """First 16 hex digits of the sha256 of the operator tree in an
+    ``explain("formatted")`` string: the lines after ``== Physical Plan
+    ==`` up to the first blank line, normalized, without node ids,
+    ``Statistics(...)`` suffixes or the runtime plan an executed AQE
+    subtree prints above its ``== Initial Plan ==``."""
+    lines = normalize_plan(text).splitlines()
+    tree: list[str] = []
+    skip_to = None
+    for line in lines[lines.index("== Physical Plan ==") + 1 :]:
+        if not line.strip():
+            break
+        if skip_to is not None:
+            if line.rstrip() != skip_to:
+                continue
+            skip_to = None
+        m = _AQE_FINAL_PLAN.match(line.rstrip())
+        if m:
+            skip_to = m.group(1) + "+- == Initial Plan =="
+            continue
+        line = re.sub(r" \(\d+\)", "", line)
+        tree.append(re.sub(r", Statistics\([^)]*\)", "", line).rstrip())
+    return hashlib.sha256("\n".join(tree).encode()).hexdigest()[:16]
 
+
+def formatted_plan(df) -> str:
+    """``df``'s ``explain("formatted")`` text, without printing it."""
+    jvm = df.sparkSession.sparkContext._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def tag_run(full_tier: bool) -> str:
+    """``official`` for a full HEADLINE run, ``adhoc`` for a tiered one."""
+    return "official" if full_tier else "adhoc"
+
+
+def newest_snapshot() -> str | None:
+    """Path of the newest round-stamped BENCH_DETAIL_r*.json, if any."""
     cands = sorted(glob.glob(os.path.join(_REPO, "BENCH_DETAIL_r*.json")))
-    if not cands:
-        return None, {}
-    ref_path = cands[-1]
-    with open(ref_path) as f:
-        ref = json.load(f)
-    return os.path.basename(ref_path), dict(ref.get("queries", {}))
+    return cands[-1] if cands else None
 
 
-def anchor_reference() -> tuple[str | None, dict[str, float]]:
-    """Per-query anchor timings from the newest round-stamped official
-    snapshot (BENCH_DETAIL_r*.json with the highest round number)."""
-    ref_name, ref_all = full_reference()
-    anchor = set(HEADLINE[:FAST_TIER_N])
-    return ref_name, {k: v for k, v in ref_all.items() if k in anchor}
+def warm_session(spark, sf_dir: str) -> None:
+    """Touch every table's footer and run one trivial action, so JVM
+    start-up and codegen compile cost isn't attributed to the first
+    query, then warm the Python/Arrow worker pool (mapInPandas queries
+    otherwise pay the per-session daemon cold start inside their
+    timing)."""
+    from football_etl_pipeline_spark.sources.testdata import load_tables
 
-
-def tag_run(
-    load1: float,
-    cooldown_sec: float,
-    timings: dict[str, float],
-    ref_anchor: dict[str, float],
-    full_tier: bool,
-    anchor_speedup_commit: str | None = None,
-) -> dict:
-    """Pure tagging decision: returns {tag, reasons, anchor_*} from
-    the recorded telemetry. Kept side-effect-free so the protocol
-    itself is unit-testable (tests/test_bench_protocol.py)."""
-    if not full_tier:
-        return {"tag": "adhoc", "reasons": ["tiered run, never official"]}
-    reasons: list[str] = []
-    if load1 >= LOAD_CEILING:
-        reasons.append(
-            f"load1 {load1:.2f} >= {LOAD_CEILING} at start"
-        )
-    if cooldown_sec < COOLDOWN_SEC:
-        reasons.append(
-            f"only {cooldown_sec:.0f}s since last heavy sweep"
-            f" (< {COOLDOWN_SEC:.0f}s cool-down)"
-        )
-    out: dict = {}
-    anchor = [q for q in HEADLINE[:FAST_TIER_N] if q in timings]
-    shared = [q for q in anchor if q in ref_anchor]
-    if shared:
-        tot = sum(timings[q] for q in shared)
-        ref_tot = sum(ref_anchor[q] for q in shared)
-        ratio = tot / ref_tot if ref_tot else float("inf")
-        movers = {
-            q: [timings[q], ref_anchor[q]]
-            for q in shared
-            if timings[q] >= ref_anchor[q] * MOVER_RATIO
-            and timings[q] >= ref_anchor[q] + MOVER_ABS_SEC
-        }
-        out.update(
-            anchor_total=round(tot, 3),
-            anchor_ref_total=round(ref_tot, 3),
-            anchor_ratio=round(ratio, 3),
-            anchor_movers=movers,
-        )
-        # r16 fix of the r15 asymmetric band (the r15 verdict's finding
-        # #2): the protocol's own axiom is that the r5 prefix is FROZEN
-        # — anchor movement is by construction environment, not code —
-        # so a below-band reading is an anomalous-environment signal
-        # (warm caches, leftover persists, a lucky window) UNLESS the
-        # round demonstrably changed an anchor-prefix plan. A below-
-        # band run therefore tags contaminated (and, being an
-        # anchor-subtotal-only failure, gets the bounded r14 second
-        # look) unless the builder names the commit that touched the
-        # anchor prefix via $SPARK_GRAFT_ANCHOR_COMMIT, in which case
-        # the attribution is recorded for the audit trail.
-        if ratio > ANCHOR_BAND[1]:
-            reasons.append(
-                f"anchor subtotal {ratio:.2f}x the last official"
-                f" snapshot (band {ANCHOR_BAND[0]}-{ANCHOR_BAND[1]})"
-            )
-        elif ratio < ANCHOR_BAND[0]:
-            if anchor_speedup_commit:
-                out["anchor_note"] = (
-                    f"anchor subtotal {ratio:.2f}x BELOW the band —"
-                    " attributed to named anchor-prefix change"
-                    f" {anchor_speedup_commit}"
-                )
-            else:
-                reasons.append(
-                    f"anchor subtotal {ratio:.2f}x BELOW the band"
-                    f" ({ANCHOR_BAND[0]}-{ANCHOR_BAND[1]}) with no"
-                    " named anchor-prefix commit"
-                    " ($SPARK_GRAFT_ANCHOR_COMMIT) — anomalously"
-                    " fast environment until attributed"
-                )
-        if len(movers) > ANCHOR_MOVERS_MAX:
-            reasons.append(
-                f"{len(movers)} anchor movers >= {MOVER_RATIO}x"
-                f" + {MOVER_ABS_SEC}s abs (diffuse-contention"
-                f" signature): {sorted(movers)}"
-            )
-    else:
-        out["anchor_ratio"] = None  # no reference yet: telemetry-only
-    out["tag"] = "official" if not reasons else "contaminated"
-    out["reasons"] = reasons
-    return out
-
-
-# Round-14: a run whose ONLY failure is the anchor-subtotal band gets
-# one bounded second look — re-run the frozen 46-query anchor tier
-# after an extra cool-down and re-judge on the fresh subtotal. The
-# anchor prefix is frozen code, so a marginal band miss (r13: 1.155 vs
-# the 1.15 cap) is by construction transient host state; everything
-# else (load, cool-down, diffuse movers) stays a hard fail with no
-# retry — those signatures mean the WHOLE run is suspect, not just a
-# warm anchor. One retry only: a host that can't produce an in-band
-# anchor twice is genuinely contended.
-ANCHOR_RETRY_COOLDOWN_SEC = 120.0
-
-
-def should_retry_anchor(verdict: dict) -> bool:
-    """True iff the anchor-subtotal band is the SOLE failing
-    criterion of a contaminated full-tier verdict (unit-pinned in
-    tests/test_bench_protocol.py)."""
-    return (
-        verdict.get("tag") == "contaminated"
-        and len(verdict.get("reasons", [])) == 1
-        and verdict["reasons"][0].startswith("anchor subtotal")
-    )
+    for df in load_tables(spark, sf_dir).values():
+        df.limit(1).count()
+    spark.range(64).repartition(32).mapInPandas(
+        lambda it: (pdf for pdf in it), "id long"
+    ).count()
 
 
 def main() -> None:
@@ -635,23 +468,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # Wait (bounded) for the host to go idle, THEN sample telemetry —
-    # process-start load is the criterion (the warmup's own 32-thread
-    # jobs inflate loadavg afterwards). A persistently busy host falls
-    # through after IDLE_WAIT_MAX_SEC and the run is tagged as before;
-    # SPARK_GRAFT_BENCH_NO_WAIT=1 skips the wait (ad-hoc timing runs).
-    if os.environ.get("SPARK_GRAFT_BENCH_NO_WAIT", "") == "1":
-        load1, cooldown, waited = (
-            os.getloadavg()[0],
-            last_sweep_age_sec(time.time()),
-            0.0,
-        )
-    else:
-        load1, cooldown, waited = wait_for_idle()
-    if waited >= 1:
-        print(f"# waited {waited:.0f}s for idle host", file=sys.stderr)
-    t_start = time.time()
-    load5 = os.getloadavg()[1]
+    load1, load5, _ = os.getloadavg()
 
     # SPARK_GRAFT_BENCH_TIER: "full" (default) = every headline query;
     # "fast" = the r5-anchor 46-query prefix (comparable to BASELINE.md
@@ -674,20 +491,7 @@ def main() -> None:
 
     spark = get_spark("bench")
 
-    # Warmup: touch every table's footer + run one trivial action so JVM
-    # startup/codegen compile cost isn't attributed to the first query.
-    from football_etl_pipeline_spark.sources.testdata import load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-    # Warm the Python/Arrow worker pool too (mapInPandas queries
-    # otherwise pay per-session daemon cold-start inside their timing,
-    # just as the JVM warmup above absorbs codegen compile cost).
-    import pandas as _pd
-
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
+    warm_session(spark, sf_dir)
 
     # Per-query codegen warmup: run each headline query once at the
     # smallest SF before timing it at the target SF. Whole-stage
@@ -723,155 +527,68 @@ def main() -> None:
     # makes each timing measure the query, not its predecessors'
     # garbage — exactly what a per-query steady-state number means.
     N_RUNS = 3
-
-    def time_queries(names: list[str]) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in names:
-            fn = QUERIES.get(name)
-            if fn is None:
-                continue
-            spark.sparkContext._jvm.System.gc()
-            runs = []
-            n = 0
-            for _ in range(N_RUNS):
-                t0 = time.time()
-                n = fn(spark, sf_dir).count()
-                runs.append(time.time() - t0)
-                # r16 measurement fix (documented in
-                # OPTIMIZATION_r16.md): release the run's tracked
-                # persists AND blocking-release its localCheckpoint
-                # blocks. Leaving those to the async ContextCleaner
-                # let dead blocks from run k race run k+1's executors
-                # — measured 3.3/7.0/22.8s across three identical
-                # back-to-back dedup_semantic_incremental runs. Same
-                # clean-cache-per-run protocol the BENCH_r02/r05
-                # lessons established, extended to the r15/r16
-                # checkpoint-heavy plans.
-                release_checkpoints(spark)
-            out[name] = round(sorted(runs)[N_RUNS // 2], 3)
-            print(
-                f"# {name}: {out[name]:.3f}s median of "
-                f"{'/'.join(f'{r:.2f}' for r in runs)} ({n} rows)",
-                file=sys.stderr,
-            )
-        return out
-
-    timings = time_queries(headline)
+    full_tier = tier in ("full", "")
+    timings: dict[str, float] = {}
+    fingerprints: dict[str, str] = {}
+    for name in headline:
+        fn = QUERIES.get(name)
+        if fn is None:
+            continue
+        spark.sparkContext._jvm.System.gc()
+        runs = []
+        n = 0
+        for _ in range(N_RUNS):
+            t0 = time.time()
+            df = fn(spark, sf_dir)
+            n = df.count()
+            runs.append(time.time() - t0)
+            if name not in fingerprints:
+                fingerprints[name] = plan_fingerprint(formatted_plan(df))
+            # r16 measurement fix (documented in OPTIMIZATION_r16.md):
+            # release the run's tracked persists AND blocking-release
+            # its localCheckpoint blocks. Leaving those to the async
+            # ContextCleaner let dead blocks from run k race run k+1's
+            # executors — measured 3.3/7.0/22.8s across three identical
+            # back-to-back dedup_semantic_incremental runs. Same
+            # clean-cache-per-run protocol the BENCH_r02/r05 lessons
+            # established, extended to the r15/r16 checkpoint-heavy
+            # plans.
+            release_checkpoints(spark)
+        timings[name] = round(sorted(runs)[N_RUNS // 2], 3)
+        print(
+            f"# {name}: {timings[name]:.3f}s median of "
+            f"{'/'.join(f'{r:.2f}' for r in runs)} ({n} rows)"
+            f" plan {fingerprints[name]}",
+            file=sys.stderr,
+        )
     total = round(sum(timings.values()), 3)
 
-    def family_subtotals() -> dict[str, float]:
-        # Per-family subtotals (family = operator module that
-        # registered the query): a slow family can't hide inside a
-        # growing total — the trend a reviewer reads across
-        # BENCH_DETAIL_r{N} snapshots.
-        fams: dict[str, float] = {}
-        for name, secs in timings.items():
-            fn = QUERIES.get(name)
-            fam = getattr(fn, "__module__", "unknown").rsplit(".", 1)[-1]
-            fams[fam] = round(fams.get(fam, 0.0) + secs, 3)
-        return fams
+    # Per-family subtotals (family = operator module that registered
+    # the query): a slow family can't hide inside a growing total — the
+    # trend a reviewer reads across BENCH_DETAIL_r{N} snapshots.
+    families: dict[str, float] = {}
+    for name, secs in timings.items():
+        fam = getattr(QUERIES[name], "__module__", "unknown").rsplit(".", 1)[-1]
+        families[fam] = round(families.get(fam, 0.0) + secs, 3)
 
-    ref_name, ref_all = full_reference()
-    anchor_names = set(HEADLINE[:FAST_TIER_N])
-    ref_anchor = {k: v for k, v in ref_all.items() if k in anchor_names}
-    anchor_commit = os.environ.get("SPARK_GRAFT_ANCHOR_COMMIT") or None
-
-    # r16 outlier retime (see flag_outliers): a transient multi-x
-    # outlier OUTSIDE the anchor prefix must not be stamped into the
-    # official snapshot un-rechecked. One retime, both values kept.
-    outlier_retimes: dict[str, list[float]] = {}
-    if tier in ("full", ""):
-        for q in flag_outliers(timings, ref_all, anchor_names):
-            print(
-                f"# outlier retime: {q} {timings[q]:.2f}s >="
-                f" {OUTLIER_RATIO}x ref {ref_all[q]:.2f}s",
-                file=sys.stderr,
-            )
-            fresh = time_queries([q])
-            outlier_retimes[q] = [timings[q], fresh[q]]
-            timings[q] = fresh[q]
-        if outlier_retimes:
-            total = round(sum(timings.values()), 3)
-
-    verdict = tag_run(
-        load1,
-        cooldown,
-        timings,
-        ref_anchor,
-        full_tier=tier in ("full", ""),
-        anchor_speedup_commit=anchor_commit,
-    )
-    anchor_retry = None
-    if should_retry_anchor(verdict):
-        first_ratio = verdict.get("anchor_ratio")
-        print(
-            f"# anchor subtotal {first_ratio}x is the sole failure:"
-            f" one bounded retry after {ANCHOR_RETRY_COOLDOWN_SEC:.0f}s"
-            " cool-down",
-            file=sys.stderr,
-        )
-        if os.environ.get("SPARK_GRAFT_BENCH_NO_WAIT", "") != "1":
-            time.sleep(ANCHOR_RETRY_COOLDOWN_SEC)
-        # the protocol's criterion is PROCESS-START state — for the
-        # retry window that means the retry's OWN start: re-sample
-        # load so a host that got busy mid-run can't ride the stale
-        # idle reading into an official tag (round-14 review find).
-        # Cooldown keeps the original sample: the only sweep since is
-        # this run itself, and self-cooldown would make every retry
-        # auto-fail.
-        retry_load1 = os.getloadavg()[0]
-        fresh = time_queries(HEADLINE[:FAST_TIER_N])
-        timings.update(fresh)
-        total = round(sum(timings.values()), 3)
-        verdict = tag_run(
-            retry_load1,
-            cooldown,
-            timings,
-            ref_anchor,
-            full_tier=True,
-            anchor_speedup_commit=anchor_commit,
-        )
-        anchor_retry = {
-            "first_anchor_ratio": first_ratio,
-            "retry_anchor_ratio": verdict.get("anchor_ratio"),
-            "retry_load1": round(retry_load1, 3),
-            "outcome": verdict["tag"],
-        }
-        print(
-            f"# anchor retry: {first_ratio}x ->"
-            f" {verdict.get('anchor_ratio')}x ({verdict['tag']})",
-            file=sys.stderr,
-        )
     detail = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "families": family_subtotals(),
+        "fingerprints": fingerprints,
+        "families": families,
         "sf": sf,
         "n_queries": len(timings),
         "telemetry": {
             "load1_at_start": round(load1, 3),
             "load5_at_start": round(load5, 3),
-            "idle_wait_sec": round(waited, 1),
-            "cooldown_sec": (
-                round(cooldown, 1)
-                if cooldown != float("inf")
-                else None
-            ),
-            "anchor_ref": ref_name,
         },
-        "protocol": verdict,
-        "anchor_retry": anchor_retry,
-        "outlier_retimes": outlier_retimes,
     }
     # Full record: committed file + stderr (never the driver-parsed line).
-    if tier in ("full", ""):
+    if full_tier:
         # tiered runs must not clobber the committed full-sweep record
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
-        with open(detail_path, "w") as f:
+        with open(os.path.join(_REPO, "BENCH_DETAIL.json"), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
             f.write("\n")
     print(json.dumps(detail), file=sys.stderr)
@@ -893,7 +610,7 @@ def main() -> None:
                 "n_queries": len(timings),
                 "queries": slowest,
                 "detail": "BENCH_DETAIL.json",
-                "tag": verdict["tag"],
+                "tag": tag_run(full_tier),
             }
         )
     )

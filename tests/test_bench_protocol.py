@@ -1,247 +1,140 @@
-"""Unit tests for bench.py's mechanized contamination protocol
-(round-11 hardening): the tagging decision is a pure function of the
-recorded telemetry, so every rule the rounds 9-10 hand-adjudications
-applied is pinned here mechanically.
+"""Unit tests for bench.py's run record: the plan-fingerprint text rule,
+the fingerprint-based mover labels of ``tools/bench_compare.py``, the
+run tag, and the HEADLINE/family bookkeeping.
 
-No SparkSession needed — ``tag_run`` is side-effect-free by design.
+Only ``test_fingerprint_stable_per_query_and_distinct_across`` needs a
+SparkSession; the rest work on strings and dicts.
 """
 
 from __future__ import annotations
 
 import bench
+from tools.bench_compare import compare
+
+# An explain("formatted") string shaped like Spark's: the operator
+# tree, a blank line, then per-node details carrying the volatile ids.
+PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (9)
++- Project (8)
+   +- BroadcastHashJoin Inner BuildRight (7)
+      :- Scan ExistingRDD (1)
+      +- BroadcastExchange (6)
+         +- InMemoryTableScan (2) (columnarIn=false, columnarOut=true)
+               +- InMemoryRelation (3)
+                     +- AdaptiveSparkPlan (5)
+                        +- == Initial Plan ==
+                           Project (4)
+                           +- Scan parquet  (10)
 
 
-def _anchor_timings(base: float = 0.5) -> dict[str, float]:
-    """Synthetic per-query map covering the full r5-anchor prefix."""
-    return {q: base for q in bench.HEADLINE[: bench.FAST_TIER_N]}
+(1) Scan ExistingRDD
+Output [2]: [u#131L, v#132L]
+Arguments: [u#131L, v#132L], MapPartitionsRDD[151] at localCheckpoint at <unknown>:0, ExistingRDD, UnknownPartitioning(0)
+
+(6) BroadcastExchange
+Input [1]: [k#7L]
+Arguments: HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=2729]
+
+(10) Scan parquet
+Location: InMemoryFileIndex [file:/data/sf0.01/orders.parquet]
+"""
+
+FINAL_BLOCK = """                        +- == Final Plan ==
+                           ResultQueryStage (14)
+                           +- * Project (13)
+                              +- ShuffleQueryStage (12), Statistics(sizeInBytes=163.0 KiB, rowCount=500)
+                                 +- Exchange (11)
+                                    +- Scan parquet  (10)
+"""
 
 
-def test_clean_run_is_official():
-    t = _anchor_timings()
-    v = bench.tag_run(0.05, 600.0, t, dict(t), full_tier=True)
-    assert v["tag"] == "official"
-    assert v["reasons"] == []
-    assert v["anchor_ratio"] == 1.0
-    assert v["anchor_movers"] == {}
-
-
-def test_high_load_contaminates():
-    t = _anchor_timings()
-    v = bench.tag_run(1.7, 600.0, t, dict(t), full_tier=True)
-    assert v["tag"] == "contaminated"
-    assert any("load1" in r for r in v["reasons"])
-
-
-def test_short_cooldown_contaminates():
-    # The round-9 page-cache lesson: a bench right after a gate sweep.
-    t = _anchor_timings()
-    v = bench.tag_run(0.05, 30.0, t, dict(t), full_tier=True)
-    assert v["tag"] == "contaminated"
-    assert any("cool-down" in r for r in v["reasons"])
-
-
-def test_anchor_inflation_contaminates():
-    # The 1.81x full-run signature from the round-10 discards.
-    ref = _anchor_timings()
-    t = {q: s * 1.8 for q, s in ref.items()}
-    v = bench.tag_run(0.05, 600.0, t, ref, full_tier=True)
-    assert v["tag"] == "contaminated"
-    assert any("anchor subtotal" in r for r in v["reasons"])
-
-
-def test_anchor_speedup_without_named_commit_contaminates():
-    # r16 fix of the r15 asymmetric band: the r5 prefix is FROZEN, so
-    # a below-band subtotal is an anomalous-environment signal (warm
-    # caches, leftover persists, a lucky window) unless the round
-    # names the commit that changed an anchor-prefix plan. Unattributed
-    # below-band runs tag contaminated — and, being anchor-subtotal-
-    # only failures, stay eligible for the bounded second look.
-    ref = _anchor_timings()
-    t = {q: s * 0.6 for q, s in ref.items()}
-    v = bench.tag_run(0.05, 600.0, t, ref, full_tier=True)
-    assert v["tag"] == "contaminated"
-    assert v["anchor_ratio"] == 0.6
-    assert any("BELOW the band" in r for r in v["reasons"])
-    assert bench.should_retry_anchor(v)
-
-
-def test_anchor_speedup_with_named_commit_is_official():
-    # The one legitimate below-band case: the round demonstrably
-    # touched anchor-prefix code and says which commit did it. The
-    # attribution is recorded in the audit trail.
-    ref = _anchor_timings()
-    t = {q: s * 0.6 for q, s in ref.items()}
-    v = bench.tag_run(
-        0.05, 600.0, t, ref, full_tier=True,
-        anchor_speedup_commit="abc1234",
+def test_fingerprint_ignores_node_ids_statistics_and_final_plan():
+    fp = bench.plan_fingerprint(PLAN)
+    assert len(fp) == 16 and int(fp, 16) >= 0
+    renumbered = PLAN.replace("(9)", "(19)").replace("(2) (columnarIn", "(3) (columnarIn")
+    assert bench.plan_fingerprint(renumbered) == fp
+    with_stats = PLAN.replace(
+        "+- Project (8)", "+- Project (8), Statistics(sizeInBytes=1.0 KiB, rowCount=7)"
     )
-    assert v["tag"] == "official"
-    assert "abc1234" in v.get("anchor_note", "")
+    assert bench.plan_fingerprint(with_stats) == fp
+    executed = PLAN.replace(
+        "                        +- == Initial Plan ==\n",
+        FINAL_BLOCK + "                        +- == Initial Plan ==\n",
+    )
+    assert executed != PLAN
+    assert bench.plan_fingerprint(executed) == fp
 
 
-def _nonanchor_name() -> str:
-    return bench.HEADLINE[bench.FAST_TIER_N]
+def test_normalize_plan_strips_expression_plan_rdd_ids_and_paths():
+    other = (
+        PLAN.replace("u#131L", "u#9L")
+        .replace("v#132L", "v#10L")
+        .replace("MapPartitionsRDD[151]", "MapPartitionsRDD[4]")
+        .replace("<unknown>:0", "<unknown>:3")
+        .replace("plan_id=2729", "plan_id=5")
+        .replace("/data/sf0.01", "/tmp/elsewhere")
+    )
+    assert bench.normalize_plan(other) == bench.normalize_plan(PLAN)
+    assert bench.normalize_plan("Subquery subquery#4, [id=#88]") == "Subquery subquery#*, "
+    assert bench.plan_fingerprint(other) == bench.plan_fingerprint(PLAN)
 
 
-def test_flag_outliers_flags_shared_nonanchor_multi_x():
-    # r16: the r15 snapshot carried text_mixture_execute at 14.9s vs
-    # 4.6s steady-state — a >2.5x transient OUTSIDE the anchor prefix
-    # that the mover screen could not see. flag_outliers catches it.
-    anchor = set(bench.HEADLINE[: bench.FAST_TIER_N])
-    q = _nonanchor_name()
-    assert bench.flag_outliers({q: 14.9}, {q: 4.6}, anchor) == [q]
+def test_fingerprint_sees_join_side_and_added_exchange():
+    fp = bench.plan_fingerprint(PLAN)
+    assert bench.plan_fingerprint(PLAN.replace("BuildRight", "BuildLeft")) != fp
+    extra_exchange = PLAN.replace(
+        "      :- Scan ExistingRDD (1)\n",
+        "      :- Exchange (11)\n      :  +- Scan ExistingRDD (1)\n",
+    )
+    assert bench.plan_fingerprint(extra_exchange) != fp
 
 
-def test_flag_outliers_exempts_anchor_subsecond_and_unshared():
-    anchor = set(bench.HEADLINE[: bench.FAST_TIER_N])
-    a = bench.HEADLINE[0]
-    q = _nonanchor_name()
-    q2 = bench.HEADLINE[bench.FAST_TIER_N + 1]
-    timings = {
-        a: 10.0,   # anchor: the mover screen owns it
-        q: 0.6,    # 3x of 0.2s but under the 1.0s absolute floor
-        q2: 9.9,   # new query, no reference: nothing to compare
+def test_compare_labels_movers_by_fingerprint():
+    prev = {
+        "queries": {"a": 1.0, "b": 1.0, "c": 1.0, "steady": 1.0},
+        "fingerprints": {"a": "f1", "b": "f2", "steady": "f4"},
     }
-    ref = {a: 1.0, q: 0.2}
-    assert bench.flag_outliers(timings, ref, anchor) == []
+    cur = {
+        "queries": {"a": 3.0, "b": 0.4, "c": 2.5, "steady": 1.1, "new": 0.2},
+        "fingerprints": {"a": "f1-changed", "b": "f2", "c": "f3", "steady": "f4"},
+    }
+    c = compare(cur, prev)
+    assert {q: m["cause"] for q, m in c["movers"].items()} == {
+        "a": "code",
+        "b": "environment",
+        "c": "unknown",
+    }
+    assert list(c["movers"]) == ["a", "c", "b"]  # slowest ratio first
+    assert c["shared"] == {"n": 4, "cur": 7.0, "prev": 4.0}
+    assert c["new"] == ["new"]
+    # snapshots from before fingerprints existed label every mover unknown
+    old = compare(cur, {"queries": prev["queries"]})
+    assert {m["cause"] for m in old["movers"].values()} == {"unknown"}
 
 
-def test_flag_outliers_requires_both_ratio_and_abs():
-    anchor = set(bench.HEADLINE[: bench.FAST_TIER_N])
-    q = _nonanchor_name()
-    # 2.0x of a 4s query: big absolute move but under the ratio gate
-    assert bench.flag_outliers({q: 8.0}, {q: 4.0}, anchor) == []
-    # 3x of a 0.5s query: over the ratio but only +1.0s — boundary is
-    # inclusive on the absolute floor
-    assert bench.flag_outliers({q: 1.5}, {q: 0.5}, anchor) == [q]
+def test_fingerprint_stable_per_query_and_distinct_across(spark, sf_dir):
+    from football_etl_pipeline_spark.operators import QUERIES
+    from football_etl_pipeline_spark.operators.registry import release_checkpoints
 
-
-def test_diffuse_movers_contaminate_even_with_total_in_band():
-    # The subtle round-10 signature: total only ~1.06x but several
-    # individual untouched queries at multi-x — diffuse host noise.
-    ref = _anchor_timings(0.5)
-    t = dict(ref)
-    names = list(ref)
-    t[names[0]] = 2.0  # 4x, +1.5s
-    t[names[1]] = 1.6  # 3.2x, +1.1s
-    t[names[2]] = 1.3  # 2.6x, +0.8s
-    v = bench.tag_run(0.05, 600.0, t, ref, full_tier=True)
-    assert v["tag"] == "contaminated"
-    assert any("movers" in r for r in v["reasons"])
-    assert len(v["anchor_movers"]) == 3
-
-
-def test_single_mover_stays_official():
-    # One real regression must NOT be hidden behind a contamination
-    # tag — it should surface as an official run with a mover to
-    # investigate.
-    ref = _anchor_timings(0.5)
-    t = dict(ref)
-    t[next(iter(ref))] = 1.2
-    v = bench.tag_run(0.05, 600.0, t, ref, full_tier=True)
-    assert v["tag"] == "official"
-    assert len(v["anchor_movers"]) == 1
-
-
-def test_subsecond_noise_band_exempt():
-    # +-40%-ish on sub-second queries is documented noise: a handful
-    # of 0.2s -> 0.4s wobbles (2x ratio but under the +0.3s absolute
-    # floor) must register zero movers and stay official while the
-    # subtotal stays in band.
-    ref = _anchor_timings(0.2)
-    t = dict(ref)
-    for q in list(ref)[:3]:
-        t[q] = 0.4
-    v = bench.tag_run(0.05, 600.0, t, ref, full_tier=True)
-    assert v["anchor_movers"] == {}
-    assert v["tag"] == "official"
+    fps = {}
+    # q1: a plain scan/aggregate; graph_kcore scans localCheckpoint
+    # RDDs; dedup_minhash_lsh reads a cached frame whose runtime AQE
+    # plan is printed once it has run.
+    for name in ("q1_pricing_summary", "graph_kcore", "dedup_minhash_lsh"):
+        seen = []
+        for _ in range(2):
+            df = QUERIES[name](spark, sf_dir)
+            df.count()
+            seen.append(bench.plan_fingerprint(bench.formatted_plan(df)))
+            release_checkpoints(spark)
+        assert seen[0] == seen[1], name
+        fps[name] = seen[0]
+    assert len(set(fps.values())) == 3, fps
 
 
 def test_tiered_run_never_official():
-    t = _anchor_timings()
-    v = bench.tag_run(0.01, 9999.0, t, dict(t), full_tier=False)
-    assert v["tag"] == "adhoc"
-
-
-def test_no_reference_is_telemetry_only_official():
-    # First-ever run: no round-stamped snapshot to compare against.
-    t = _anchor_timings()
-    v = bench.tag_run(0.05, 600.0, t, {}, full_tier=True)
-    assert v["tag"] == "official"
-    assert v["anchor_ratio"] is None
-
-
-def _mk_clock():
-    state = {"t": 0.0}
-
-    def clock():
-        return state["t"]
-
-    def sleep(sec):
-        state["t"] += sec
-
-    return clock, sleep
-
-
-def test_wait_for_idle_returns_immediately_when_clean():
-    clock, sleep = _mk_clock()
-    load1, cooldown, waited = bench.wait_for_idle(
-        load_fn=lambda: 0.1,
-        cooldown_fn=lambda: 900.0,
-        sleep_fn=sleep,
-        clock=clock,
-    )
-    assert (load1, cooldown, waited) == (0.1, 900.0, 0.0)
-
-
-def test_wait_for_idle_waits_out_load_spike():
-    clock, sleep = _mk_clock()
-    loads = iter([3.2, 2.0, 0.8, 0.2, 0.1])
-
-    def load_fn():
-        return next(loads)
-
-    load1, cooldown, waited = bench.wait_for_idle(
-        load_fn=load_fn,
-        cooldown_fn=lambda: 900.0,
-        sleep_fn=sleep,
-        clock=clock,
-        poll=15.0,
-    )
-    assert load1 == 0.2  # first sample under LOAD_CEILING wins
-    assert waited == 45.0  # three 15s polls
-
-
-def test_wait_for_idle_gives_up_bounded_and_reports_dirty_sample():
-    # a persistently busy host must still produce a run — the FINAL
-    # sample goes to tag_run, which then tags it contaminated
-    clock, sleep = _mk_clock()
-    load1, cooldown, waited = bench.wait_for_idle(
-        load_fn=lambda: 4.0,
-        cooldown_fn=lambda: 900.0,
-        sleep_fn=sleep,
-        clock=clock,
-        max_wait=60.0,
-        poll=15.0,
-    )
-    assert load1 == 4.0
-    assert waited == 60.0
-    v = bench.tag_run(load1, cooldown, _anchor_timings(), {}, full_tier=True)
-    assert v["tag"] == "contaminated"
-
-
-def test_wait_for_idle_waits_for_cooldown_too():
-    clock, sleep = _mk_clock()
-    cools = iter([100.0, 200.0, 290.0, 310.0])
-    load1, cooldown, waited = bench.wait_for_idle(
-        load_fn=lambda: 0.1,
-        cooldown_fn=lambda: next(cools),
-        sleep_fn=sleep,
-        clock=clock,
-        poll=15.0,
-    )
-    assert cooldown == 310.0
-    assert waited == 45.0
+    assert bench.tag_run(False) == "adhoc"
+    assert bench.tag_run(True) == "official"
 
 
 def test_headline_names_all_registered():
@@ -269,52 +162,3 @@ def test_family_subtotals_partition_the_total():
         families[fam] = round(families.get(fam, 0.0) + secs, 3)
     assert abs(sum(families.values()) - sum(timings.values())) < 1e-6
     assert len(families) >= 2  # more than one module represented
-
-
-def _band_miss_timings() -> tuple[dict, dict]:
-    """(timings, reference) with anchor subtotal just above the band
-    cap and NO per-query mover (diffuse marginal warmth — the r13
-    driver-run signature)."""
-    ref = _anchor_timings(1.0)
-    t = {q: 1.16 for q in ref}  # 1.16x each: in-band per query
-    return t, ref
-
-
-def test_anchor_sole_failure_is_retryable():
-    t, ref = _band_miss_timings()
-    v = bench.tag_run(0.05, 600.0, t, ref, full_tier=True)
-    assert v["tag"] == "contaminated"
-    assert len(v["reasons"]) == 1
-    assert bench.should_retry_anchor(v)
-
-
-def test_load_failure_is_not_retryable():
-    t, ref = _band_miss_timings()
-    v = bench.tag_run(1.7, 600.0, t, ref, full_tier=True)
-    assert not bench.should_retry_anchor(v)  # two reasons: load + band
-    t_ok = _anchor_timings()
-    v2 = bench.tag_run(1.7, 600.0, t_ok, dict(t_ok), full_tier=True)
-    assert not bench.should_retry_anchor(v2)  # sole reason, but load
-
-
-def test_cooldown_failure_is_not_retryable():
-    t, ref = _band_miss_timings()
-    v = bench.tag_run(0.05, 10.0, t, ref, full_tier=True)
-    assert not bench.should_retry_anchor(v)
-
-
-def test_mover_failure_is_not_retryable():
-    ref = _anchor_timings(1.0)
-    t = dict(ref)
-    names = sorted(ref)[:2]
-    for q in names:
-        t[q] = 1.6  # >= 1.5x and +0.3s: two movers, total in band
-    v = bench.tag_run(0.05, 600.0, t, ref, full_tier=True)
-    assert v["tag"] == "contaminated"
-    assert not bench.should_retry_anchor(v)
-
-
-def test_official_run_never_retries():
-    t = _anchor_timings()
-    v = bench.tag_run(0.05, 600.0, t, dict(t), full_tier=True)
-    assert not bench.should_retry_anchor(v)

@@ -1,52 +1,106 @@
-"""Cross-round bench comparison: BENCH_DETAIL.json (current full run)
-vs a prior round's BENCH_DETAIL_r0N.json and the frozen r5 anchor.
+"""Cross-round bench comparison: BENCH_DETAIL.json (the current full
+run) vs a prior snapshot, by default the newest BENCH_DETAIL_r*.json.
 
-Usage: python tools/bench_compare.py [BENCH_DETAIL_r08.json]
+Usage: python tools/bench_compare.py [PREV.json]
 
-Prints the shared-prefix subset totals (the HEADLINE list is
-append-only, so the intersection IS the prior round's query set), the
-r5-anchor 46-query subset, and per-query movers beyond the noise
-policy (>1.4x on >=1s queries, >2x on anything).
+Prints the shared-query subset totals (HEADLINE is append-only, so the
+intersection is the prior snapshot's query set), the 46-query anchor
+subset, and per-query movers beyond the noise policy (>1.4x on >=1s
+queries, >2x either way on anything). Each mover is labelled by its
+plan fingerprint: ``code`` when it changed, ``environment`` when it did
+not, ``unknown`` when a snapshot has none for the query (every
+snapshot up to r16).
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-CUR = "BENCH_DETAIL.json"
-PREV = sys.argv[1] if len(sys.argv) > 1 else "BENCH_DETAIL_r08.json"
-R5_ANCHOR_TOTAL = 46.6  # BASELINE.md frozen r5 curve (first 46 HEADLINE)
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
+from bench import FAST_TIER_N, HEADLINE, newest_snapshot  # noqa: E402
 
 
-def load(p):
-    d = json.load(open(p))
-    return d.get("queries", d)
+def is_mover(cur: float, prev: float) -> bool:
+    r = cur / max(prev, 1e-9)
+    return (r > 1.4 and cur >= 1.0) or r > 2.0 or 1 / r > 2.0
 
 
-cur, prev = load(CUR), load(PREV)
+def cause(query: str, cur: dict, prev: dict) -> str:
+    a = cur.get("fingerprints", {}).get(query)
+    b = prev.get("fingerprints", {}).get(query)
+    if a is None or b is None:
+        return "unknown"
+    return "code" if a != b else "environment"
 
-shared = [q for q in prev if q in cur]
-ct, pt = sum(cur[q] for q in shared), sum(prev[q] for q in shared)
-print(f"shared {len(shared)}-query subset: cur {ct:.1f}s vs prev {pt:.1f}s "
-      f"= {ct / pt:.2f}x")
 
-sys.path.insert(0, ".")
-from bench import FAST_TIER_N, HEADLINE  # noqa: E402
+def compare(cur: dict, prev: dict) -> dict:
+    """Compare two BENCH_DETAIL records (pure: no file or Spark access)."""
+    cq, pq = cur["queries"], prev["queries"]
+    shared = [q for q in pq if q in cq]
+    anchor = [q for q in HEADLINE[:FAST_TIER_N] if q in shared]
 
-tier = [q for q in HEADLINE[:FAST_TIER_N] if q in cur]
-ct_a = sum(cur[q] for q in tier)
-print(f"r5-anchor {len(tier)}-query subset: cur {ct_a:.1f}s vs "
-      f"anchor {R5_ANCHOR_TOTAL:.1f}s = {ct_a / R5_ANCHOR_TOTAL:.2f}x")
+    def subset(names: list[str]) -> dict:
+        return {
+            "n": len(names),
+            "cur": round(sum(cq[q] for q in names), 3),
+            "prev": round(sum(pq[q] for q in names), 3),
+        }
 
-print("\nmovers (vs prev):")
-for q in sorted(shared, key=lambda q: -(cur[q] / max(prev[q], 1e-9))):
-    r = cur[q] / max(prev[q], 1e-9)
-    if (r > 1.4 and cur[q] >= 1.0) or r > 2.0 or (1 / r > 2.0):
-        print(f"  {q}: {prev[q]:.2f}s -> {cur[q]:.2f}s ({r:.2f}x)")
+    movers = {
+        q: {
+            "prev": pq[q],
+            "cur": cq[q],
+            "ratio": round(cq[q] / max(pq[q], 1e-9), 3),
+            "cause": cause(q, cur, prev),
+        }
+        for q in sorted(shared, key=lambda q: -cq[q] / max(pq[q], 1e-9))
+        if is_mover(cq[q], pq[q])
+    }
+    return {
+        "shared": subset(shared),
+        "anchor": subset(anchor),
+        "movers": movers,
+        "new": sorted((q for q in cq if q not in pq), key=lambda q: -cq[q]),
+        "total": round(sum(cq.values()), 3),
+        "n_queries": len(cq),
+    }
 
-new = sorted((q for q in cur if q not in prev), key=lambda q: -cur[q])
-print("\nnew queries this round:")
-for q in new:
-    print(f"  {cur[q]:6.2f}s  {q}")
-print(f"\ncurrent total: {sum(cur.values()):.1f}s over {len(cur)} queries")
+
+def main() -> int:
+    prev_path = sys.argv[1] if len(sys.argv) > 1 else newest_snapshot()
+    if prev_path is None:
+        print("no BENCH_DETAIL_r*.json snapshot to compare against", file=sys.stderr)
+        return 1
+    with open(os.path.join(_REPO, "BENCH_DETAIL.json")) as f:
+        cur = json.load(f)
+    with open(prev_path) as f:
+        prev = json.load(f)
+    c = compare(cur, prev)
+
+    print(f"vs {os.path.basename(prev_path)}")
+    for label in ("shared", "anchor"):
+        s = c[label]
+        ratio = s["cur"] / s["prev"] if s["prev"] else float("nan")
+        print(
+            f"{label} {s['n']}-query subset: cur {s['cur']:.1f}s vs"
+            f" prev {s['prev']:.1f}s = {ratio:.2f}x"
+        )
+    print("\nmovers (vs prev):")
+    for q, m in c["movers"].items():
+        print(
+            f"  {q}: {m['prev']:.2f}s -> {m['cur']:.2f}s"
+            f" ({m['ratio']:.2f}x, {m['cause']})"
+        )
+    print("\nnew queries:")
+    for q in c["new"]:
+        print(f"  {cur['queries'][q]:6.2f}s  {q}")
+    print(f"\ncurrent total: {c['total']:.1f}s over {c['n_queries']} queries")
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

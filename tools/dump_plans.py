@@ -8,10 +8,11 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import normalize_plan  # noqa: E402
 
 SHOWCASE = {
     "scan_filter_project": "every predicate in PushedFilters; ReadSchema pruned to 6 of 11 columns",
@@ -131,11 +132,7 @@ def main() -> None:
         # (isFinalPlan=true), not the static pre-execution one.
         df.count()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        # strip volatile noise: absolute paths, plan ids, codegen ids
-        plan = re.sub(r"file:[^\],\s]+", "<path>", plan)
-        plan = re.sub(r"plan_id=\d+", "plan_id=*", plan)
-        plan = re.sub(r"\[id=#\d+\]", "", plan)
-        lines = [ln.rstrip()[:160] for ln in plan.splitlines()]
+        lines = [ln.rstrip()[:160] for ln in normalize_plan(plan).splitlines()]
         # Iterative queries (BPE, MMR) print every unrolled round — the
         # shape evidence is in the first rounds; cap the dump.
         if len(lines) > 150:

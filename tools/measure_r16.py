@@ -23,7 +23,6 @@ Usage:
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -32,14 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def newest_detail() -> str:
-    cands = sorted(glob.glob(os.path.join(_REPO, "BENCH_DETAIL_r*.json")))
-    if not cands:
-        raise SystemExit("no BENCH_DETAIL_r*.json snapshot found for --top")
-    return cands[-1]
+from bench import formatted_plan, newest_snapshot, warm_session  # noqa: E402
 
 
 def main() -> None:
@@ -60,7 +52,10 @@ def main() -> None:
         i = args.index("--top")
         n = int(args[i + 1])
         del args[i : i + 2]
-        det = json.load(open(newest_detail()))
+        snapshot = newest_snapshot()
+        if snapshot is None:
+            raise SystemExit("no BENCH_DETAIL_r*.json snapshot found for --top")
+        det = json.load(open(snapshot))
         names = [
             k
             for k, _ in sorted(
@@ -72,17 +67,12 @@ def main() -> None:
     from football_etl_pipeline_spark.operators import QUERIES
     from football_etl_pipeline_spark.operators.registry import release_checkpoints
     from football_etl_pipeline_spark.session import get_spark
-    from football_etl_pipeline_spark.sources.testdata import load_tables
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_dir = "/root/testdata/sf0.001"
     spark = get_spark("measure_r16")
     sc = spark.sparkContext
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
+    warm_session(spark, sf_dir)
 
     results = {}
     for name in names:
@@ -113,11 +103,7 @@ def main() -> None:
             fn(spark, sf_dir).count()
             runs.append(time.time() - t0b)
         dt = sorted(runs)[1]
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(df)
         n_exch = len(re.findall(r"\bExchange\b", plan)) - len(
             re.findall(r"ReusedExchange", plan)
         )
