@@ -62,7 +62,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _released(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
-    """Release the PREVIOUS query's tracked persists and checkpoint
+    """Release the PREVIOUS query's cached frames and checkpoint
     blocks before building this one's plan. By the time the harness
     calls the next query, the prior result has been collected, so its
     caches are dead weight — without this, a long session accumulates

@@ -62,6 +62,7 @@ def _run_transform(spark, api: str, files: list[str], out: str, dead: str | None
     n_dead = res.dead_letter.count()
     if dead:
         write_dead_letter(res.dead_letter, dead)
+    res.release()
     print(f"loaded {n_good} rows to {out}; {n_dead} dead-letter group(s)"
           + (f" -> {dead}" if dead else ""))
     return 0

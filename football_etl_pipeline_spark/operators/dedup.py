@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 from .textops import (
     SHINGLES_DUCK,
     SHINGLES_SPARK,
@@ -219,7 +219,7 @@ def dedup_ngram_jaccard(
     comparison is exact either way.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = persist_tracked(_hashed_shingles(docs))
+    sh = _hashed_shingles(docs).persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     rare = sh.groupBy("sh60").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= DF_CAP
@@ -321,7 +321,7 @@ def containment_pairs(docs: DataFrame) -> DataFrame:
     """The ``dedup_containment`` query body over an arbitrary
     ``(doc_id, text)`` frame (testability split, same pattern as
     ``simhash_banded_pairs``)."""
-    sh = persist_tracked(_hashed_shingles(docs))
+    sh = _hashed_shingles(docs).persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     rare = sh.groupBy("sh60").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= DF_CAP
@@ -452,7 +452,7 @@ def minhash_lsh_pairs(
     # Persisted: the hashed shingle set (8-byte keys, md5 computed
     # once) feeds the signature aggregate, the per-doc sizes, and both
     # sides of the verify join (4 subtrees).
-    sh = persist_tracked(_hashed_shingles(docs))
+    sh = _hashed_shingles(docs).persist()
     hashed = sh.select("doc_id", (F.col("sh60") % MINHASH_P).alias("h"))
     sig = hashed.groupBy("doc_id").agg(
         *[
@@ -694,8 +694,8 @@ def simhash_banded_pairs(
     """
     # Persisted: simhash values feed the band explode and both sides
     # of the hamming join — 3 subtrees over the input chain.
-    sh_val = persist_tracked(sh_val_in)
-    bands = persist_tracked(  # occupancy count + both pairing joins
+    sh_val = sh_val_in.persist()
+    bands = (  # occupancy count + both pairing joins
         sh_val.select(
             "doc_id",
             F.explode(
@@ -712,6 +712,7 @@ def simhash_banded_pairs(
                 )
             ).alias("bd"),
         ).select("doc_id", "bd.band_id", "bd.bkey")
+        .persist()
     )
     occ = bands.groupBy("band_id", "bkey").agg(F.count(F.lit(1)).alias("occ"))
     bmem = bands.join(occ, ["band_id", "bkey"])
@@ -932,7 +933,7 @@ def dedup_embedding_ivf(
     anywhere."""
     from .similarity import _dot_spark, _normed
 
-    e = persist_tracked(_normed(spark, sf_dir))
+    e = _normed(spark, sf_dir).persist()
     cent = e.filter(F.col("vec_id") < EMB_DUP_CELLS).select(
         F.col("vec_id").alias("c_id"),
         F.col("v").alias("cv"),
@@ -944,12 +945,13 @@ def dedup_embedding_ivf(
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
     )
-    memb = persist_tracked(  # both self-join sides read the assignment
+    memb = (  # both self-join sides read the assignment
         e.join(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crank", F.row_number().over(wcell))
         .filter(F.col("crank") <= EMB_DUP_NPROBE)
         .select("vec_id", F.col("c_id").alias("cell"))
+        .persist()
     )
     cand = (
         memb.alias("a")
@@ -1074,8 +1076,9 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     al.; this report covers the exact rung, which at 100 TB removes
     the bulk of the volume before any banding runs.)"""
     docs = load_table(spark, sf_dir, "documents")
-    hashed = persist_tracked(
+    hashed = (
         docs.select("doc_id", "source", F.expr(f"md5({NORM_SPARK})").alias("fp"))
+        .persist()
     )
     canon = hashed.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
     flagged = hashed.join(canon, "fp").withColumn(
@@ -1175,8 +1178,9 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = toks.select(
         "doc_id", F.explode(F.expr(_SPAN_GRAM_SPARK)).alias("h")
     )
-    per_doc_gram = persist_tracked(
+    per_doc_gram = (
         spans.groupBy("h", "doc_id").agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
     )
     stats = per_doc_gram.groupBy("h").agg(
         F.sum("cnt").alias("n_occ"), F.count(F.lit(1)).alias("n_docs")
@@ -1265,11 +1269,12 @@ def dedup_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     spread = docs.repartition(spark.sparkContext.defaultParallelism)
     toks = spread.select("doc_id", F.expr(TOKENS_SPARK).alias("toks"))
-    grams = persist_tracked(
+    grams = (
         toks.filter(F.size("toks") >= SPAN_K).select(
             "doc_id",
             F.posexplode(F.expr(_SPAN_GRAM_SPARK)).alias("pos0", "h"),
         ).select("doc_id", (F.col("pos0") + 1).alias("start_pos"), "h")
+        .persist()
     )
     shared = (
         grams.select("h", "doc_id")
@@ -1407,11 +1412,12 @@ def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy("fp")
-    sdocs = persist_tracked(
+    sdocs = (
         docs.withColumn("fp", F.expr(f"md5({NORM_SPARK})"))
         .withColumn("canonical_id", F.min("doc_id").over(w))
         .filter(F.col("doc_id") == F.col("canonical_id"))
         .drop("fp", "canonical_id")
+        .persist()
     )
     pairs = minhash_lsh_pairs(sdocs).select("a_id", "b_id")
     comp = connected_components_star(pairs)
@@ -1620,9 +1626,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     th = spark.createDataFrame(
         [(t,) for t in SWEEP_THRESHOLDS], "threshold double"
     )
-    exp = persist_tracked(
-        pj.join(F.broadcast(th), F.col("jaccard") >= F.col("threshold"))
-    )
+    exp = pj.join(F.broadcast(th), F.col("jaccard") >= F.col("threshold")).persist()
     np_ = exp.groupBy("threshold").agg(F.count(F.lit(1)).alias("n_pairs"))
     nd = (
         exp.select(

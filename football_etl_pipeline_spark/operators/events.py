@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 
 SESSION_GAP_SEC = 1800  # 30 min
 
@@ -2731,7 +2731,7 @@ def events_markov_entropy_rate(
     c = seq.groupBy(
         "prev_type", F.col("event_type").alias("next_type")
     ).agg(F.count(F.lit(1)).alias("n"))
-    c = persist_tracked(c)
+    c = c.persist()
     tot = c.groupBy("prev_type").agg(F.sum("n").alias("row_total"))
     g = c.agg(F.sum("n").alias("grand"))
     cells = c.agg(F.count(F.lit(1)).alias("n_observed_cells"))

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
 from .dedup import dedup_ngram_jaccard
-from .registry import persist_tracked, query
+from .registry import query
 
 MAX_ITERATIONS = 20  # diameter bound; components here are tiny
 
@@ -366,14 +366,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = persist_tracked(edges)
+    edges = edges.persist()
     deg = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    deg = persist_tracked(deg)
+    deg = deg.persist()
     # Orient each edge from (deg, id)-smaller to larger endpoint.
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
@@ -391,7 +391,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(fwd | tie, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(fwd | tie, F.col("dv")).otherwise(F.col("du")).alias("dst_d"),
     )
-    oriented = persist_tracked(oriented)
+    oriented = oriented.persist()
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     o3 = oriented.select("src", "dst").alias("o3")
     rank_lt = (F.col("o1.dst_d") < F.col("o2.dst_d")) | (
@@ -505,9 +505,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).union(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    sym = persist_tracked(sym)
+    sym = sym.persist()
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    deg = persist_tracked(deg)
+    deg = deg.persist()
     n = deg.count()  # |V|: one scalar to the driver, iteration-invariant
     base = 0.15 * PR_SCALE / n
     r = deg.select("src", F.lit(PR_SCALE // n).cast("long").alias("r"))
@@ -606,7 +606,7 @@ def graph_khop_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).union(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    sym = persist_tracked(sym)
+    sym = sym.persist()
 
     seed = edges.agg(F.min("u").alias("node")).select(
         "node", F.lit(0).cast("int").alias("dist")
@@ -707,9 +707,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    sym = persist_tracked(
-        edges.union(edges.select(F.col("v"), F.col("u")))
-    )
+    sym = edges.union(edges.select(F.col("v"), F.col("u"))).persist()
     labels = _lpa_labels(sym)
     return labels.select(
         F.col("node").alias("user_id"), F.col("label").alias("community")
@@ -748,44 +746,6 @@ def _lpa_labels(sym: DataFrame) -> DataFrame:
 
 LP_CENTER_DEG_CAP = 256  # wedge centers hotter than this are dropped
 LP_TOP_K = 20
-
-# Where the center cap is applied — the r9-measured trade, now a
-# config knob instead of prose (round-11 task):
-#
-#   "after"  (default) — both wedge sides are the SAME sym frame, so
-#            the self-join reuses one shuffle (ReusedExchange) and the
-#            broadcast centers join prunes hot-center wedges
-#            POST-generation. Wins when the hub tail is thin: at
-#            sf0.1 the uncapped generator emits only ~1.5x the capped
-#            volume (29.7M vs 20.0M pairs, SCALE.md), and exchange
-#            reuse dominates (measured 7.8-8.5s vs 10.0-11.0s).
-#   "before" — the centers filter lands on the wedge-side frames
-#            BEFORE the self-join, so hot-hub wedges are never
-#            generated. Wins when the hub tail is fat: excess
-#            generation is Σ d² over hot centers, UNBOUNDED relative
-#            to the capped volume on power-law graphs at corpus
-#            scale, while the exchange-reuse saving stays a constant
-#            factor.
-#
-# Flip rule, derived from the ``graph_degree_distribution`` hub-tail
-# readout: compute R = Σ d(d−1)/2 over ALL nodes divided by the same
-# sum over nodes with d <= LP_CENTER_DEG_CAP (exact from the degree
-# histogram — no wedge run needed). R is the uncapped/capped wedge
-# volume ratio; at the measured R ≈ 1.5 "after" still wins by ~25%,
-# so flip to "before" once R ≳ 2 (generation excess then outweighs
-# the one reused exchange). BASELINE.md round-11 records the A/B.
-LP_CAP_MODE_ENV = "SPARK_GRAFT_LP_CAP_MODE"
-
-
-def _lp_cap_mode() -> str:
-    import os
-
-    mode = os.environ.get(LP_CAP_MODE_ENV, "after").strip().lower()
-    if mode not in ("after", "before"):
-        raise ValueError(
-            f"{LP_CAP_MODE_ENV} must be 'after' or 'before', got {mode!r}"
-        )
-    return mode
 
 
 @query(
@@ -837,13 +797,10 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-bounding dial, same discipline as the fuzzy-match
     DF cap and the triangle count's degree orientation; a celebrity
     hub predicts everyone↔everyone and is signal-free anyway).
-    WHERE the cap is applied is the LP_CAP_MODE_ENV config knob
-    ("after" = post-generation prune with one reused exchange, the
-    thin-tail winner; "before" = pre-join filter that never generates
-    hot-hub wedges, the fat-tail winner — flip when the
-    degree-histogram ratio R = Σ d(d−1)/2 all / Σ d(d−1)/2 capped
-    exceeds ~2; see the knob's block comment). Both modes emit the
-    identical wedge set, so correctness is mode-invariant. The
+    The cap prunes wedges AFTER generation: both wedge sides are the
+    same sym frame, so the self-join reuses one shuffle, which beat a
+    pre-join cap on both sides at sf0.1 (8.30 s vs 8.72 s median,
+    BASELINE.md round 11) because the hub tail is thin there. The
     adjacency screen is a broadcast-or-shuffle anti-join on the edge
     key; top-K is TakeOrdered."""
     from .events import events_interval_overlap_join
@@ -867,32 +824,15 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", "d"
     )
     centers = deg.filter(F.col("d") <= LP_CENTER_DEG_CAP).select("node")
-    # Cap ordering is the LP_CAP_MODE_ENV knob (see its block comment
-    # for the measured A/B and the hub-tail flip rule). Both modes
-    # produce the IDENTICAL wedge set — only where the centers filter
-    # sits in the plan differs — so the oracle is mode-invariant.
-    if _lp_cap_mode() == "before":
-        capped = sym.join(
-            centers.withColumnRenamed("node", "src"), "src"
-        )
-        a = capped.toDF("c", "u")
-        b = capped.toDF("c", "w")
-        wed = (
-            a.join(b, "c")
-            .filter(F.col("u") < F.col("w"))
-            .groupBy("u", "w")
-            .agg(F.count(F.lit(1)).alias("cn"))
-        )
-    else:
-        a = sym.toDF("c", "u")
-        b = sym.toDF("c", "w")
-        wed = (
-            a.join(b, "c")
-            .filter(F.col("u") < F.col("w"))
-            .join(centers.withColumnRenamed("node", "c"), "c")
-            .groupBy("u", "w")
-            .agg(F.count(F.lit(1)).alias("cn"))
-        )
+    a = sym.toDF("c", "u")
+    b = sym.toDF("c", "w")
+    wed = (
+        a.join(b, "c")
+        .filter(F.col("u") < F.col("w"))
+        .join(centers.withColumnRenamed("node", "c"), "c")
+        .groupBy("u", "w")
+        .agg(F.count(F.lit(1)).alias("cn"))
+    )
     nonadj = wed.join(
         edges,
         (wed["u"] == edges["u"]) & (wed["w"] == edges["v"]),
@@ -1008,9 +948,7 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    sym = persist_tracked(
-        edges.union(edges.select(F.col("v"), F.col("u")))
-    )
+    sym = edges.union(edges.select(F.col("v"), F.col("u"))).persist()
     # comm feeds the volume aggregate and BOTH endpoint joins of the
     # internal-edge count — checkpoint (not persist) so the three
     # consumers' plans carry an RDD scan, not three inlined copies of
@@ -1061,7 +999,7 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # base feeds BOTH the broadcast Σ frame and the final projection —
     # persist the |communities|-row frame or the vol/ein joins run twice.
-    base = persist_tracked(base)
+    base = base.persist()
     tot = base.agg(F.sum("num").cast("bigint").alias("tnum"))
     return (
         base.crossJoin(F.broadcast(tot))
@@ -1142,9 +1080,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = edges.select(F.col("u").alias("src")).union(
         edges.select(F.col("v").alias("src"))
     )
-    deg = persist_tracked(
-        sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d")).persist()
     tot = deg.agg(F.count(F.lit(1)).alias("n"))
     return (
         deg.select(
@@ -1231,15 +1167,17 @@ def graph_degree_assortativity(
     edges = pairs.select(
         F.col("user_a").alias("u"), F.col("user_b").alias("v")
     ).distinct().localCheckpoint()
-    sym = persist_tracked(
+    sym = (
         edges.union(edges.select(F.col("v"), F.col("u"))).toDF(
             "src", "dst"
         )
+        .persist()
     )
-    deg = persist_tracked(
+    deg = (
         sym.groupBy("src").agg(F.count(F.lit(1)).alias("d")).toDF(
             "node", "d"
         )
+        .persist()
     )
     da = deg.toDF("src", "x")
     db = deg.toDF("dst", "y")
@@ -1392,22 +1330,24 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
-    comp = persist_tracked(
+    comp = (
         connected_components_star(pairs).select(
             F.col("node").alias("doc_id"), F.col("label").alias("component")
         )
+        .persist()
     )
     docs = load_table(spark, sf_dir, "documents")
     qexpr = _QUALITY_SPARK.replace("TOKS", "toks").replace(
         "STOP", _sql_list(STOPWORDS)
     )
-    q = persist_tracked(
+    q = (
         docs.select(
             "doc_id", F.expr(TOKENS_SPARK).alias("toks")
         ).select(
             "doc_id",
             F.expr(qexpr).cast("decimal(18,6)").cast("double").alias("q"),
         )
+        .persist()
     )
     from pyspark.sql import Window
 
@@ -1513,23 +1453,25 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .events import events_interval_overlap_join
 
     pairs = events_interval_overlap_join(spark, sf_dir)
-    edges = persist_tracked(
+    edges = (
         pairs.select(
             F.col("user_a").alias("u"), F.col("user_b").alias("v")
         ).distinct()
+        .persist()
     )
-    deg = persist_tracked(
+    deg = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
+        .persist()
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     ranked = edges.join(du, "u").join(dv, "v")
     fwd = F.col("du") < F.col("dv")
     tie = (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    oriented = persist_tracked(
+    oriented = (
         ranked.select(
             F.when(fwd | tie, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(fwd | tie, F.col("v")).otherwise(F.col("u")).alias("dst"),
@@ -1537,6 +1479,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("du"))
             .alias("dst_d"),
         )
+        .persist()
     )
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     o3 = oriented.select("src", "dst").alias("o3")
@@ -1811,10 +1754,11 @@ def graph_hits_hubs_authorities(
     nothing is collected."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    edges = persist_tracked(
+    edges = (
         o.join(li, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
+        .persist()
     )
     h1 = edges.groupBy("c").agg(F.count(F.lit(1)).alias("h"))
     a1 = edges.join(h1, "c").groupBy("p").agg(F.sum("h").alias("a"))

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 
 
 @query(
@@ -500,7 +500,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The bloom feeds TWO broadcast joins (one per probe); persist the
     # <=2048-row word table so the build runs once, not once per probe.
-    bloom = persist_tracked(bloom_build(keys, "c_custkey"))
+    bloom = bloom_build(keys, "c_custkey").persist()
     probed = bloom_probe(orders, "o_custkey", bloom)
 
     # Exact finish removes bloom false positives.

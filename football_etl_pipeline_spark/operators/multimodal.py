@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 
 FRAME_STRIDE = 64  # sample one "frame" byte every 64 payload bytes
 
@@ -2232,8 +2232,9 @@ def multimodal_image_ahash_neardup(
     triples. At 100 TB the band key-space is the dial: wider bands →
     fewer chance collisions, same guarantee down to b-1 bits."""
     m = media_table(spark, sf_dir).filter(F.col("mime") == "image/png")
-    hashes = persist_tracked(
+    hashes = (
         m.select("media_id").mapInPandas(_ahash_batches, schema=_AHASH_SCHEMA)
+        .persist()
     )
     return _ahash_pairs(hashes)
 
@@ -2754,16 +2755,17 @@ def multimodal_curation_funnel(
     The oracle recomputes everything from id arithmetic + the
     recursive-CTE fixpoint."""
     m = media_table(spark, sf_dir).filter(F.col("mime") == "image/png")
-    rep = persist_tracked(
+    rep = (
         m.select("media_id").mapInPandas(
             _funnel_hash_batches,
             "media_id long, decode_ok boolean, ahash_hi long, ahash_lo long",
         )
+        .persist()
     )
     clean = rep.filter(F.col("decode_ok")).select(
         "media_id", "ahash_hi", "ahash_lo"
     )
-    pairs = persist_tracked(_ahash_pairs(clean))
+    pairs = _ahash_pairs(clean).persist()
     from .graph import connected_components_star
 
     comp = connected_components_star(pairs.select("a_id", "b_id"))
@@ -2921,10 +2923,11 @@ def multimodal_ahash_incremental(
 
     # the daily screen: decode ONLY the arriving batch; standing side
     # is a plain parquet read of the maintained store.
-    b = persist_tracked(
+    b = (
         m.select("media_id")
         .filter(is_batch)
         .mapInPandas(_ahash_batches, schema=_AHASH_SCHEMA)
+        .persist()
     )
     s = read_fingerprints(spark, state).select(
         "media_id", "ahash_hi", "ahash_lo"
@@ -3070,16 +3073,17 @@ def crossmodal_paired_curation(
         ).alias("text_keep"),
     )
     m = media_table(spark, sf_dir).filter(F.col("mime") == "image/png")
-    rep = persist_tracked(
+    rep = (
         m.select("media_id").mapInPandas(
             _funnel_hash_batches,
             "media_id long, decode_ok boolean, ahash_hi long, ahash_lo long",
         )
+        .persist()
     )
     clean = rep.filter(F.col("decode_ok")).select(
         "media_id", "ahash_hi", "ahash_lo"
     )
-    pairs = persist_tracked(_ahash_pairs(clean))
+    pairs = _ahash_pairs(clean).persist()
     comp = connected_components_star(pairs.select("a_id", "b_id"))
     kept = (
         clean.join(comp, clean.media_id == comp.node, "left")

@@ -529,12 +529,12 @@ def orders_stable_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     need when ids must be dense and stable.)"""
     n_parts = spark.sparkContext.defaultParallelism
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    from .registry import persist_tracked
 
-    rp = persist_tracked(
+    rp = (
         orders.repartitionByRange(n_parts, "o_orderkey").sortWithinPartitions(
             "o_orderkey"
         )
+        .persist()
     )
     counts = {
         r["pid"]: r["n"]

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
 from .events import HLL_REL_ERR
-from .registry import persist_tracked, query
+from .registry import query
 from .textops import hash60_duck, hash60_spark
 
 # ---- PII redaction ---------------------------------------------------
@@ -1078,7 +1078,6 @@ def profile_equiheight_histogram(
     corpus-independent), and the NTILE bucket follows from the rank
     via {EQH_BUCKETS - 1} literal cutoffs. Every window is
     partitioned; one range exchange total."""
-    from .registry import persist_tracked
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -1091,10 +1090,11 @@ def profile_equiheight_histogram(
         F.col("l_orderkey").asc(),
         F.col("l_linenumber").asc(),
     ]
-    part = persist_tracked(
+    part = (
         li.repartitionByRange(EQH_RANGE_PARTS, *order_cols).withColumn(
             "_pid", F.spark_partition_id()
         )
+        .persist()
     )
     cnt = {
         r["_pid"]: r["n"]
@@ -1331,7 +1331,7 @@ def lineitem_correlation_matrix(
         aggs.append(F.sum(dec(c) * dec(c)).alias(f"s_{c}{c}"))
     for a, bb in _CORR_PAIRS:
         aggs.append(F.sum(dec(a) * dec(bb)).alias(f"s_{a}{bb}"))
-    s = persist_tracked(b.agg(*aggs))
+    s = b.agg(*aggs).persist()
     s.createOrReplaceTempView("_corr_moments_tmp")
     out = None
     for a, bb in _CORR_PAIRS:

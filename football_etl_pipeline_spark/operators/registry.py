@@ -25,55 +25,48 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# ---- persisted-frame lifecycle ---------------------------------------
+# ---- cached-state lifecycle -----------------------------------------
 #
 # Several operators persist() an intermediate frame that multiple plan
 # subtrees read (shingle sets, simhash values, IVF affinities). The
 # persist must outlive the operator function — the caller triggers the
 # action later — so a try/finally inside the operator would defeat it.
-# Instead every such persist is *tracked*, and harnesses (bench,
-# verify, the driver adapter) call release_checkpoints(spark), which
-# releases it, once the previous query's action has run. Without
-# this, a long session accumulates cached frames and later queries pay
-# the memory/GC bill (measured 2.4× inflation on BENCH_r02 tail
-# queries).
-#
-# NOT thread-safe by design: the tracker is a plain module-level list,
-# matching the single-threaded harness contract (bench/verify/driver
-# run queries sequentially). Concurrent query runners would need one
-# tracker per runner or a lock around persist/release.
-
-_LIVE_PERSISTS: list[DataFrame] = []
+# Operators call plain ``.persist()``/``.cache()``, and Spark's own
+# CacheManager is the only record of what a query cached: harnesses
+# (bench, verify, the driver adapter) call release_checkpoints(spark)
+# once the previous query's action has run. Without this, a long
+# session accumulates cached frames and later queries pay the
+# memory/GC bill (measured 2.4× inflation on BENCH_r02 tail queries).
 
 
-def persist_tracked(df: DataFrame) -> DataFrame:
-    """``df.persist()`` registered for later bulk release."""
-    df.persist()
-    _LIVE_PERSISTS.append(df)
-    return df
+def release_persists(spark: SparkSession | None = None) -> int:
+    """Clear the CacheManager of ``spark`` (default: this thread's
+    active session); returns how many persistent RDDs that freed, 0
+    when there is no session.
 
-
-def release_persists() -> int:
-    """Unpersist every tracked frame; returns how many were released.
-
-    Safe to call at any point where no returned-but-unexecuted plan
-    still needs the cache (i.e. after the previous query's action)."""
-    n = len(_LIVE_PERSISTS)
-    for df in _LIVE_PERSISTS:
-        df.unpersist()
-    _LIVE_PERSISTS.clear()
-    return n
+    The cache half of ``release_checkpoints``: it drops every cached
+    frame, whichever code path cached it, without blocking — the same
+    release semantics as ``df.unpersist()``. Safe to call at any point
+    where no returned-but-unexecuted plan still needs the cache (i.e.
+    after the previous query's action)."""
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        return 0
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    spark.catalog.clearCache()
+    return before - jsc.getPersistentRDDs().size()
 
 
 def release_checkpoints(spark) -> int:
     """The one release call every harness surface makes between
-    queries: release the tracked persists first (so the CacheManager
-    drops their frames instead of keeping stale entries whose RDDs are
-    gone), then blocking-unpersist every remaining persistent RDD.
-    Those are mostly ``localCheckpoint`` blocks, which are not tracked
-    frames and otherwise die only when the async ContextCleaner gets
-    to them after a driver GC (r16 finding: dead checkpoint blocks from
-    a query's prior runs raced the next run's executors —
+    queries: clear the CacheManager first (so it drops its frames
+    instead of keeping stale entries whose RDDs are gone), then
+    blocking-unpersist every remaining persistent RDD. Those are mostly
+    ``localCheckpoint`` blocks, which no cached frame owns and which
+    otherwise die only when the async ContextCleaner gets to them
+    after a driver GC (r16 finding: dead checkpoint blocks from a
+    query's prior runs raced the next run's executors —
     ``dedup_semantic_incremental`` measured 3.3 → 7.0 → 22.8 s across
     three back-to-back identical runs).
 
@@ -81,8 +74,8 @@ def release_checkpoints(spark) -> int:
     still alive: a localCheckpointed frame's lineage is truncated, so
     unpersisting it makes any later action on it fail loudly (which is
     the correct failure mode for a harness bug, not silent recompute).
-    Returns how many tracked frames and RDDs were released."""
-    n = release_persists()
+    Returns how many persistent RDDs were released."""
+    n = release_persists(spark)
     for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         jrdd.unpersist(True)
         n += 1

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 from .textops import hash60_duck, hash60_spark
 
 DIM = 64
@@ -283,10 +283,11 @@ def similarity_ann_lsh(
     oracle); candidate generation is an equality join on
     (table, bucket); scoring joins back to the vectors only for the
     DISTINCT candidate pairs."""
-    e = persist_tracked(
+    e = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .withColumn("nrm", F.expr(_norm_spark("v")))
+        .persist()
     )
     tables = []
     for t in range(ANN_TABLES):
@@ -412,10 +413,11 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
     )
-    aff = persist_tracked(  # feeds both the assignment and the query-probe sides
+    aff = (  # feeds both the assignment and the query-probe sides
         e.join(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crank", F.row_number().over(wcell))
+        .persist()
     )
     assign = aff.filter(F.col("crank") == 1).select(
         "vec_id", "v", "nrm", F.col("c_id").alias("cell")
@@ -811,7 +813,7 @@ def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     green row certifies the whole training trajectory, not just the
     last step. Scale: per step, one broadcast(K) scan + one K·DIM-
     group shuffle; driver traffic is K·DIM rows per step."""
-    e = persist_tracked(_normed(spark, sf_dir))
+    e = _normed(spark, sf_dir).persist()
     cent = _train_centroids_df(e, KMEANS_ITERS - 1)
     return _cell_dim_means(_assign_cells(e, cent))
 
@@ -861,16 +863,17 @@ def similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seed quantizer's recall at equal nprobe with bounded
     candidate volume; the oracle replays training AND search, so the
     green row certifies both."""
-    e = persist_tracked(_normed(spark, sf_dir))
+    e = _normed(spark, sf_dir).persist()
     cent = _train_centroids_df(e, KMEANS_ITERS)
     ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
     )
-    aff = persist_tracked(
+    aff = (
         e.join(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crank", F.row_number().over(wcell))
+        .persist()
     )
     assign = aff.filter(F.col("crank") == 1).select(
         "vec_id", "v", "nrm", F.col("c_id").alias("cell")
@@ -1323,7 +1326,7 @@ def similarity_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = e.filter(F.col("vec_id") == 0)
     rel = F.expr(_dot_spark("c.v", "q.v")) / (F.col("c.nrm") * F.col("q.nrm"))
-    cand = persist_tracked(
+    cand = (
         e.alias("c")
         .filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q.alias("q")))
@@ -1335,6 +1338,7 @@ def similarity_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rel").desc(), F.col("vec_id").asc())
         .limit(MMR_POOL)
+        .persist()
     )
     lam = F.lit(MMR_LAMBDA)
     one_m = F.lit(1.0 - MMR_LAMBDA)
@@ -1351,7 +1355,7 @@ def similarity_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
     )
     for r in range(2, MMR_K + 1):
-        sel = persist_tracked(sel)
+        sel = sel.persist()
         cos_cs = F.expr(_dot_spark("c.v", "s.v")) / (
             F.col("c.nrm") * F.col("s.nrm")
         )
@@ -1549,12 +1553,13 @@ def similarity_ann_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: LUT entries fold in pinned (m, c_id) order and the ADC
     sum folds in subspace order on both engines, so distances and
     ranks hash-match exactly."""
-    e = persist_tracked(
+    e = (
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
         .withColumn("nrm", F.expr(_norm_spark("v")))
+        .persist()
     )
     # --- IVF routing (cosine coarse quantizer, first-K centroids) ---
     cent = e.filter(F.col("vec_id") < IVF_K).select(
@@ -1566,10 +1571,11 @@ def similarity_ann_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
     )
-    aff = persist_tracked(
+    aff = (
         e.join(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crank", F.row_number().over(wcell))
+        .persist()
     )
     assign = aff.filter(F.col("crank") == 1).select(
         "vec_id", F.col("c_id").alias("cell")
@@ -1715,11 +1721,12 @@ def similarity_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with/aggregate fold over ``slice(v, 1, d)``, so scores stay
     bit-identical to DuckDB's list-comprehension fold and the oracle
     hash is exact — no rounding anywhere in the ranking."""
-    e = persist_tracked(
+    e = (
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("v"),
         )
+        .persist()
     )
     q = e.filter(F.col("vec_id") < N_QUERIES)
 
@@ -1858,7 +1865,7 @@ def similarity_binary_quant_rerank(
     and the rerank's vector fetch is a tiny keyed join against the
     (bucketed) embedding table rather than a second full scan."""
     w0s, w1s = _bq_words_spark("v")
-    sig = persist_tracked(
+    sig = (
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
@@ -1867,6 +1874,7 @@ def similarity_binary_quant_rerank(
         .withColumn("nrm", F.expr(_norm_spark("v")))
         .withColumn("w0", F.expr(w0s))
         .withColumn("w1", F.expr(w1s))
+        .persist()
     )
     q = sig.filter(F.col("vec_id") < N_QUERIES)
     ham = (
@@ -2067,7 +2075,7 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", "rnk")
     )
     docs = load_table(spark, sf_dir, "documents")
-    sh = persist_tracked(_hashed_shingles(docs))
+    sh = _hashed_shingles(docs).persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     rare = (
         sh.groupBy("sh60")
@@ -2257,18 +2265,19 @@ def dedup_semantic_clusters(
     corpus — at 100 TB you raise K with corpus size (n·P/K constant)
     and the per-cell work stays flat while everything shuffles on
     cell. The keep-list left join is a hash join on vec_id."""
-    e = persist_tracked(_normed(spark, sf_dir))
+    e = _normed(spark, sf_dir).persist()
     cent = _train_centroids_df(e, KMEANS_ITERS, k=cells or SEMDEDUP_CELLS)
     ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
     )
-    memb = persist_tracked(
+    memb = (
         e.join(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crank", F.row_number().over(wcell))
         .filter(F.col("crank") <= SEMDEDUP_NPROBE)
         .select("vec_id", "v", "nrm", F.col("c_id").alias("cell"), "crank")
+        .persist()
     )
     cand = (
         memb.alias("a")
@@ -2472,7 +2481,7 @@ def dedup_semantic_incremental(
     warehouse would keep materialized between ingests. Cosine chain
     and keep flags are hash-stable (the dedup_semantic_clusters
     discipline)."""
-    eall = persist_tracked(_normed(spark, sf_dir))
+    eall = _normed(spark, sf_dir).persist()
     standing = eall.filter(
         F.col("vec_id") % SEMDEDUP_INCR_MOD != 0
     )
@@ -2481,12 +2490,13 @@ def dedup_semantic_incremental(
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
     )
-    memb = persist_tracked(
+    memb = (
         eall.join(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crank", F.row_number().over(wcell))
         .filter(F.col("crank") <= SEMDEDUP_NPROBE)
         .select("vec_id", "v", "nrm", F.col("c_id").alias("cell"), "crank")
+        .persist()
     )
     is_batch = F.col("vec_id") % SEMDEDUP_INCR_MOD == 0
     bcos = F.expr(_dot_spark("b.v", "s.v")) / (
@@ -2635,7 +2645,7 @@ def dedup_semantic_recall_sweep(
     pass; recall per level falls out of a left join of truth pairs
     onto pair levels. Everything shuffles on cell / pair keys;
     centroids ride the same broadcast as dedup_semantic_clusters."""
-    e = persist_tracked(_normed(spark, sf_dir))
+    e = _normed(spark, sf_dir).persist()
     cent = _train_centroids_df(e, KMEANS_ITERS, k=SEMDEDUP_CELLS)
     max_np = max(SEMDEDUP_SWEEP_PROBES)
     # build the probe frame FROM the tuple so Spark and the oracle
@@ -2647,14 +2657,15 @@ def dedup_semantic_recall_sweep(
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
     )
-    aff = persist_tracked(
+    aff = (
         e.join(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crank", F.row_number().over(wcell))
         .filter(F.col("crank") <= max_np)
         .select("vec_id", F.col("c_id").alias("cell"), "crank")
+        .persist()
     )
-    pairlvl = persist_tracked(
+    pairlvl = (
         aff.alias("a")
         .join(
             aff.alias("b"),
@@ -2669,6 +2680,7 @@ def dedup_semantic_recall_sweep(
             .cast("long")
             .alias("lvl")
         )
+        .persist()
     )
     pcos = F.expr(_dot_spark("a.v", "b.v")) / (
         F.col("a.nrm") * F.col("b.nrm")
@@ -2700,7 +2712,7 @@ def dedup_semantic_recall_sweep(
             F.col("a.vec_id").alias("t_ai"), F.col("b.vec_id").alias("t_bi")
         )
     )
-    tl = persist_tracked(
+    tl = (
         truth.join(
             pairlvl,
             (F.col("t_ai") == F.col("ai")) & (F.col("t_bi") == F.col("bi")),
@@ -2708,6 +2720,7 @@ def dedup_semantic_recall_sweep(
         )
         .groupBy("t_ai")
         .agg(F.min("lvl").alias("minlvl"))
+        .persist()
     )
     tstat = tl.agg(F.count(F.lit(1)).alias("n_true"))
     cs = (

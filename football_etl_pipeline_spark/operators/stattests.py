@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 
 PREFIX_PARTS = 32  # width of the range exchange behind running sums
 
@@ -83,11 +83,12 @@ def _range_prefix(
     # materialization costs more than the saved recompute (ks-drift
     # A/B: 0.95→1.15s), so it is opt-in.
     if persist_input:
-        df = persist_tracked(df)
-    part = persist_tracked(
+        df = df.persist()
+    part = (
         df.repartitionByRange(PREFIX_PARTS, *gcols, *order_cols).withColumn(
             "_pid", F.spark_partition_id()
         )
+        .persist()
     )
     rows = (
         part.groupBy("_pid", *gcols)
@@ -504,10 +505,11 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
         )
     )
-    part = persist_tracked(
+    part = (
         rev.repartitionByRange(
             PREFIX_PARTS, "rev", "o_custkey"
         ).withColumn("_pid", F.spark_partition_id())
+        .persist()
     )
     cnt = {
         r["_pid"]: r["n"]
@@ -1114,10 +1116,11 @@ def stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "events").filter(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select("event_id", "value")
-    part = persist_tracked(
+    part = (
         p.repartitionByRange(PREFIX_PARTS, "value", "event_id").withColumn(
             "_pid", F.spark_partition_id()
         )
+        .persist()
     )
     cnt = {
         r["_pid"]: r["n"]
@@ -1325,10 +1328,11 @@ def customer_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     byrev = pts.groupBy("rev").agg(F.max("d").alias("ymax"))
-    part = persist_tracked(
+    part = (
         byrev.repartitionByRange(PREFIX_PARTS, "rev").withColumn(
             "_pid", F.spark_partition_id()
         )
+        .persist()
     )
     pmax = {
         r["_pid"]: r["m"]
@@ -1534,10 +1538,11 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_en_score_spark()} AS s",
         "CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y",
     )
-    part = persist_tracked(
+    part = (
         d.repartitionByRange(PREFIX_PARTS, "s", "doc_id").withColumn(
             "_pid", F.spark_partition_id()
         )
+        .persist()
     )
     cnt = {
         r["_pid"]: r["n"]
@@ -4503,13 +4508,14 @@ def orders_robust_stl_decompose(
     pattern — no range join, no window), the seasonal frame is 7
     rows broadcast back. Output ~#days rows, corpus-independent."""
     o = load_table(spark, sf_dir, "orders")
-    daily = persist_tracked(
+    daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
             F.expr(
                 "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6)))"
                 " AS DOUBLE)"
             ).alias("revenue")
         )
+        .persist()
     )
     daily.createOrReplaceTempView("rstl_daily")
     return spark.sql(

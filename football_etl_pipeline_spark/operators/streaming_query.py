@@ -19,9 +19,10 @@ Determinism notes:
   stream-only semantics the pytest suite covers).
 - Money sums go through DECIMAL(18,6) as everywhere else.
 
-The checkpoint + sink names are pid/uuid-scoped scratch (the
-``operators/maintenance.py`` convention) so concurrent harnesses
-never collide.
+The sink names are pid/uuid-scoped (the ``operators/maintenance.py``
+convention) so concurrent harnesses never collide; every stream's
+checkpoint lives in a temporary directory removed once the stream has
+stopped.
 """
 
 from __future__ import annotations
@@ -85,6 +86,47 @@ class _state_partitions:
         return False
 
 
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over one testdata table. A stream needs an
+    explicit schema: take the PHYSICAL schema from a batch read of the
+    same file (load_table's ts normalization is left to the caller).
+    The file source wants a DIRECTORY, so point it at sf_dir and let
+    pathGlobFilter select the table's file. Each table is a single
+    file, so the backlog drains in one micro-batch; maxFilesPerTrigger
+    bounds per-batch work on a multi-file backlog."""
+    file = f"{table}.parquet"
+    physical = spark.read.parquet(os.path.join(sf_dir, file)).schema
+    return (
+        spark.readStream.format("parquet")
+        .schema(physical)
+        .option("maxFilesPerTrigger", 64)
+        .option("pathGlobFilter", file)
+        .load(sf_dir)
+    )
+
+
+def _drain_to_memory(df: DataFrame, label: str, output_mode: str) -> str:
+    """Drain a streaming frame into a memory sink (``availableNow``,
+    checked await, state partitions pinned) and return the sink's
+    table name. The sink keeps its rows in memory, so the checkpoint
+    directory is removed as soon as the stream has stopped."""
+    name = f"{label}_{os.getpid()}_{uuid.uuid4().hex[:8]}"
+    with (
+        tempfile.TemporaryDirectory(prefix=f"ck_{label}_") as ck,
+        _state_partitions(df.sparkSession),
+    ):
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        _await_or_raise(q, label)
+    return name
+
+
 @query(
     "streaming_windowed_counts",
     oracle="""
@@ -117,21 +159,7 @@ def streaming_windowed_counts(
     finite and the full result is the contract; a continuous
     deployment would run append mode + watermark (pinned by
     ``tests/test_streaming*.py``) with this same dataflow."""
-    # The stream needs an explicit schema: take the PHYSICAL schema
-    # from a batch read of the same file (load_table's ts
-    # normalization happens below, after the source).
-    path = os.path.join(sf_dir, "events.parquet")
-    physical = spark.read.parquet(path).schema
-    # The file source wants a DIRECTORY; point it at sf_dir and let
-    # pathGlobFilter select just the events file.
-    src = (
-        spark.readStream.format("parquet")
-        .schema(physical)
-        .option("maxFilesPerTrigger", 64)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    ev = src.select(
+    ev = _table_stream(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
     )
     agg = (
@@ -150,19 +178,9 @@ def streaming_windowed_counts(
             "total_value",
         )
     )
-    name = f"swc_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    ck = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, "streaming_windowed_counts")
-    return spark.table(name)
+    return spark.table(
+        _drain_to_memory(agg, "streaming_windowed_counts", "complete")
+    )
 
 
 @query(
@@ -205,16 +223,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key instead of growing forever."""
     from ..streaming.events_stream import view_to_purchase_join
 
-    physical = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
-    src = (
-        spark.readStream.format("parquet")
-        .schema(physical)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    ev = src.select(
+    ev = _table_stream(spark, sf_dir, "events").select(
         "event_id",
         F.col("ts").cast("timestamp").alias("ts"),
         "user_id",
@@ -222,19 +231,9 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     joined = view_to_purchase_join(ev)
-    name = f"ssj_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    ck = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, "streaming_stream_join")
-    return spark.table(name)
+    return spark.table(
+        _drain_to_memory(joined, "streaming_stream_join", "append")
+    )
 
 
 @query(
@@ -263,30 +262,12 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-state production variant (dropDuplicatesWithinWatermark)
     is pinned in tests/test_streaming_dedup_watermark.py — here the
     unbounded form is correct because the run is finite."""
-    physical = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
-    src = (
-        spark.readStream.format("parquet")
-        .schema(physical)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
+    ev = _table_stream(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type"
     )
-    ev = src.select("event_id", "user_id", "event_type")
     doubled = ev.union(ev)
     deduped = doubled.dropDuplicates(["event_id"])
-    name = f"sdd_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    ck = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    with _state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, "streaming_dedup_counts")
+    name = _drain_to_memory(deduped, "streaming_dedup_counts", "append")
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -344,15 +325,7 @@ def streaming_session_window_counts(
     drain; a continuous deployment runs append mode + watermark so
     closed sessions emit and evict (pinned in tests/test_streaming.py)
     with this same dataflow."""
-    path = os.path.join(sf_dir, "events.parquet")
-    physical = spark.read.parquet(path).schema
-    src = (
-        spark.readStream.format("parquet")
-        .schema(physical)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    ev = src.select(
+    ev = _table_stream(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
     agg = (
@@ -366,19 +339,9 @@ def streaming_session_window_counts(
             "n_events",
         )
     )
-    name = f"ssw_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    ck = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, "streaming_session_window_counts")
-    return spark.table(name)
+    return spark.table(
+        _drain_to_memory(agg, "streaming_session_window_counts", "complete")
+    )
 
 
 HOP_W_MIN = 60  # hopping window width (shared with events.py geometry)
@@ -436,16 +399,7 @@ def streaming_hopping_counts(
     here) — the state-sizing note in ``streaming/``'s watermark
     tests; production would run append mode + watermark so state
     stays bounded by the lateness horizon, same dataflow."""
-    path = os.path.join(sf_dir, "events.parquet")
-    physical = spark.read.parquet(path).schema
-    src = (
-        spark.readStream.format("parquet")
-        .schema(physical)
-        .option("maxFilesPerTrigger", 64)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    ev = src.select(
+    ev = _table_stream(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "event_type"
     )
     agg = (
@@ -471,19 +425,9 @@ def streaming_hopping_counts(
             ).alias("error_rate"),
         )
     )
-    name = f"shc_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    ck = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, "streaming_hopping_counts")
-    return spark.table(name)
+    return spark.table(
+        _drain_to_memory(agg, "streaming_hopping_counts", "complete")
+    )
 
 
 @query("streaming_sprt_monitor", oracle=None)  # oracle registered below
@@ -511,16 +455,7 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stattests import _sprt_sql
     from .textops import hash60_spark
 
-    physical = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
-    src = (
-        spark.readStream.format("parquet")
-        .schema(physical)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    ev = src.select(
+    ev = _table_stream(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"),
         "user_id",
         "event_type",
@@ -534,21 +469,10 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("dp"),
     )
-    name = f"sprt_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    ck = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    with _state_partitions(spark):
-        q = (
-            per_user.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # The decision SQL below reads the sink's cumulative per-user
-        # snapshot; a partial snapshot would silently emit wrong
-        # LLR/decisions, so a timeout here must be loud, not quiet.
-        _await_or_raise(q, "streaming_sprt_monitor")
+    # The decision SQL below reads the sink's cumulative per-user
+    # snapshot; a partial snapshot would silently emit wrong
+    # LLR/decisions, so the drain's timeout is loud, not quiet.
+    name = _drain_to_memory(per_user, "streaming_sprt_monitor", "complete")
     return spark.sql(
         _sprt_sql(
             hash60_spark("CAST(user_id AS STRING)"),
@@ -611,16 +535,7 @@ def streaming_token_budget_monitor(
     aggregate state is |sources| rows. A continuous deployment runs
     the same dataflow in update mode with the flag as the alert
     channel."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    physical = spark.read.parquet(path).schema
-    src = (
-        spark.readStream.format("parquet")
-        .schema(physical)
-        .option("maxFilesPerTrigger", 64)
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
-    toks = src.select(
+    toks = _table_stream(spark, sf_dir, "documents").select(
         "source",
         F.expr(f"CAST(size({_TOKENS_SPARK_SQ}) AS BIGINT)").alias("n_tok"),
     )
@@ -629,19 +544,9 @@ def streaming_token_budget_monitor(
         F.sum("n_tok").cast("bigint").alias("n_tokens"),
         (F.sum("n_tok") > STREAM_SRC_TOKEN_CAP).alias("over_budget"),
     )
-    name = f"stb_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    ck = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, "streaming_token_budget_monitor")
-    return spark.table(name)
+    return spark.table(
+        _drain_to_memory(agg, "streaming_token_budget_monitor", "complete")
+    )
 
 
 @query(
@@ -673,40 +578,27 @@ def streaming_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries prior files by reference (no history rewrite); the replay
     costs one guard read per batch, no data writes. The final read is
     a plain scan of the committed files + one hash aggregate."""
-    path = os.path.join(sf_dir, "events.parquet")
-    physical = spark.read.parquet(path).schema
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.format("parquet")
-            .schema(physical)
-            .option("maxFilesPerTrigger", 64)
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-            .select(
-                "event_id",
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-            )
-        )
-
     from ..sources.versioned_table import read_version
     from ..streaming.versioned_sink import append_stream_versioned
 
+    src = _table_stream(spark, sf_dir, "events").select(
+        "event_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+    )
     name = f"svi_{os.getpid()}_{uuid.uuid4().hex[:8]}"
     root = tempfile.mkdtemp(prefix=f"{name}_root_")
-    with _state_partitions(spark):
-        q = append_stream_versioned(
-            src(), root, tempfile.mkdtemp(prefix=f"ck_{name}_a_")
-        )
+    with (
+        tempfile.TemporaryDirectory(prefix=f"ck_{name}_") as ck,
+        _state_partitions(spark),
+    ):
+        q = append_stream_versioned(src, root, os.path.join(ck, "a"))
         _await_or_raise(q, "streaming_versioned_ingest")
         # rebuilt-checkpoint replay: batch ids restart at 0; the
         # manifest watermark must skip them all
-        q2 = append_stream_versioned(
-            src(), root, tempfile.mkdtemp(prefix=f"ck_{name}_b_")
-        )
+        q2 = append_stream_versioned(src, root, os.path.join(ck, "b"))
         _await_or_raise(q2, "streaming_versioned_ingest (replay)")
     t = read_version(spark, root)
     return t.groupBy("event_type").agg(
@@ -746,40 +638,25 @@ def streaming_quantile_sketch_maintenance(
     Scale: per batch the standing table is ≤ |types|·|grid| rows; the
     quantile read never touches raw history (the SLA-read pattern the
     rollup exists for)."""
-    path = os.path.join(sf_dir, "events.parquet")
-    physical = spark.read.parquet(path).schema
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.format("parquet")
-            .schema(physical)
-            .option("maxFilesPerTrigger", 64)
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-            .select("event_type", "value")
-        )
-
     from ..streaming.quantile_maintenance import (
         maintain_value_histograms,
         read_standing_quantiles,
     )
 
+    src = _table_stream(spark, sf_dir, "events").select("event_type", "value")
     name = f"qsm_{os.getpid()}_{uuid.uuid4().hex[:8]}"
     state = os.path.join(
         tempfile.mkdtemp(prefix=f"{name}_state_"), "hist"
     )
-    with _state_partitions(spark):
-        q = maintain_value_histograms(
-            spark, src(), state, tempfile.mkdtemp(prefix=f"ck_{name}_a_")
-        )
+    with (
+        tempfile.TemporaryDirectory(prefix=f"ck_{name}_") as ck,
+        _state_partitions(spark),
+    ):
+        q = maintain_value_histograms(spark, src, state, os.path.join(ck, "a"))
         _await_or_raise(q, "streaming_quantile_sketch_maintenance")
         # rebuilt-checkpoint replay: the batch-id gate must no-op
-        q2 = maintain_value_histograms(
-            spark, src(), state, tempfile.mkdtemp(prefix=f"ck_{name}_b_")
-        )
-        _await_or_raise(
-            q2, "streaming_quantile_sketch_maintenance (replay)"
-        )
+        q2 = maintain_value_histograms(spark, src, state, os.path.join(ck, "b"))
+        _await_or_raise(q2, "streaming_quantile_sketch_maintenance (replay)")
     return read_standing_quantiles(spark, state)
 
 
@@ -823,39 +700,28 @@ def streaming_ahash_fingerprint_maintenance(
     never re-read — exactly the store
     ``multimodal_ahash_incremental``'s daily screen band-joins
     against."""
-    from .multimodal import _MIME_CASE
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    physical = spark.read.parquet(path).schema
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.format("parquet")
-            .schema(physical)
-            .option("maxFilesPerTrigger", 64)
-            .option("pathGlobFilter", "documents.parquet")
-            .load(sf_dir)
-            .filter(F.expr(_MIME_CASE) == F.lit("image/png"))
-            .select(F.col("doc_id").alias("media_id"))
-        )
-
     from ..streaming.ahash_maintenance import (
         maintain_ahash_index,
         read_fingerprints,
     )
+    from .multimodal import _MIME_CASE
 
+    src = (
+        _table_stream(spark, sf_dir, "documents")
+        .filter(F.expr(_MIME_CASE) == F.lit("image/png"))
+        .select(F.col("doc_id").alias("media_id"))
+    )
     name = f"afm_{os.getpid()}_{uuid.uuid4().hex[:8]}"
     state = os.path.join(tempfile.mkdtemp(prefix=f"{name}_state_"), "fp")
-    with _state_partitions(spark):
-        q = maintain_ahash_index(
-            spark, src(), state, tempfile.mkdtemp(prefix=f"ck_{name}_a_")
-        )
+    with (
+        tempfile.TemporaryDirectory(prefix=f"ck_{name}_") as ck,
+        _state_partitions(spark),
+    ):
+        q = maintain_ahash_index(spark, src, state, os.path.join(ck, "a"))
         _await_or_raise(q, "streaming_ahash_fingerprint_maintenance")
         # rebuilt-checkpoint replay: the batch-id gate must no-op —
         # times_seen stays 1 or the oracle hash breaks
-        q2 = maintain_ahash_index(
-            spark, src(), state, tempfile.mkdtemp(prefix=f"ck_{name}_b_")
-        )
+        q2 = maintain_ahash_index(spark, src, state, os.path.join(ck, "b"))
         _await_or_raise(
             q2, "streaming_ahash_fingerprint_maintenance (replay)"
         )

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 
 # Shared vocabulary for stopword/marker metrics. Tuple order matters
 # only for readability; membership tests are order-free.
@@ -857,7 +857,7 @@ def text_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .textops import hash60_spark  # self-import safe at module level
 
-    grams = persist_tracked(  # feeds the eval set, the train side, and sizes
+    grams = (  # feeds the eval set, the train side, and sizes
         docs.select("doc_id", F.expr(TOKENS_SPARK).alias("toks"))
         .select(
             "doc_id",
@@ -868,6 +868,7 @@ def text_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g"),
         )
+        .persist()
     )
     eval_grams = (
         grams.filter(F.col("doc_id") % 100 < EVAL_PCT).select("g").distinct()
@@ -1292,8 +1293,9 @@ def text_unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = spread.select(
         "doc_id", F.explode(F.expr(TOKENS_SPARK)).alias("token")
     )
-    per_doc_tok = persist_tracked(
+    per_doc_tok = (
         occ.groupBy("token", "doc_id").agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
     )
     vocab = per_doc_tok.groupBy("token").agg(F.sum("cnt").alias("n_tok"))
     total = vocab.agg(F.sum("n_tok").alias("total"))
@@ -1365,7 +1367,7 @@ def _bpe_word_frame(spark: SparkSession, sf_dir: str):
             "freq",
         )
     )
-    return spread, persist_tracked(words)
+    return spread, words.persist()
 
 
 def _bpe_round_best(words) -> DataFrame:
@@ -1394,7 +1396,7 @@ def _bpe_round_best(words) -> DataFrame:
 def _bpe_apply_merge(words, best) -> DataFrame:
     """Apply the broadcast 1-row merge to every word (greedy
     left-to-right Sennrich fold). r16: the next round's frame is
-    lazily localCheckpointed (was persist_tracked) — round r is read
+    lazily localCheckpointed (was persisted) — round r is read
     twice by round r+1 (pair argmax + merge apply), and a persist
     dedupes the EXECUTION but keeps the whole 2^r-copy lineage in
     every later round's analyzed plan (the kmeans cent-chain lesson;
@@ -1681,12 +1683,13 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.expr(TOKENS_SPARK)).alias("pos0", "w"),
     ).select("doc_id", "w", (F.col("pos0") + 1).alias("pos"))
     win = Window.partitionBy("doc_id").orderBy("pos")
-    nonstop = persist_tracked(
+    nonstop = (
         tok.filter(
             (~F.col("w").isin(*STOPWORDS)) & (F.length("w") > 0)
         ).withColumn("grp", F.col("pos") - F.row_number().over(win))
+        .persist()
     )
-    phr = persist_tracked(
+    phr = (
         nonstop.groupBy("doc_id", "grp").agg(
             F.array_join(
                 F.transform(
@@ -1699,6 +1702,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("phrase"),
             F.count(F.lit(1)).alias("plen"),
         )
+        .persist()
     )
     wstat = (
         nonstop.join(phr, ["doc_id", "grp"])
@@ -1802,10 +1806,11 @@ def text_bigram_lm_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("doc_id", "p.bigram", "p.w1")
-    pd_ = persist_tracked(
+    pd_ = (
         bg.groupBy("bigram", "w1", "doc_id").agg(
             F.count(F.lit(1)).alias("cnt")
         )
+        .persist()
     )
     bstat = pd_.groupBy("bigram").agg(F.sum("cnt").alias("n_bg"))
     ustat = pd_.groupBy("w1").agg(F.sum("cnt").alias("n_u"))
@@ -1973,16 +1978,18 @@ def _bigram_lm_frames(spark: SparkSession, sf_dir: str) -> dict:
             )
         ).alias("p"),
     ).select("doc_id", "bucket", "p.w1", "p.w2")
-    bg = persist_tracked(bg)  # feeds train counts AND test multiplicities
-    trainbg = persist_tracked(
+    bg = bg.persist()  # feeds train counts AND test multiplicities
+    trainbg = (
         bg.filter(F.col("bucket") < 90)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
+        .persist()
     )
-    vocab = persist_tracked(
+    vocab = (
         t.filter(F.col("bucket") < 90)
         .select(F.explode("toks").alias("w"))
         .distinct()
+        .persist()
     )
     vsize = vocab.agg((F.count(F.lit(1)) + 1).alias("v"))
     tb = (
@@ -2275,11 +2282,12 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract so both engines pick identical top-K sets."""
     docs = load_table(spark, sf_dir, "documents")
     spread = docs.repartition(spark.sparkContext.defaultParallelism)
-    vocab = persist_tracked(
+    vocab = (
         spread.select(F.explode(F.expr(TOKENS_SPARK)).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
+        .persist()
     )
     tot = vocab.agg(
         F.sum("freq").alias("total_occurrences"),
@@ -2497,9 +2505,7 @@ def text_source_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = spread.select(
         "source", F.explode(F.expr(TOKENS_SPARK)).alias("w")
     ).filter(F.length("w") > 0)
-    sc = persist_tracked(
-        tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c_s"))
-    )
+    sc = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c_s")).persist()
     gc = sc.groupBy("w").agg(F.sum("c_s").alias("c"))
     ns = sc.groupBy("source").agg(F.sum("c_s").alias("n_s"))
     n = gc.agg(F.sum("c").alias("n"))
@@ -3161,7 +3167,7 @@ def text_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ") * 1000000) AS BIGINT)"
         ).alias("sd_micro"),
     )
-    sd = persist_tracked(sd)
+    sd = sd.persist()
     tw = sd.agg(
         F.sum(F.col("n_rows") * F.col("sd_micro")).alias("tw")
     )
@@ -3174,7 +3180,7 @@ def text_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.expr(f"({NEYMAN_TOTAL} * n_rows * sd_micro) % tw").alias("rem"),
     )
-    base = persist_tracked(base)
+    base = base.persist()
     lo = base.agg(
         (F.lit(NEYMAN_TOTAL) - F.sum("n_base")).alias("leftover")
     )
@@ -3393,7 +3399,7 @@ def _dsir_docw(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"{hash60_spark('w')} % {DSIR_BUCKETS}").alias("b"),
         )
     )
-    occ = persist_tracked(occ)
+    occ = occ.persist()
     db = occ.groupBy("doc_id", "source", "b").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -4036,10 +4042,11 @@ def text_vocab_overlap_sources(
     wsrc = Window.partitionBy("source").orderBy(
         F.col("freq").desc(), F.col("w").asc()
     )
-    topk = persist_tracked(
+    topk = (
         vocab.withColumn("rn", F.row_number().over(wsrc))
         .filter(F.col("rn") <= VOCAB_OVERLAP_K)
         .select("source", "w")
+        .persist()
     )
     sizes = topk.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("k_sz")
@@ -4552,7 +4559,7 @@ def text_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (mixbase/mixlo/caps) references the mixagg chain repeatedly, so
     # an un-cut kept re-ran the three screening pipelines per
     # reference (168 Exchanges, 119 stage jobs measured; guide §2.4).
-    kept = persist_tracked(kept)
+    kept = kept.persist()
     kept.createOrReplaceTempView("mixplan_kept")
     docs.select("source").distinct().createOrReplaceTempView(
         "mixplan_srcs"
@@ -4684,7 +4691,7 @@ def text_mixture_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     read it, and without the cut the three screening joins would
     execute twice."""
     kept, docs = _mixture_kept(spark, sf_dir)
-    kept = persist_tracked(kept)
+    kept = kept.persist()
     kept.createOrReplaceTempView("mixexec_kept")
     docs.select("source").distinct().createOrReplaceTempView(
         "mixexec_srcs"
@@ -4958,7 +4965,7 @@ def text_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda e: hash60_spark(e.replace("VARCHAR", "STRING")),
         )
     )
-    persist_tracked(split)
+    split.persist()
     split.createOrReplaceTempView("nb_split")
     return spark.sql(
         _nb_sql(
@@ -5157,7 +5164,7 @@ def text_logreg_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("lr_documents")
     feats = spark.sql(_lr_feature_select("spark", "lr_documents"))
-    persist_tracked(feats)
+    feats.persist()
     feats.createOrReplaceTempView("lr_features")
     f_cte = "f AS (SELECT doc_id, x1, x2, y FROM lr_features)"
     _lr_train_weights_spark(spark, f_cte, "lr_w")
@@ -6038,7 +6045,7 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("calib_documents")
     feats = spark.sql(_lr_feature_select("spark", "calib_documents"))
-    persist_tracked(feats)
+    feats.persist()
     feats.createOrReplaceTempView("calib_features")
     f_cte = "f AS (SELECT doc_id, x1, x2, y FROM calib_features)"
     _lr_train_weights_spark(spark, f_cte, "calib_w")

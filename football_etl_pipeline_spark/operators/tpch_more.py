@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
 from ..sources.testdata import load_table
-from .registry import persist_tracked, query
+from .registry import query
 
 _NET = "l_extendedprice * (1 - l_discount)"
 
@@ -493,7 +493,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus") == "F"
     )
     li = load_table(spark, sf_dir, "lineitem")
-    l = persist_tracked(
+    l = (
         li.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
             "l_orderkey",
@@ -502,6 +502,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
             ).alias("is_late"),
         )
+        .persist()
     )
     l1 = l.filter("is_late").alias("l1")
     other = l.select("l_orderkey", "l_suppkey").alias("l2")
@@ -612,10 +613,11 @@ def _ntile4_distributed(df: DataFrame, order_cols, out_col: str) -> DataFrame:
     window is partitioned; driver traffic is P rows. This replaces
     the r3 formulation (three ``Window.orderBy`` globals that Spark
     itself warned would move all data to a single partition)."""
-    part = persist_tracked(
+    part = (
         df.repartitionByRange(RFM_RANGE_PARTS, *order_cols).withColumn(
             "_pid", F.spark_partition_id()
         )
+        .persist()
     )
     cnt = {
         r["_pid"]: r["n"]
@@ -835,7 +837,7 @@ def lineitem_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decimal import Decimal
 
     li = load_table(spark, sf_dir, "lineitem")
-    per_part = persist_tracked(
+    per_part = (
         li.groupBy("l_partkey")
         .agg(
             F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("rev")
@@ -844,6 +846,7 @@ def lineitem_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             RFM_RANGE_PARTS, F.col("rev").desc(), F.col("l_partkey").asc()
         )
         .withColumn("_pid", F.spark_partition_id())
+        .persist()
     )
     partials = {
         r["_pid"]: r["s"]
@@ -1094,7 +1097,7 @@ def orders_chi2_priority_status(
         F.col("o_orderpriority").alias("pri"),
         F.col("o_orderstatus").alias("st"),
     ).agg(F.count(F.lit(1)).alias("o"))
-    obs = persist_tracked(obs)
+    obs = obs.persist()
     rt = obs.groupBy("pri").agg(F.sum("o").alias("r"))
     ct = obs.groupBy("st").agg(F.sum("o").alias("c"))
     n = obs.agg(F.sum("o").alias("n"))
@@ -1169,7 +1172,7 @@ def orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("rev"),
     )
-    monthly = persist_tracked(monthly)
+    monthly = monthly.persist()
     tot = monthly.agg(
         F.sum("rev").alias("trev"), F.count(F.lit(1)).alias("n_months")
     )
@@ -1252,11 +1255,12 @@ def orders_mutual_information(
     contingency aggregate; everything after runs on ≤|pri|×|st| rows
     with broadcast marginal joins."""
     o = load_table(spark, sf_dir, "orders")
-    obs = persist_tracked(
+    obs = (
         o.groupBy(
             F.col("o_orderpriority").alias("pri"),
             F.col("o_orderstatus").alias("st"),
         ).agg(F.count(F.lit(1)).alias("o"))
+        .persist()
     )
     rt = obs.groupBy("pri").agg(F.sum("o").alias("r"))
     ct = obs.groupBy("st").agg(F.sum("o").alias("c"))
@@ -1534,10 +1538,11 @@ def orders_daily_autocorrelation(
     (≤ 7·days rows), so the query is scan-bound at any scale —
     no window over the raw table, no driver collect."""
     o = load_table(spark, sf_dir, "orders")
-    daily = persist_tracked(
+    daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
             F.count(F.lit(1)).alias("n")
         )
+        .persist()
     )
     lags = spark.range(1, ACF_MAX_LAG + 1).select(
         F.col("id").cast("bigint").alias("lag")
@@ -1642,7 +1647,7 @@ def customer_nation_herfindahl(
             ).alias("rev_c")
         )
     )
-    cr = persist_tracked(cr)
+    cr = cr.persist()
     tot = cr.groupBy("nationkey").agg(
         F.sum("rev_c").cast("bigint").alias("t"),
         F.count(F.lit(1)).alias("n_customers"),

@@ -44,6 +44,14 @@ class TransformResult:
     good: DataFrame         # unified schema columns, ready to load
     dead_letter: DataFrame  # {"PK", "files", "error"} — one row per failed group
     dropped: DataFrame      # probe-miss standings rows (logged skips, not failures)
+    cached: tuple[DataFrame, ...] = ()  # frames run_transform cached
+
+    def release(self) -> None:
+        """Unpersist the frames ``run_transform`` cached, once the
+        results are written. A stream calls this per micro-batch, or
+        every batch's caches outlive it for the life of the stream."""
+        for df in self.cached:
+            df.unpersist()
 
 
 def run_transform(
@@ -162,7 +170,10 @@ def run_transform(
             "error",
         )
     )
-    return TransformResult(good=good, dead_letter=dead_letter, dropped=norm.dropped)
+    # enforced first: it reads the endpoint caches, and dropping a
+    # cache under a still-cached dependent re-plans the dependent
+    cached = tuple(df for df in (enforced, teams, standings) if df is not None)
+    return TransformResult(good, dead_letter, norm.dropped, cached)
 
 
 def write_unified(df: DataFrame, out_path: str) -> dict:

@@ -225,6 +225,7 @@ def run_streaming_transform(
             .write.mode("overwrite")
             .json(os.path.join(dead_letter_path, f"batch_id={batch_id}"))
         )
+        res.release()
 
     writer = (
         read_landing_stream(spark, landing_root, api_name, max_files_per_trigger)

@@ -747,21 +747,14 @@ def test_link_prediction_wedge_is_equi_topk_is_takeordered(spark):
     assert "TakeOrderedAndProject" in final
 
 
-def test_link_prediction_cap_mode_plan_shapes(spark, monkeypatch):
-    """Both settings of the LP_CAP_MODE_ENV knob (the r9-measured
-    exchange-reuse vs generation-volume trade, promoted to config in
-    r11) must keep their distinct physical shapes: "after" applies the
-    degree cap ONCE, post-generation (one ``d <= 256`` filter in the
-    executed plan); "before" pushes it below BOTH wedge sides so
-    hot-hub wedges are never generated (two cap filters). Either way
-    the wedge generator stays an equi join and top-K stays
-    TakeOrdered (the companion test pins those for the default)."""
+def test_link_prediction_cap_mode_plan_shapes(spark):
+    """The link-prediction degree cap prunes wedges ONCE,
+    post-generation (one ``d <= 256`` filter in the executed plan), so
+    both wedge sides stay the same frame and share one exchange; the
+    wedge generator stays an equi join and top-K stays TakeOrdered."""
     import re
 
-    from football_etl_pipeline_spark.operators.graph import (
-        LP_CAP_MODE_ENV,
-        LP_CENTER_DEG_CAP,
-    )
+    from football_etl_pipeline_spark.operators.graph import LP_CENTER_DEG_CAP
 
     # executedPlan().toString() prints tree nodes like
     # "+- Filter (d#88L <= 256)" (the "Condition :" form is only in
@@ -773,15 +766,10 @@ def test_link_prediction_cap_mode_plan_shapes(spark, monkeypatch):
     cap_filter = re.compile(
         rf"Filter [^\n]*d#\d+L <= {LP_CENTER_DEG_CAP}"
     )
-    monkeypatch.setenv(LP_CAP_MODE_ENV, "after")
-    final_after = _final(_plan(spark, "graph_link_prediction"))
-    assert len(cap_filter.findall(final_after)) == 1, "after: cap once"
-    monkeypatch.setenv(LP_CAP_MODE_ENV, "before")
-    final_before = _final(_plan(spark, "graph_link_prediction"))
-    assert len(cap_filter.findall(final_before)) == 2, "before: cap twice"
-    for final in (final_after, final_before):
-        assert "CartesianProduct" not in final
-        assert "TakeOrderedAndProject" in final
+    final = _final(_plan(spark, "graph_link_prediction"))
+    assert len(cap_filter.findall(final)) == 1, "after: cap once"
+    assert "CartesianProduct" not in final
+    assert "TakeOrderedAndProject" in final
 
 
 def test_rolling_active_users_is_explode_not_range_join(spark):

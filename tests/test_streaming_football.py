@@ -136,6 +136,28 @@ def test_streaming_landing_batch_size_is_bounded(spark, tmp_path):
     assert len(_warehouse_rows(spark, warehouse)) == 9  # 3 groups x 3 teams
 
 
+def test_stream_releases_each_batch_caches(spark, tmp_path):
+    """Every micro-batch's ``run_transform`` caches (the two endpoint
+    reads and the enforced frame) are released by the batch itself: a
+    long-running stream must not keep three cached frames per batch."""
+    from football_etl_pipeline_spark.operators.registry import release_checkpoints
+
+    release_checkpoints(spark)
+    landing = str(tmp_path / "landing")
+    warehouse = str(tmp_path / "warehouse")
+    for i in range(2):
+        stage(landing, API, "teams", apifootball_teams(), league=LEAGUE + i)
+        stage(landing, API, "standings", apifootball_standings(), league=LEAGUE + i)
+    q = run_streaming_transform(
+        spark, API, landing, warehouse, str(tmp_path / "dead"),
+        str(tmp_path / "ck"), max_files_per_trigger=2,
+    )
+    q.awaitTermination(300)
+    assert q.lastProgress["batchId"] >= 1, "cap of 2 should split 4 files"
+    assert len(_warehouse_rows(spark, warehouse)) == 6  # 2 groups x 3 teams
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_group_split_across_batches_does_not_dead_letter(spark, tmp_path):
     """maxFilesPerTrigger boundaries give NO group guarantee (file
     order ties on same-millisecond mtimes break arbitrarily), so a

@@ -111,6 +111,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     from football_etl_pipeline_spark.operators import QUERIES
+    from football_etl_pipeline_spark.operators.registry import release_checkpoints
     from football_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("dump_plans")
@@ -132,6 +133,7 @@ def main() -> None:
         # (isFinalPlan=true), not the static pre-execution one.
         df.count()
         plan = df._jdf.queryExecution().executedPlan().toString()
+        release_checkpoints(spark)
         lines = [ln.rstrip()[:160] for ln in normalize_plan(plan).splitlines()]
         # Iterative queries (BPE, MMR) print every unrolled round — the
         # shape evidence is in the first rounds; cap the dump.
