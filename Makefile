@@ -5,8 +5,9 @@ SF_SMALL := /root/testdata/sf0.001
 SF_MED   := /root/testdata/sf0.01
 SF_BIG   := /root/testdata/sf0.1
 ROUND    ?= 8
+SEED     ?= 1
 
-.PHONY: test canary gate verify verify-big bench bench-smoke entry plans scale round-close
+.PHONY: test canary gate verify verify-big bench bench-smoke perfbench entry plans scale round-close
 
 test:        ## tier-1: full pytest suite, exactly as ROADMAP.md runs it
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
@@ -29,6 +30,10 @@ bench:       ## headline bench at sf0.1 (one JSON line on stdout)
 
 bench-smoke: ## fast bench smoke at sf0.01
 	SPARK_GRAFT_SF_DIR=$(SF_MED) python bench.py
+
+perfbench:   ## repo benchmark (BENCHMARK.json): tail then etl, one run each
+	python3 perfbench/run.py --workload tail --seed $(SEED) --seconds 5 --trace 0
+	python3 perfbench/run.py --workload etl --seed $(SEED) --seconds 5 --trace 0
 
 entry:       ## driver t1 smoke: entry() runs and returns rows
 	python -c "from football_etl_pipeline_spark.session import get_spark; \

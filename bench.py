@@ -453,7 +453,9 @@ def warm_session(spark, sf_dir: str) -> None:
     start-up and codegen compile cost isn't attributed to the first
     query, then warm the Python/Arrow worker pool (mapInPandas queries
     otherwise pay the per-session daemon cold start inside their
-    timing)."""
+    timing). The table touch also fills the catalog's schema memo
+    (``sources/testdata.py``), so no timed query pays a table's one
+    schema-inference job; the memo holds schemas, not rows."""
     from football_etl_pipeline_spark.sources.testdata import load_tables
 
     for df in load_tables(spark, sf_dir).values():

@@ -34,6 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.testdata import table_schema
 from .registry import query
 
 STREAM_WINDOW = "5 minutes"
@@ -88,14 +89,14 @@ class _state_partitions:
 
 def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source stream over one testdata table. A stream needs an
-    explicit schema: take the PHYSICAL schema from a batch read of the
-    same file (load_table's ts normalization is left to the caller).
+    explicit schema: take the file's PHYSICAL schema from the catalog's
+    schema memo (load_table's ts normalization is left to the caller).
     The file source wants a DIRECTORY, so point it at sf_dir and let
     pathGlobFilter select the table's file. Each table is a single
     file, so the backlog drains in one micro-batch; maxFilesPerTrigger
     bounds per-batch work on a multi-file backlog."""
     file = f"{table}.parquet"
-    physical = spark.read.parquet(os.path.join(sf_dir, file)).schema
+    physical = table_schema(spark, os.path.join(sf_dir, file))
     return (
         spark.readStream.format("parquet")
         .schema(physical)
@@ -105,26 +106,33 @@ def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     )
 
 
-def _drain_to_memory(df: DataFrame, label: str, output_mode: str) -> str:
+def _drain_to_memory(df: DataFrame, label: str, output_mode: str) -> DataFrame:
     """Drain a streaming frame into a memory sink (``availableNow``,
-    checked await, state partitions pinned) and return the sink's
-    table name. The sink keeps its rows in memory, so the checkpoint
-    directory is removed as soon as the stream has stopped."""
+    checked await, state partitions pinned) and return the sink as a
+    batch frame. The sink keeps its rows in memory, so the checkpoint
+    directory is removed as soon as the stream has stopped. The frame
+    is bound to the sink when it is returned, so the sink's temp view
+    is dropped at once; the rows go when the frame does, not at the
+    end of the session."""
+    spark = df.sparkSession
     name = f"{label}_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    with (
-        tempfile.TemporaryDirectory(prefix=f"ck_{label}_") as ck,
-        _state_partitions(df.sparkSession),
-    ):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, label)
-    return name
+    try:
+        with (
+            tempfile.TemporaryDirectory(prefix=f"ck_{label}_") as ck,
+            _state_partitions(spark),
+        ):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_or_raise(q, label)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -178,9 +186,7 @@ def streaming_windowed_counts(
             "total_value",
         )
     )
-    return spark.table(
-        _drain_to_memory(agg, "streaming_windowed_counts", "complete")
-    )
+    return _drain_to_memory(agg, "streaming_windowed_counts", "complete")
 
 
 @query(
@@ -231,9 +237,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     joined = view_to_purchase_join(ev)
-    return spark.table(
-        _drain_to_memory(joined, "streaming_stream_join", "append")
-    )
+    return _drain_to_memory(joined, "streaming_stream_join", "append")
 
 
 @query(
@@ -267,9 +271,8 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     doubled = ev.union(ev)
     deduped = doubled.dropDuplicates(["event_id"])
-    name = _drain_to_memory(deduped, "streaming_dedup_counts", "append")
     return (
-        spark.table(name)
+        _drain_to_memory(deduped, "streaming_dedup_counts", "append")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_unique_events"),
@@ -339,9 +342,7 @@ def streaming_session_window_counts(
             "n_events",
         )
     )
-    return spark.table(
-        _drain_to_memory(agg, "streaming_session_window_counts", "complete")
-    )
+    return _drain_to_memory(agg, "streaming_session_window_counts", "complete")
 
 
 HOP_W_MIN = 60  # hopping window width (shared with events.py geometry)
@@ -425,9 +426,7 @@ def streaming_hopping_counts(
             ).alias("error_rate"),
         )
     )
-    return spark.table(
-        _drain_to_memory(agg, "streaming_hopping_counts", "complete")
-    )
+    return _drain_to_memory(agg, "streaming_hopping_counts", "complete")
 
 
 @query("streaming_sprt_monitor", oracle=None)  # oracle registered below
@@ -472,13 +471,13 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The decision SQL below reads the sink's cumulative per-user
     # snapshot; a partial snapshot would silently emit wrong
     # LLR/decisions, so the drain's timeout is loud, not quiet.
-    name = _drain_to_memory(per_user, "streaming_sprt_monitor", "complete")
     return spark.sql(
         _sprt_sql(
             hash60_spark("CAST(user_id AS STRING)"),
             "BIGINT",
-            per_user_select=f"SELECT user_id, d0, dp FROM {name}",
-        )
+            per_user_select="SELECT user_id, d0, dp FROM {sink}",
+        ),
+        sink=_drain_to_memory(per_user, "streaming_sprt_monitor", "complete"),
     )
 
 
@@ -544,9 +543,7 @@ def streaming_token_budget_monitor(
         F.sum("n_tok").cast("bigint").alias("n_tokens"),
         (F.sum("n_tok") > STREAM_SRC_TOKEN_CAP).alias("over_budget"),
     )
-    return spark.table(
-        _drain_to_memory(agg, "streaming_token_budget_monitor", "complete")
-    )
+    return _drain_to_memory(agg, "streaming_token_budget_monitor", "complete")
 
 
 @query(

@@ -20,6 +20,8 @@ MinHash family in ``dedup.py``).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -5209,6 +5211,10 @@ UG_MAX_PLEN = 4    # max piece length in the seed inventory
 UG_EM_ITERS = 2    # fixed EM rounds keep the oracle SQL-expressible
 UG_KEEP = 40       # multi-char pieces kept per prune (+ all 1-char)
 _UG_ZERO_ST = "0" * 18 + "|"
+# MIN(state) is an exact argmin only while every state cost fits the
+# 18-digit pad: a piece costs at most ln(2**63) nats (a ratio of BIGINT
+# counts) ×1e12 units, and a word has at most UG_MAX_WLEN pieces.
+assert UG_MAX_WLEN * math.log(2**63) * 1e12 < 10 ** (len(_UG_ZERO_ST) - 1)
 
 
 def _ug_spans() -> str:
