@@ -6,8 +6,9 @@ ONE compact JSON line: {"metric": ..., "value": total_sec, "unit":
 The per-query map on stdout is capped (slowest K queries) so the line
 stays well inside the driver's tail-capture window — BENCH_r06.json
 recorded ``"parsed": null`` because the full 70-entry map outgrew it.
-The FULL per-query map is written to ``BENCH_DETAIL.json`` next to
-this file (committed per round) and echoed to stderr.
+The FULL per-query map is echoed to stderr, and an ``official`` run
+(every HEADLINE query at the default SF dir) also writes it to
+``BENCH_DETAIL.json`` next to this file (committed per round).
 
 Each query is timed end-to-end including the action (count of the
 result) — i.e. full plan execution, not just planning — as the median
@@ -378,6 +379,7 @@ HEADLINE = [
 FAST_TIER_N = 46
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 # ---- plan fingerprints ------------------------------------------------
 #
@@ -437,9 +439,12 @@ def formatted_plan(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def tag_run(full_tier: bool) -> str:
-    """``official`` for a full HEADLINE run, ``adhoc`` for a tiered one."""
-    return "official" if full_tier else "adhoc"
+def tag_run(full_tier: bool, sf_dir: str) -> str:
+    """``official`` for a full HEADLINE run at ``DEFAULT_SF_DIR``,
+    ``adhoc`` for a tiered run or one at another SF dir (a smoke run
+    at sf0.01 must not overwrite the committed sf0.1 record)."""
+    same_dir = os.path.normpath(sf_dir) == os.path.normpath(DEFAULT_SF_DIR)
+    return "official" if full_tier and same_dir else "adhoc"
 
 
 def newest_snapshot() -> str | None:
@@ -466,7 +471,7 @@ def warm_session(spark, sf_dir: str) -> None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
@@ -529,7 +534,7 @@ def main() -> None:
     # makes each timing measure the query, not its predecessors'
     # garbage — exactly what a per-query steady-state number means.
     N_RUNS = 3
-    full_tier = tier in ("full", "")
+    tag = tag_run(tier in ("full", ""), sf_dir)
     timings: dict[str, float] = {}
     fingerprints: dict[str, str] = {}
     for name in headline:
@@ -588,8 +593,8 @@ def main() -> None:
         },
     }
     # Full record: committed file + stderr (never the driver-parsed line).
-    if full_tier:
-        # tiered runs must not clobber the committed full-sweep record
+    if tag == "official":
+        # adhoc runs must not clobber the committed full-sweep record
         with open(os.path.join(_REPO, "BENCH_DETAIL.json"), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
             f.write("\n")
@@ -612,7 +617,7 @@ def main() -> None:
                 "n_queries": len(timings),
                 "queries": slowest,
                 "detail": "BENCH_DETAIL.json",
-                "tag": tag_run(full_tier),
+                "tag": tag,
             }
         )
     )

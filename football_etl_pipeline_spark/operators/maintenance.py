@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import query
+from .registry import query, run_scratch_dir
 
 # Shared batch definitions (dialect-identical SQL fragments).
 _CORRECTIONS_W = "o_orderkey % 10 = 0"
@@ -26,63 +26,6 @@ _INSERT_OFFSET = 10_000_000
 # Re-price: exact in both engines (decimal multiply, back to double).
 _REPRICE_DUCK = "CAST(CAST(o_totalprice AS DECIMAL(18,6)) * 1.1 AS DOUBLE)"
 _REPRICE_SPARK = "CAST(CAST(o_totalprice AS DECIMAL(18,6)) * 1.1 AS DOUBLE)"
-
-def _run_scratch_dir(kind: str, sf_dir: str) -> str:
-    """Per-invocation scratch root for rewrite operators.
-
-    Unique per call (pid + uuid4) so concurrent runs — e.g. a gate
-    sweep and a bench on the same machine — never race on a shared
-    directory mid-rewrite, and registered for atexit removal (the
-    returned DataFrame reads the directory LAZILY, so cleanup cannot
-    happen before the caller's action; process exit is the earliest
-    safe point). Stale siblings from CRASHED runs are swept
-    best-effort on each call so the temp root doesn't accumulate —
-    but only dirs whose embedded owner pid is dead: a dir's mtime is
-    set at creation, and a long gate sweep (>1 h) plus a late-started
-    bench would otherwise let the bench delete the live sweep's
-    scratch before its lazy DataFrame is re-read. The age threshold
-    is a second gate for dirs from a rebooted machine where the pid
-    was recycled."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
-    base = os.path.join(tempfile.gettempdir(), "spark_graft_scratch")
-    os.makedirs(base, exist_ok=True)
-    now = time.time()
-    me = os.getpid()
-    for entry in os.listdir(base):
-        p = os.path.join(base, entry)
-        # layout: <kind>-<sf>-<pid>-<uuid8>; sweep only if the owning
-        # process is gone (or the name predates the pid scheme)
-        parts = entry.rsplit("-", 2)
-        owner = int(parts[1]) if len(parts) == 3 and parts[1].isdigit() else None
-        if owner is not None:
-            if owner == me:
-                continue
-            try:
-                os.kill(owner, 0)
-                continue  # owner alive — never touch its scratch
-            except ProcessLookupError:
-                pass  # owner dead — eligible
-            except PermissionError:
-                continue  # alive, other user
-        try:
-            if now - os.path.getmtime(p) > 3600:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-    root = os.path.join(
-        base,
-        f"{kind}-{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{os.getpid()}-{uuid.uuid4().hex[:8]}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
 
 _UPDATES_DUCK = f"""
       SELECT o_orderkey, o_custkey, o_orderstatus,
@@ -326,12 +269,12 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_compaction.py; they are filesystem facts DuckDB
     can't see.
 
-    Work dirs are per-invocation unique (``_run_scratch_dir``) —
+    Work dirs are per-invocation unique (``run_scratch_dir``) —
     concurrent gate + bench runs can't race, stale dirs are swept."""
     import os
 
     orders = load_table(spark, sf_dir, "orders")
-    root = _run_scratch_dir("compact", sf_dir)
+    root = run_scratch_dir("compact", sf_dir)
     frag, dst = os.path.join(root, "frag"), os.path.join(root, "compact")
     orders.repartition(64).write.mode("overwrite").parquet(frag)
     compact_table(spark, frag, dst, "o_orderkey", target_bytes=1024 * 1024)
@@ -530,7 +473,7 @@ def compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     li = load_table(spark, sf_dir, "lineitem").select(*_ZORDER_COLS)
-    dst = os.path.join(_run_scratch_dir("zorder", sf_dir), "zorder")
+    dst = os.path.join(run_scratch_dir("zorder", sf_dir), "zorder")
     zorder_cluster_table(spark, li, dst, "l_partkey", "l_suppkey", ZORDER_FILES)
     return spark.read.parquet(dst).select(*_ZORDER_COLS)
 
@@ -574,7 +517,7 @@ def versioned_orders_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     )
     merged = merge_upsert(base, _updates_batch(spark, sf_dir), "o_orderkey")
-    root = _run_scratch_dir("versioned", sf_dir)
+    root = run_scratch_dir("versioned", sf_dir)
     commit_version(base, root, "append")
     commit_version(merged, root, "overwrite")
     return snapshot_diff(spark, root, 1, 2, "o_orderkey")
@@ -648,7 +591,7 @@ def versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.col("o_orderpriority").alias("o_channel"),
     )
-    root = _run_scratch_dir("versioned_evo", sf_dir)
+    root = run_scratch_dir("versioned_evo", sf_dir)
     commit_version(v1, root, "append")
     commit_version(batch, root, "append")
     snap1 = read_version(spark, root, 1)
@@ -717,7 +660,7 @@ def scan_orc_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     orders = load_table(spark, sf_dir, "orders")
-    root = _run_scratch_dir("orc", sf_dir)
+    root = run_scratch_dir("orc", sf_dir)
     dst = os.path.join(root, "orders_orc")
     (
         orders.write.mode("overwrite")
@@ -792,7 +735,7 @@ def versioned_forget_customers(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     clustered = orders.repartitionByRange(_FORGET_FILES, "o_custkey")
-    root = _run_scratch_dir("forget", sf_dir)
+    root = run_scratch_dir("forget", sf_dir)
     commit_version(clustered, root, "append")
     delete_where(spark, root, "o_custkey", _FORGET_LO, _FORGET_HI)
     latest = read_version(spark, root)
@@ -845,7 +788,7 @@ def scan_text_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").cast("string"),
         ).alias("value")
     )
-    root = _run_scratch_dir("textlog", sf_dir)
+    root = run_scratch_dir("textlog", sf_dir)
     dst = os.path.join(root, "events_log")
     ev.write.mode("overwrite").text(dst)
     back = spark.read.text(dst)
@@ -930,7 +873,7 @@ def incremental_join_view_merge(
             F.sum(dec("o_totalprice")).alias("revenue"),
         )
     )
-    root = _run_scratch_dir("ivm", sf_dir)
+    root = run_scratch_dir("ivm", sf_dir)
     dst = os.path.join(root, "nation_view")
     view.write.mode("overwrite").parquet(dst)
     standing = spark.read.parquet(dst)
@@ -1019,7 +962,7 @@ def scan_parquet_schema_evolution(
     import os
 
     orders = load_table(spark, sf_dir, "orders")
-    root = _run_scratch_dir("schevo", sf_dir)
+    root = run_scratch_dir("schevo", sf_dir)
     dst = os.path.join(root, "orders_evo")
     gen1 = orders.filter(
         F.col("o_orderpriority") == "1-URGENT"
@@ -1115,7 +1058,7 @@ def versioned_retention_expiry(
         "o_orderpriority",
     )
     merged = merge_upsert(base, _updates_batch(spark, sf_dir), "o_orderkey")
-    root = _run_scratch_dir("retention", sf_dir)
+    root = run_scratch_dir("retention", sf_dir)
     commit_version(base, root, "append")
     commit_version(merged, root, "overwrite")
     delete_where(spark, root, "o_orderpriority", "5-LOW", "5-LOW")
@@ -1212,7 +1155,7 @@ def join_bucketed_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_ord, t_li = f"bkt_orders_{run}", f"bkt_lineitem_{run}"
     # external tables rooted in the atexit-cleaned scratch dir: the
     # catalog entries die with the session, the files at exit
-    root = _run_scratch_dir("bucketed", sf_dir)
+    root = run_scratch_dir("bucketed", sf_dir)
     write_bucketed_table(orders, t_ord, ["o_orderkey"], _BKT_N,
                          sort_cols=["o_orderkey"],
                          path=os.path.join(root, t_ord))

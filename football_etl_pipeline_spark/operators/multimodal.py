@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import query
+from .registry import query, run_scratch_dir
 
 FRAME_STRIDE = 64  # sample one "frame" byte every 64 payload bytes
 
@@ -2907,11 +2907,7 @@ def multimodal_ahash_incremental(
     # ingest-time face: the standing corpus arrived over prior days;
     # each day's merge decoded ITS batch only and folded fingerprints
     # into the store through the gated swap-write machinery.
-    import tempfile
-
-    state = os.path.join(
-        tempfile.mkdtemp(prefix="ahash_fp_store_"), "fp"
-    )
+    state = os.path.join(run_scratch_dir("ahash_fp_store", sf_dir), "fp")
     standing_rows = m.select("media_id").filter(~is_batch)
     for day in range(3):
         merge_batch_fingerprints(

@@ -16,6 +16,12 @@ order-insensitive value-hash. Two rules every operator follows:
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,6 +86,57 @@ def release_checkpoints(spark) -> int:
         jrdd.unpersist(True)
         n += 1
     return n
+
+
+def run_scratch_dir(kind: str, sf_dir: str) -> str:
+    """Per-invocation scratch root for operators whose returned frame
+    reads files they wrote (table rewrites, stream-maintained state).
+
+    Unique per call (pid + uuid4) so concurrent runs — e.g. a gate
+    sweep and a bench on the same machine — never race on a shared
+    directory mid-rewrite, and registered for atexit removal (the
+    returned DataFrame reads the directory LAZILY, so cleanup cannot
+    happen before the caller's action; process exit is the earliest
+    safe point). Stale siblings from CRASHED runs are swept
+    best-effort on each call so the temp root doesn't accumulate —
+    but only dirs whose embedded owner pid is dead: a dir's mtime is
+    set at creation, and a long gate sweep (>1 h) plus a late-started
+    bench would otherwise let the bench delete the live sweep's
+    scratch before its lazy DataFrame is re-read. The age threshold
+    is a second gate for dirs from a rebooted machine where the pid
+    was recycled."""
+    base = os.path.join(tempfile.gettempdir(), "spark_graft_scratch")
+    os.makedirs(base, exist_ok=True)
+    now = time.time()
+    me = os.getpid()
+    for entry in os.listdir(base):
+        p = os.path.join(base, entry)
+        # layout: <kind>-<sf>-<pid>-<uuid8>; sweep only if the owning
+        # process is gone (or the name predates the pid scheme)
+        parts = entry.rsplit("-", 2)
+        owner = int(parts[1]) if len(parts) == 3 and parts[1].isdigit() else None
+        if owner is not None:
+            if owner == me:
+                continue
+            try:
+                os.kill(owner, 0)
+                continue  # owner alive — never touch its scratch
+            except ProcessLookupError:
+                pass  # owner dead — eligible
+            except PermissionError:
+                continue  # alive, other user
+        try:
+            if now - os.path.getmtime(p) > 3600:
+                shutil.rmtree(p, ignore_errors=True)
+        except OSError:
+            pass
+    root = os.path.join(
+        base,
+        f"{kind}-{os.path.basename(os.path.normpath(sf_dir))}"
+        f"-{os.getpid()}-{uuid.uuid4().hex[:8]}",
+    )
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

@@ -134,10 +134,7 @@ def similarity_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, bucket first (LSH) or pre-partition by coarse quantizer so
     each executor only crosses its own cell.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-    ).withColumn("nrm", F.expr(_norm_spark("v")))
+    e = _normed(spark, sf_dir)
     # spread the probe side: the corpus is one input split, and the
     # n²/2 fold-dot evals otherwise run as ONE task (measured 22s →
     # 2.3s at sf0.1); the build side stays broadcast-sized
@@ -184,10 +181,7 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id) — 5 keys, trivially parallel. This is the exact-recall
     baseline ANN is measured against.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-    ).withColumn("nrm", F.expr(_norm_spark("v")))
+    e = _normed(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES)
     cos = F.expr(_dot_spark("q.v", "e.v")) / (F.col("q.nrm") * F.col("e.nrm"))
     scored = (
@@ -283,12 +277,7 @@ def similarity_ann_lsh(
     oracle); candidate generation is an equality join on
     (table, bucket); scoring joins back to the vectors only for the
     DISTINCT candidate pairs."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", F.expr(_norm_spark("v")))
-        .persist()
-    )
+    e = _normed(spark, sf_dir).persist()
     tables = []
     for t in range(ANN_TABLES):
         bits = " + ".join(
@@ -352,6 +341,77 @@ _CENT_DUCK = f"""
 """
 
 
+def _first_k_cent(e: DataFrame) -> DataFrame:
+    """The fixed IVF seed quantizer: the first IVF_K normed vectors as
+    (c_id, cv, cnrm) centroids — the Spark twin of ``_CENT_DUCK``."""
+    return e.filter(F.col("vec_id") < IVF_K).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("v").alias("cv"),
+        F.col("nrm").alias("cnrm"),
+    )
+
+
+def _ivf_aff(e: DataFrame, cent: DataFrame) -> DataFrame:
+    """Every vector's cosine ``ccos`` to each centroid of ``cent``
+    (c_id, cv, cnrm) and its rank ``crank`` among them (1 = the
+    vector's cell; ties to the lower c_id). One corpus scan ×
+    broadcast(K), persisted: the assignment and the query-probe sides
+    both read it."""
+    ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
+    wcell = Window.partitionBy("vec_id").orderBy(
+        F.col("ccos").desc(), F.col("c_id").asc()
+    )
+    return (
+        e.join(F.broadcast(cent))
+        .withColumn("ccos", ccos)
+        .withColumn("crank", F.row_number().over(wcell))
+        .persist()
+    )
+
+
+def _ivf_search(e: DataFrame, cent: DataFrame) -> DataFrame:
+    """IVF-flat search of the normed vectors ``e`` (vec_id, v, nrm)
+    over the centroids ``cent``: each vector joins its nearest cell,
+    each standing query probes its IVF_NPROBE nearest cells, and only
+    those cells' vectors are scored by exact cosine; top IVF_TOPK per
+    query, ties to the lower neighbor_id."""
+    aff = _ivf_aff(e, cent)
+    assign = aff.filter(F.col("crank") == 1).select(
+        "vec_id", "v", "nrm", F.col("c_id").alias("cell")
+    )
+    qcells = aff.filter(
+        (F.col("vec_id") < N_QUERIES) & (F.col("crank") <= IVF_NPROBE)
+    ).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+        F.col("c_id").alias("cell"),
+    )
+    qcos = F.expr(_dot_spark("qv", "v")) / (F.col("qnrm") * F.col("nrm"))
+    scored = (
+        F.broadcast(qcells)
+        .join(assign, (qcells.cell == assign.cell) & (assign.vec_id != qcells.q_id))
+        .select(
+            F.col("q_id").alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
+            qcos.alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= IVF_TOPK)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("cosine").cast("decimal(18,6)").cast("double").alias("cosine"),
+            "rnk",
+        )
+    )
+
+
 @query(
     "similarity_ann_ivf",
     oracle=f"""
@@ -400,59 +460,9 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic recall/latency dial is (K, nprobe), orthogonal to the
     plumbing shown. Multi-probe means a query can rank ~2/K of the
     corpus instead of all of it."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-    ).withColumn("nrm", F.expr(_norm_spark("v")))
-    cent = e.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
-    wcell = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("c_id").asc()
-    )
-    aff = (  # feeds both the assignment and the query-probe sides
-        e.join(F.broadcast(cent))
-        .withColumn("ccos", ccos)
-        .withColumn("crank", F.row_number().over(wcell))
-        .persist()
-    )
-    assign = aff.filter(F.col("crank") == 1).select(
-        "vec_id", "v", "nrm", F.col("c_id").alias("cell")
-    )
-    qcells = aff.filter(
-        (F.col("vec_id") < N_QUERIES) & (F.col("crank") <= IVF_NPROBE)
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("c_id").alias("cell"),
-    )
-    qcos = F.expr(_dot_spark("qv", "v")) / (F.col("qnrm") * F.col("nrm"))
-    scored = (
-        F.broadcast(qcells)
-        .join(assign, (qcells.cell == assign.cell) & (assign.vec_id != qcells.q_id))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            qcos.alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= IVF_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cosine").cast("decimal(18,6)").cast("double").alias("cosine"),
-            "rnk",
-        )
-    )
+    e = _normed(spark, sf_dir)
+    cent = _first_k_cent(e)
+    return _ivf_search(e, cent)
 
 
 # ---- int8 embedding quantization -------------------------------------
@@ -571,15 +581,8 @@ def embedding_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine reduces each task's output to ≤ K·DIM rows regardless of
     corpus size — the canonical iterative-ML shape on Spark (each
     Lloyd iteration is one such pass with re-broadcast centroids)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-    ).withColumn("nrm", F.expr(_norm_spark("v")))
-    cent = e.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
+    e = _normed(spark, sf_dir)
+    cent = _first_k_cent(e)
     ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()
@@ -865,50 +868,7 @@ def similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     green row certifies both."""
     e = _normed(spark, sf_dir).persist()
     cent = _train_centroids_df(e, KMEANS_ITERS)
-    ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
-    wcell = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("c_id").asc()
-    )
-    aff = (
-        e.join(F.broadcast(cent))
-        .withColumn("ccos", ccos)
-        .withColumn("crank", F.row_number().over(wcell))
-        .persist()
-    )
-    assign = aff.filter(F.col("crank") == 1).select(
-        "vec_id", "v", "nrm", F.col("c_id").alias("cell")
-    )
-    qcells = aff.filter(
-        (F.col("vec_id") < N_QUERIES) & (F.col("crank") <= IVF_NPROBE)
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("c_id").alias("cell"),
-    )
-    qcos = F.expr(_dot_spark("qv", "v")) / (F.col("qnrm") * F.col("nrm"))
-    scored = (
-        F.broadcast(qcells)
-        .join(assign, (qcells.cell == assign.cell) & (assign.vec_id != qcells.q_id))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            qcos.alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= IVF_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cosine").cast("decimal(18,6)").cast("double").alias("cosine"),
-            "rnk",
-        )
-    )
+    return _ivf_search(e, cent)
 
 
 # ---- hard-negative mining --------------------------------------------
@@ -1317,13 +1277,7 @@ def similarity_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤K selected vectors — K·C cosine evaluations TOTAL, driver-loop
     bounded by K, every per-step argmax a 1-row frame. Selection
     state stays in DataFrames end-to-end; nothing wide ever shuffles."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", F.expr(_norm_spark("v")))
-    )
+    e = _normed(spark, sf_dir)
     q = e.filter(F.col("vec_id") == 0)
     rel = F.expr(_dot_spark("c.v", "q.v")) / (F.col("c.nrm") * F.col("q.nrm"))
     cand = (
@@ -1553,30 +1507,10 @@ def similarity_ann_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: LUT entries fold in pinned (m, c_id) order and the ADC
     sum folds in subspace order on both engines, so distances and
     ranks hash-match exactly."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", F.expr(_norm_spark("v")))
-        .persist()
-    )
+    e = _normed(spark, sf_dir).persist()
     # --- IVF routing (cosine coarse quantizer, first-K centroids) ---
-    cent = e.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
-    wcell = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("c_id").asc()
-    )
-    aff = (
-        e.join(F.broadcast(cent))
-        .withColumn("ccos", ccos)
-        .withColumn("crank", F.row_number().over(wcell))
-        .persist()
-    )
+    cent = _first_k_cent(e)
+    aff = _ivf_aff(e, cent)
     assign = aff.filter(F.col("crank") == 1).select(
         "vec_id", F.col("c_id").alias("cell")
     )
@@ -2048,13 +1982,7 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import DF_CAP, _hashed_shingles
     from pyspark.sql import Window
 
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", F.expr(_norm_spark("v")))
-    )
+    e = _normed(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES)
     cos = F.expr(_dot_spark("q.v", "e.v")) / (
         F.col("q.nrm") * F.col("e.nrm")

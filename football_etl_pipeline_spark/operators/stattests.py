@@ -4558,14 +4558,12 @@ def orders_robust_stl_decompose(
 # ---- Friedman blocked rank test ---------------------------------------------
 
 
-def _friedman_sql(table: str, bigint: str, dow: str) -> str:
-    """Shared Friedman text: blocks = complete ISO weeks (all 7 days
-    traded) of the daily revenue series, treatments = the 7 weekdays.
-    Within-block doubled ranks come from the 7×7 in-block sign
-    comparison (2rᵢ = Σⱼ[xⱼ<xᵢ]·2 + Σⱼ[xⱼ=xᵢ] + 1, exact BIGINTs,
-    tie-averaged by construction); the tie-general statistic
-    Q = (k−1)·Σⱼ(2Rⱼ − n(k+1))² / (Σ(2r)² − nk(k+1)²) stays INTEGRAL
-    until one final double division."""
+def _blocked_rank_ctes(table: str, bigint: str, dow: str) -> str:
+    """The blocked-rank CTE prefix Friedman and Page share, through
+    ``colsums``: blocks = complete ISO weeks (all 7 days traded) of
+    the daily revenue series, treatments = the 7 weekdays, doubled
+    tie-averaged in-block ranks ``r2`` from the 7×7 sign comparison
+    (exact BIGINTs) and their per-weekday sums ``r2_j``."""
     return f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
@@ -4594,7 +4592,16 @@ def _friedman_sql(table: str, bigint: str, dow: str) -> str:
     colsums AS (
       SELECT dow, CAST(SUM(r2) AS {bigint}) AS r2_j
       FROM ranked GROUP BY dow
-    ),
+    ),"""
+
+
+def _friedman_sql(table: str, bigint: str, dow: str) -> str:
+    """Shared Friedman text over ``_blocked_rank_ctes``: doubled
+    in-block ranks 2rᵢ = Σⱼ[xⱼ<xᵢ]·2 + Σⱼ[xⱼ=xᵢ] + 1 (exact BIGINTs,
+    tie-averaged by construction); the tie-general statistic
+    Q = (k−1)·Σⱼ(2Rⱼ − n(k+1))² / (Σ(2r)² − nk(k+1)²) stays INTEGRAL
+    until one final double division."""
+    return f"""{_blocked_rank_ctes(table, bigint, dow)}
     nb AS (
       SELECT CAST(COUNT(*) AS {bigint}) AS n FROM complete
     ),
@@ -4756,41 +4763,12 @@ def stats_cochran_q_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _page_sql(table: str, bigint: str, dow: str) -> str:
-    """Shared Page-L text: the Friedman blocks/ranks verbatim (7×7
-    in-block sign comparison → doubled tie-averaged ranks), finished
-    with the ORDERED statistic L = Σ j·Rⱼ instead of the omnibus
-    quadratic. Doubled-rank units: L₂ = 2L, E[L₂] = n·k(k+1)²/2,
+    """Shared Page-L text: the Friedman blocks/ranks
+    (``_blocked_rank_ctes``), finished with the ORDERED statistic
+    L = Σ j·Rⱼ instead of the omnibus quadratic. Doubled-rank units: L₂ = 2L, E[L₂] = n·k(k+1)²/2,
     Var[L₂] = n·k²(k+1)²(k−1)/36 (tie-naive variance — the standard
     Page formulation; stated convention)."""
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(date_trunc('week', CAST(o_orderdate AS DATE))
-                  AS DATE) AS wk,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6)))
-                  AS DOUBLE) AS revenue
-      FROM {table} GROUP BY 1, 2
-    ),
-    complete AS (
-      SELECT wk FROM daily GROUP BY wk
-      HAVING CAST(COUNT(*) AS {bigint}) = 7
-    ),
-    blocked AS (
-      SELECT d.wk, {dow} AS dow, d.revenue
-      FROM daily d JOIN complete c ON c.wk = d.wk
-    ),
-    ranked AS (
-      SELECT a.wk, a.dow,
-             CAST(SUM(CASE WHEN b.revenue < a.revenue THEN 2
-                           WHEN b.revenue = a.revenue THEN 1
-                           ELSE 0 END) + 1 AS {bigint}) AS r2
-      FROM blocked a JOIN blocked b ON b.wk = a.wk
-      GROUP BY a.wk, a.dow
-    ),
-    colsums AS (
-      SELECT dow, CAST(SUM(r2) AS {bigint}) AS r2_j
-      FROM ranked GROUP BY dow
-    ),
+    return f"""{_blocked_rank_ctes(table, bigint, dow)}
     nb AS (SELECT CAST(COUNT(*) AS {bigint}) AS n FROM complete),
     l AS (
       SELECT CAST(SUM(dow * r2_j) AS {bigint}) AS l2 FROM colsums

@@ -19,10 +19,11 @@ Determinism notes:
   stream-only semantics the pytest suite covers).
 - Money sums go through DECIMAL(18,6) as everywhere else.
 
-The sink names are pid/uuid-scoped (the ``operators/maintenance.py``
+The sink names are pid/uuid-scoped (the ``registry.run_scratch_dir``
 convention) so concurrent harnesses never collide; every stream's
 checkpoint lives in a temporary directory removed once the stream has
-stopped.
+stopped. A table or state dir the returned frame still reads comes
+from ``registry.run_scratch_dir`` and is removed at process exit.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import table_schema
-from .registry import query
+from .registry import query, run_scratch_dir
 
 STREAM_WINDOW = "5 minutes"
 
@@ -586,7 +587,7 @@ def streaming_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     name = f"svi_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    root = tempfile.mkdtemp(prefix=f"{name}_root_")
+    root = run_scratch_dir("svi", sf_dir)
     with (
         tempfile.TemporaryDirectory(prefix=f"ck_{name}_") as ck,
         _state_partitions(spark),
@@ -642,9 +643,7 @@ def streaming_quantile_sketch_maintenance(
 
     src = _table_stream(spark, sf_dir, "events").select("event_type", "value")
     name = f"qsm_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    state = os.path.join(
-        tempfile.mkdtemp(prefix=f"{name}_state_"), "hist"
-    )
+    state = os.path.join(run_scratch_dir("qsm", sf_dir), "hist")
     with (
         tempfile.TemporaryDirectory(prefix=f"ck_{name}_") as ck,
         _state_partitions(spark),
@@ -709,7 +708,7 @@ def streaming_ahash_fingerprint_maintenance(
         .select(F.col("doc_id").alias("media_id"))
     )
     name = f"afm_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    state = os.path.join(tempfile.mkdtemp(prefix=f"{name}_state_"), "fp")
+    state = os.path.join(run_scratch_dir("afm", sf_dir), "fp")
     with (
         tempfile.TemporaryDirectory(prefix=f"ck_{name}_") as ck,
         _state_partitions(spark),

@@ -3238,6 +3238,28 @@ def _kappa_final_select() -> str:
       FROM ct"""
 
 
+def _gate_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(keep_model, keep_heuristic) per document: the frozen logreg
+    gate and the heuristic blend gate, on the same pinned
+    DECIMAL(18,6) scores as their standalone queries — the one gate
+    frame behind the kappa and McNemar readouts."""
+    docs = load_table(spark, sf_dir, "documents")
+    lg = _LOGREG_SPARK.replace("TOKS", "toks").replace(
+        "STOP", _sql_list(STOPWORDS)
+    )
+    ql = _QUALITY_SPARK.replace("TOKS", "toks").replace(
+        "STOP", _sql_list(STOPWORDS)
+    )
+    return docs.select(F.expr(TOKENS_SPARK).alias("toks")).select(
+        (F.expr(lg).cast("decimal(18,6)") >= LOGREG_GATE).alias(
+            "keep_model"
+        ),
+        (F.expr(ql).cast("decimal(18,6)") >= CURATION_QUALITY_MIN).alias(
+            "keep_heuristic"
+        ),
+    )
+
+
 @query(
     "eval_gate_agreement_kappa",
     oracle=f"""
@@ -3278,21 +3300,7 @@ def eval_gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: scan → tokenize once → two constant-folded score expressions
     → one partial+final aggregate of five conditional counts — no
     shuffle wider than one row."""
-    docs = load_table(spark, sf_dir, "documents")
-    lg = _LOGREG_SPARK.replace("TOKS", "toks").replace(
-        "STOP", _sql_list(STOPWORDS)
-    )
-    ql = _QUALITY_SPARK.replace("TOKS", "toks").replace(
-        "STOP", _sql_list(STOPWORDS)
-    )
-    gates = docs.select(F.expr(TOKENS_SPARK).alias("toks")).select(
-        (F.expr(lg).cast("decimal(18,6)") >= LOGREG_GATE).alias(
-            "keep_model"
-        ),
-        (F.expr(ql).cast("decimal(18,6)") >= CURATION_QUALITY_MIN).alias(
-            "keep_heuristic"
-        ),
-    )
+    gates = _gate_pair(spark, sf_dir)
     ct = gates.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_if(
@@ -3543,20 +3551,7 @@ def text_ccnet_quality_buckets(
     grouped-prefix machinery needs the (score, doc_id) frame
     pre-aggregated, which the LM output already is — swapping in the
     prefix is a one-line change documented for the cluster profile."""
-    lm = text_unigram_lm_quality(spark, sf_dir).select(
-        "doc_id", "lm_score"
-    )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    d = lm.join(docs, "doc_id")
-    w = Window.partitionBy("lang").orderBy("lm_score", "doc_id")
-    r = d.select(
-        "lang",
-        "lm_score",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("lang"))
-        .alias("n"),
-    )
+    r = _lm_lang_ranks(spark, sf_dir)
     return r.groupBy(
         "lang", F.expr(_CCNET_BUCKET_CASE).alias("bucket")
     ).agg(
@@ -3567,6 +3562,28 @@ def text_ccnet_quality_buckets(
         ).alias("mean_lm_score"),
         F.min("lm_score").alias("min_lm_score"),
         F.max("lm_score").alias("max_lm_score"),
+    )
+
+
+def _lm_lang_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, lm_score, rn, n): each document's
+    ``text_unigram_lm_quality`` score ranked within its language
+    (ascending score, doc_id tiebreak; ``n`` = the language's doc
+    count) — the one rank behind the CCNet buckets and the curation
+    verdicts' quality screen."""
+    lm = text_unigram_lm_quality(spark, sf_dir).select(
+        "doc_id", "lm_score"
+    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+    w = Window.partitionBy("lang").orderBy("lm_score", "doc_id")
+    return lm.join(docs, "doc_id").select(
+        "doc_id",
+        "lang",
+        "lm_score",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("lang"))
+        .alias("n"),
     )
 
 
@@ -3728,17 +3745,7 @@ def text_gopher_quality_rules(
     r = _gopher_doc_flags(spark, sf_dir)
     return r.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(
-            F.when(
-                F.col("f_wc")
-                + F.col("f_mwl")
-                + F.col("f_sym")
-                + F.col("f_alpha")
-                + F.col("f_stop")
-                == 0,
-                1,
-            ).otherwise(0)
-        ).alias("n_pass_all"),
+        F.sum("pass_gopher").alias("n_pass_all"),
         F.sum("f_wc").alias("n_fail_word_count"),
         F.sum("f_mwl").alias("n_fail_mean_word_len"),
         F.sum("f_sym").alias("n_fail_symbol_ratio"),
@@ -3748,8 +3755,11 @@ def text_gopher_quality_rules(
 
 
 def _gopher_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-level Gopher rule flags (doc_id, source, f_wc..f_stop) —
-    the shared frame behind the rollup and the curation report."""
+    """Doc-level Gopher rule flags (doc_id, source, n_tokens,
+    f_wc..f_stop, pass_gopher) — the shared frame behind the rollup,
+    the curation verdicts and the mixture keep set. ``n_tokens`` is
+    the token count (``size(toks)``); ``pass_gopher`` is 1 when no
+    rule fires."""
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "source", "text", F.expr(TOKENS_SPARK).alias("toks")
@@ -3757,6 +3767,7 @@ def _gopher_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = t.select(
         "doc_id",
         "source",
+        F.size("toks").cast("bigint").alias("n_tokens"),
         F.expr(
             "size(filter(toks, w -> length(w) > 0))"
         ).alias("words"),
@@ -3776,29 +3787,34 @@ def _gopher_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             " s -> array_contains(toks, s)))"
         ).alias("stops"),
     )
-    return m.select(
-        "doc_id",
-        "source",
-        F.when(
+    flags = {
+        "f_wc": F.when(
             (F.col("words") >= 50) & (F.col("words") <= 100000), 0
-        )
-        .otherwise(1)
-        .alias("f_wc"),
-        F.when(
+        ).otherwise(1),
+        "f_mwl": F.when(
             (F.col("words") > 0)
             & (F.col("sum_len") >= 3 * F.col("words"))
             & (F.col("sum_len") <= 10 * F.col("words")),
             0,
-        )
-        .otherwise(1)
-        .alias("f_mwl"),
-        F.when(F.col("symbols") * 10 <= F.col("words"), 0)
-        .otherwise(1)
-        .alias("f_sym"),
-        F.when(F.col("alpha_words") * 10 >= F.col("words") * 8, 0)
-        .otherwise(1)
-        .alias("f_alpha"),
-        F.when(F.col("stops") >= 2, 0).otherwise(1).alias("f_stop"),
+        ).otherwise(1),
+        "f_sym": F.when(F.col("symbols") * 10 <= F.col("words"), 0)
+        .otherwise(1),
+        "f_alpha": F.when(
+            F.col("alpha_words") * 10 >= F.col("words") * 8, 0
+        ).otherwise(1),
+        "f_stop": F.when(F.col("stops") >= 2, 0).otherwise(1),
+    }
+    # pass_gopher sums the flag expressions in the SAME projection (not
+    # a second select over the flag columns): a projection that both
+    # passes f_* through and sums them would not collapse into the one
+    # below it, adding a Project to every consumer's plan.
+    n_fail = sum(flags.values())
+    return m.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        *[col.alias(name) for name, col in flags.items()],
+        F.when(n_fail == 0, 1).otherwise(0).alias("pass_gopher"),
     )
 
 
@@ -3905,48 +3921,20 @@ def text_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def curation_doc_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, pass_gopher, pass_quality, pass_dsir) — the
-    per-document outcome of the three production text screens, the
-    Spark twin of ``_CURATION_VERDICT_CTES``. Shared by
-    ``text_curation_report`` and the cross-modal paired report so
-    their text-keep decisions cannot drift."""
+    """(doc_id, source, pass_gopher, pass_quality, pass_dsir, n_tokens,
+    logw) — the per-document outcome of the three production text
+    screens, the Spark twin of ``_CURATION_VERDICT_CTES``, with the
+    token count and DSIR log weight the mixture keep set needs.
+    Shared by ``text_curation_report``, the cross-modal paired report
+    and ``_mixture_kept`` so their text-keep decisions cannot drift."""
     gop = _gopher_doc_flags(spark, sf_dir).select(
+        "doc_id", "source", "n_tokens", "pass_gopher"
+    )
+    q = _lm_lang_ranks(spark, sf_dir).select(
         "doc_id",
-        "source",
-        F.when(
-            F.col("f_wc")
-            + F.col("f_mwl")
-            + F.col("f_sym")
-            + F.col("f_alpha")
-            + F.col("f_stop")
-            == 0,
-            1,
-        )
-        .otherwise(0)
-        .alias("pass_gopher"),
-    )
-    lm = text_unigram_lm_quality(spark, sf_dir).select(
-        "doc_id", "lm_score"
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang"
-    )
-    w = Window.partitionBy("lang").orderBy("lm_score", "doc_id")
-    q = (
-        lm.join(docs, "doc_id")
-        .select(
-            "doc_id",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("lang"))
-            .alias("n"),
-        )
-        .select(
-            "doc_id",
-            F.when(F.col("rn") * 3 <= F.col("n"), 0)
-            .otherwise(1)
-            .alias("pass_quality"),
-        )
+        F.when(F.col("rn") * 3 <= F.col("n"), 0)
+        .otherwise(1)
+        .alias("pass_quality"),
     )
     dsir = _dsir_docw(spark, sf_dir).select("doc_id", "logw")
     return (
@@ -3958,6 +3946,8 @@ def curation_doc_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pass_gopher",
             F.coalesce("pass_quality", F.lit(0)).alias("pass_quality"),
             F.when(F.col("logw") > 0, 1).otherwise(0).alias("pass_dsir"),
+            "n_tokens",
+            "logw",
         )
     )
 
@@ -4168,27 +4158,12 @@ def eval_langid_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     report precision 0 by convention (stated here, identical both
     engines).
 
-    Plan: one tokenize scan → 25-cell confusion aggregate; marginals
-    and PRF run on that tiny frame. The scan is the whole cost."""
-    docs = load_table(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    counted = docs.select(
-        "lang", "text", F.expr(TOKENS_SPARK).alias("toks")
-    ).select(
-        "lang",
-        *[
-            F.expr(_marker_count("toks", lg, "spark")).alias(f"c_{lg}")
-            for lg in LANG_MARKERS
-        ],
-        F.expr(CJK_COUNT_SPARK).alias("c_cjk"),
+    Plan: ``text_language_id`` itself (one tokenize scan → 25-cell
+    confusion aggregate); marginals and PRF run on that tiny frame.
+    The scan is the whole cost."""
+    text_language_id(spark, sf_dir).createOrReplaceTempView(
+        "langid_prf_conf"
     )
-    pred = _lang_case({lg: f"c_{lg}" for lg in LANG_MARKERS}, "c_cjk")
-    conf = (
-        counted.select("lang", F.expr(pred).alias("predicted_lang"))
-        .groupBy("lang", "predicted_lang")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-    )
-    conf.createOrReplaceTempView("langid_prf_conf")
     return spark.sql(
         _langid_prf_sql(
             "SELECT lang, predicted_lang, n_docs FROM langid_prf_conf",
@@ -4254,21 +4229,7 @@ def eval_gate_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: scan → tokenize once → two constant-folded scores → one
     partial+final aggregate of three conditional counts."""
-    docs = load_table(spark, sf_dir, "documents")
-    lg = _LOGREG_SPARK.replace("TOKS", "toks").replace(
-        "STOP", _sql_list(STOPWORDS)
-    )
-    ql = _QUALITY_SPARK.replace("TOKS", "toks").replace(
-        "STOP", _sql_list(STOPWORDS)
-    )
-    gates = docs.select(F.expr(TOKENS_SPARK).alias("toks")).select(
-        (F.expr(lg).cast("decimal(18,6)") >= LOGREG_GATE).alias(
-            "keep_model"
-        ),
-        (F.expr(ql).cast("decimal(18,6)") >= CURATION_QUALITY_MIN).alias(
-            "keep_heuristic"
-        ),
-    )
+    gates = _gate_pair(spark, sf_dir)
     ct = gates.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.count_if(
@@ -4547,10 +4508,12 @@ def text_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see ``_mixture_finish`` for the weight rationale, the fixed-
     point exactness chain, and the stated conventions).
 
-    Plan & scale: the three screens and the token counts are the
-    standalone operators' plans (one documents scan feeds gopher +
-    token counts; LM and DSIR share the exploded-token aggregates);
-    the keep set joins on doc_id (co-partitioned hash joins), then
+    Plan & scale: the keep set is ``curation_doc_verdicts`` filtered
+    on its three pass flags, i.e. the report's own verdict plan (one
+    documents scan feeds the gopher flags and the token counts; LM
+    and DSIR share their exploded-token aggregates; the doc-level
+    frames join on doc_id, and the pass filters turn the verdict's
+    outer joins into inner ones), then
     EVERYTHING after the per-source aggregate runs on a
     |sources|-row frame — windows, apportionment, the supply cap.
     No driver math; the only corpus-scale exchanges are the ones the
@@ -4573,60 +4536,21 @@ def text_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mixture_kept(spark: SparkSession, sf_dir: str):
-    """The curation keep set the mixture planner/executor share:
-    Gopher-pass AND per-language LM upper-terciles AND positive DSIR
-    weight, with per-doc token counts — the text_curation_report
-    intersection as a (doc_id, source, n_tokens, logw) frame.
-    Returns (kept, documents)."""
-    gop = _gopher_doc_flags(spark, sf_dir).select(
-        "doc_id",
-        "source",
-        F.when(
-            F.col("f_wc")
-            + F.col("f_mwl")
-            + F.col("f_sym")
-            + F.col("f_alpha")
-            + F.col("f_stop")
-            == 0,
-            1,
-        )
-        .otherwise(0)
-        .alias("pass_gopher"),
-    )
-    lm = text_unigram_lm_quality(spark, sf_dir).select(
-        "doc_id", "lm_score"
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy("lm_score", "doc_id")
-    q = (
-        lm.join(docs.select("doc_id", "lang"), "doc_id")
-        .select(
-            "doc_id",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("lang"))
-            .alias("n"),
-        )
-        .select(
-            "doc_id",
-            F.when(F.col("rn") * 3 <= F.col("n"), 0)
-            .otherwise(1)
-            .alias("pass_quality"),
-        )
-    )
-    dsir = _dsir_docw(spark, sf_dir).select("doc_id", "logw")
-    tok = docs.select(
-        "doc_id",
-        F.size(F.expr(TOKENS_SPARK)).cast("bigint").alias("n_tokens"),
-    )
+    """The curation keep set the mixture planner/executor share: the
+    ``curation_doc_verdicts`` rows that pass all three screens
+    (Gopher rules AND per-language LM upper terciles AND positive DSIR
+    weight) — the text_curation_report intersection as a
+    (doc_id, source, n_tokens, logw) frame. Returns (kept, documents)."""
     kept = (
-        gop.filter(F.col("pass_gopher") == 1)
-        .join(q.filter(F.col("pass_quality") == 1), "doc_id")
-        .join(dsir.filter(F.col("logw") > 0), "doc_id")
-        .join(tok, "doc_id")
+        curation_doc_verdicts(spark, sf_dir)
+        .filter(
+            (F.col("pass_gopher") == 1)
+            & (F.col("pass_quality") == 1)
+            & (F.col("pass_dsir") == 1)
+        )
         .select("doc_id", "source", "n_tokens", "logw")
     )
-    return kept, docs
+    return kept, load_table(spark, sf_dir, "documents")
 
 
 def _mixture_exec_tail(kept: str, bigint: str, strtype: str) -> str:

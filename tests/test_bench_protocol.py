@@ -8,6 +8,8 @@ SparkSession; the rest work on strings and dicts.
 
 from __future__ import annotations
 
+import os
+
 import bench
 from tools.bench_compare import compare
 
@@ -133,8 +135,14 @@ def test_fingerprint_stable_per_query_and_distinct_across(spark, sf_dir):
 
 
 def test_tiered_run_never_official():
-    assert bench.tag_run(False) == "adhoc"
-    assert bench.tag_run(True) == "official"
+    default = bench.DEFAULT_SF_DIR
+    assert bench.tag_run(False, default) == "adhoc"
+    assert bench.tag_run(True, default) == "official"
+    assert bench.tag_run(True, default + "/") == "official"
+    # a full run at another SF dir (the sf0.01 smoke) is adhoc
+    smoke = os.path.join(os.path.dirname(default), "sf0.01")
+    assert bench.tag_run(True, smoke) == "adhoc"
+    assert bench.tag_run(False, smoke) == "adhoc"
 
 
 def test_headline_names_all_registered():

@@ -7,8 +7,8 @@ REPRODUCIBLE spot-check: a deterministic 25-query sample seeded by the
 round number (md5 of ``r{N}|{name}``, smallest digests win — no RNG
 state, so the judge can recompute the exact sample from the committed
 registry), drawn from everything OUTSIDE the frozen window, run
-through the same check the gate uses
-(``football_etl_pipeline_spark.oracle.check``), written to
+through the gate's own sweep (``tools/verify_oracle.sweep``, i.e.
+``football_etl_pipeline_spark.oracle.check``), written to
 ``JUDGE_SAMPLE_r{N}.json``.
 
 Different rounds sample different queries (the seed rotates), so over
@@ -57,23 +57,14 @@ def main() -> int:
     from football_etl_pipeline_spark.operators.registry import (
         DRIVER_WINDOW_R04,
     )
-    from football_etl_pipeline_spark.oracle import check, make_duck
+    from tools.verify_oracle import sweep
     import __spark_entry__ as e
 
-    qs, oracles = e.queries(), e.oracle_sql()
-    pool = [n for n in qs if n not in DRIVER_WINDOW_R04]
+    pool = [n for n in e.queries() if n not in DRIVER_WINDOW_R04]
     chosen = sample_names(round_n, pool, k)
 
     spark = get_spark("judge_sample")
-    con = make_duck(sf_dir)
-    results: dict[str, dict] = {}
-    for name in chosen:
-        rec = check(spark, con, lambda: qs[name](spark, sf_dir), oracles[name])
-        results[name] = rec
-        marker = {"ok": "ok  ", "fail": "FAIL"}[rec["status"]]
-        print(f"{marker} {name} ({rec['secs']}s, rows={rec['rows']})"
-              + (f": {rec['err']}" if rec["err"] else ""))
-    con.close()
+    results = sweep(spark, sf_dir, chosen, verbose=True, exact=True)
 
     summary = {
         "ok": sum(1 for r in results.values() if r["status"] == "ok"),
