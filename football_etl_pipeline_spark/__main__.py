@@ -58,11 +58,12 @@ def _run_transform(spark, api: str, files: list[str], out: str, dead: str | None
 
     res = run_transform(spark, api, files)
     metrics = write_unified(res.good, out)
-    n_good = metrics["n_rows"]  # observed during the write — no re-scan
-    n_dead = res.dead_letter.count()
     if dead:
         write_dead_letter(res.dead_letter, dead)
     res.release()
+    # counts observed during the write and held by the driver: no re-scan
+    record = res.log_run(metrics, api)
+    n_good, n_dead = record["rows_loaded"], len(res.verdicts)
     print(f"loaded {n_good} rows to {out}; {n_dead} dead-letter group(s)"
           + (f" -> {dead}" if dead else ""))
     return 0

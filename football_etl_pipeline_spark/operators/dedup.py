@@ -36,6 +36,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.testdata import load_table
 from .registry import query
 from .textops import (
@@ -1623,9 +1624,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold``, so the sweep costs one scored-pair computation plus
     two bounded aggregates — never five rung executions."""
     pj = dedup_ngram_jaccard(spark, sf_dir)
-    th = spark.createDataFrame(
-        [(t,) for t in SWEEP_THRESHOLDS], "threshold double"
-    )
+    th = local_frame(spark, [(t,) for t in SWEEP_THRESHOLDS], "threshold double")
     exp = pj.join(F.broadcast(th), F.col("jaccard") >= F.col("threshold")).persist()
     np_ = exp.groupBy("threshold").agg(F.count(F.lit(1)).alias("n_pairs"))
     nd = (

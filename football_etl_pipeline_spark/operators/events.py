@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
+from ..session import local_frame
 from ..sources.testdata import load_table
 from .registry import query
 
@@ -1528,7 +1529,8 @@ def events_count_min_heavyhitters(
         )
         for r in top
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "uid string, n_exact long, cms_never_undercounts boolean,"
         " cms_within_eps boolean",
@@ -2578,8 +2580,8 @@ def events_transition_contract(
     counted = seq.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n_transitions")
     )
-    allowed = spark.createDataFrame(
-        list(_ALLOWED_TRANSITIONS), "a_from string, a_to string"
+    allowed = local_frame(
+        spark, list(_ALLOWED_TRANSITIONS), "a_from string, a_to string"
     )
     return (
         counted.join(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
+from ..session import local_frame
 from ..sources.testdata import load_table
 from .registry import query
 
@@ -259,7 +260,8 @@ def join_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans BroadcastNestedLoopJoin; at any scale the bands table is
     constant-size so this stays O(rows x bands) map-side."""
     orders = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("low", 0.0, 100000.0),
             ("mid", 100000.0, 300000.0),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.testdata import load_table
 from .events import HLL_REL_ERR
 from .registry import query
@@ -1030,9 +1031,7 @@ def embedding_pca_power_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = [tdiv(x, wd) for x in w]
         trajectory += [(t, d, v[d]) for d in range(DIM)]
     xs.unpersist()
-    return spark.createDataFrame(
-        trajectory, "iteration int, dim int, v_micro long"
-    )
+    return local_frame(spark, trajectory, "iteration int, dim int, v_micro long")
 
 
 # ---- equi-height histogram (CBO statistics) ---------------------------

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.testdata import load_table
 from .registry import query
 from .textops import hash60_duck, hash60_spark
@@ -627,10 +628,10 @@ def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cent_df(spark: SparkSession, cents: dict[int, list[float]]) -> DataFrame:
     """Broadcastable centroid frame from driver-side vectors. Doubles
-    round-trip exactly through collect/createDataFrame, so the values
-    are bit-identical to what the oracle computes in-engine."""
+    round-trip exactly through collect and an Arrow ``local_frame``, so
+    the values are bit-identical to what the oracle computes in-engine."""
     rows = [(int(c), [float(x) for x in vec]) for c, vec in sorted(cents.items())]
-    df = spark.createDataFrame(rows, "c_id bigint, cv array<double>")
+    df = local_frame(spark, rows, "c_id bigint, cv array<double>")
     return df.withColumn("cnrm", F.expr(_norm_spark("cv")))
 
 
@@ -2578,9 +2579,7 @@ def dedup_semantic_recall_sweep(
     max_np = max(SEMDEDUP_SWEEP_PROBES)
     # build the probe frame FROM the tuple so Spark and the oracle
     # share the constant even if it stops being contiguous-from-1
-    probes = spark.createDataFrame(
-        [(int(p),) for p in SEMDEDUP_SWEEP_PROBES], "np long"
-    )
+    probes = local_frame(spark, [(int(p),) for p in SEMDEDUP_SWEEP_PROBES], "np long")
     ccos = F.expr(_dot_spark("v", "cv")) / (F.col("nrm") * F.col("cnrm"))
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("c_id").asc()

@@ -1,19 +1,23 @@
 """The composed reference-parity pipeline (E2 equivalent):
 
     read raw JSON → derive group key from path → normalize+join per
-    API → enforce schema → split good/dead-letter → write.
+    API → enforce schema → decide each group once → write.
 
 Reference DAG: Create → Map(extractPk) → GroupByKey →
 ProcessFilesDoFn.with_outputs → [BigQuery | dead-letter text]
 (/root/reference/dataflow-flex/football_pipeline/pipeline.py:34-63).
 
-Spark plan: NO GroupByKey shuffle at all — the group key is derived
-per-row from the file path, the joins are broadcast (teams side is
-~20 rows/group), and failure routing is two filters over one cached
-DataFrame. The only wide operation is the group-error aggregation,
-over group keys (hundreds, not rows). At 100 TB of landing files this
-is a pure scan→broadcast-join→project job that scales linearly with
-input bytes.
+Spark plan: NO GroupByKey shuffle over rows — the group key is derived
+per-row from the file path and the joins are broadcast (teams side is
+~20 rows/group). The group verdicts (at most one error per
+season-league group, over group keys: hundreds, not rows) are
+aggregated and collected ONCE, while the transform is built, over the
+cached enforced frame. The driver already holds every group's file
+list, so the dead-letter frame is a driver-side ``LocalRelation``
+(its actions re-read nothing), and the good rows are one filter on the
+failed keys over the cached frame — a pure scan→broadcast-join→project
+job at the load. At 100 TB of landing files the load scales linearly
+with input bytes; the driver holds one verdict per failed group.
 
 Group-level failure parity (transforms.py:180-184): ONE bad record
 (or one corrupt file, or one failed guard) dead-letters its whole
@@ -23,13 +27,17 @@ while other groups in the same run land normally.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import re
+from collections import Counter
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import raw_football as raw
 from .enforce import ERROR_COL, enforce_schema
+from .structlog import etl_event
 from .transforms import TRANSFORM_MAP
 from .unified_schema import UNIFIED_SCHEMA_V1, ParsedSchema, parse_schema
 
@@ -39,12 +47,19 @@ RAW_SCHEMAS = {
 }
 
 
+DEAD_LETTER_DDL = "PK string, files array<string>, error string"
+
+
 @dataclass
 class TransformResult:
     good: DataFrame         # unified schema columns, ready to load
     dead_letter: DataFrame  # {"PK", "files", "error"} — one row per failed group
     dropped: DataFrame      # probe-miss standings rows (logged skips, not failures)
     cached: tuple[DataFrame, ...] = ()  # frames run_transform cached
+    # driver-held run facts: group -> its sorted input files, and
+    # failed group -> its error (the dead-letter rows)
+    groups: dict[str, list[str]] = field(default_factory=dict)
+    verdicts: dict[str, str] = field(default_factory=dict)
 
     def release(self) -> None:
         """Unpersist the frames ``run_transform`` cached, once the
@@ -52,6 +67,23 @@ class TransformResult:
         every batch's caches outlive it for the life of the stream."""
         for df in self.cached:
             df.unpersist()
+
+    def log_run(
+        self, load_metrics: dict, api_source: str, run_id: str | None = None
+    ) -> dict:
+        """Emit the run's one ``etl_event`` and return its counts:
+        files read, groups and rows loaded (``load_metrics`` is
+        ``write_unified``'s observation), and dead-lettered groups
+        counted by error string. Every count is already on the driver,
+        so this starts no Spark action."""
+        record = {
+            "files_read": sum(map(len, self.groups.values())),
+            "groups_loaded": len(self.groups.keys() - self.verdicts.keys()),
+            "rows_loaded": load_metrics["n_rows"],
+            "dead_letter_by_error": dict(Counter(self.verdicts.values())),
+        }
+        etl_event("transform", "run_summary", api_source, run_id, **record)
+        return record
 
 
 def run_transform(
@@ -79,25 +111,19 @@ def run_transform(
     # (transforms.py:184 lists ALL paths of the failed group — even
     # zero-row files, so this is derived from the literal input list,
     # not from scanned rows). The regex is extractPk (helpers.py:20).
-    import re
-
     def _pk_of(path: str) -> str:
         m = re.search(raw.PK_REGEX, path)
         return f"{m.group(1)}-{m.group(2)}" if m else "unknown"
 
     groups: dict[str, list[str]] = {}
-    for p in input_files:
+    for p in sorted(input_files):
         groups.setdefault(_pk_of(p), []).append(p)
-    files_by_group = spark.createDataFrame(
-        [(pk, sorted(fs)) for pk, fs in groups.items()],
-        "group_pk string, files array<string>",
-    )
 
     # Corrupt-file parity (transforms.py:167-169): any unparseable file
     # fails its whole group with the path in the message.
     def _corrupt(df: DataFrame | None) -> DataFrame:
         if df is None:
-            return spark.createDataFrame([], "group_pk string, error string")
+            return local_frame(spark, [], "group_pk string, error string")
         return (
             df.filter(F.col(raw.CORRUPT_COL).isNotNull())
             .select(
@@ -124,7 +150,7 @@ def run_transform(
                     T.StructField("_path", T.StringType()),
                 ]
             )
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         return df.filter(F.col(raw.CORRUPT_COL).isNull())
 
     teams_clean = _clean(teams, team_schema)
@@ -136,8 +162,9 @@ def run_transform(
         schema,
         keep=["group_pk"],
     )
-    # Cache: the split below reads `enforced` twice (good + error agg) —
-    # the Spark idiom for Beam's single-pass multi-output (SURVEY §4).
+    # Cache: the verdict collect below and the load both read
+    # `enforced` — the Spark idiom for Beam's single-pass multi-output
+    # (SURVEY §4).
     enforced = enforced.cache()
 
     record_errors = (
@@ -158,22 +185,22 @@ def run_transform(
         .select("group_pk", F.col("_e.error").alias("error"))
     )
 
-    good = (
-        enforced.join(F.broadcast(group_errors), "group_pk", "left_anti")
-        .drop("group_pk", ERROR_COL)
+    # The one routing decision: at most one row per group, collected
+    # once, so the load and both dead-letter actions re-derive nothing.
+    verdicts = {r["group_pk"]: r["error"] for r in group_errors.collect()}
+    good = enforced.filter(~F.col("group_pk").isin(list(verdicts))).drop(
+        "group_pk", ERROR_COL
     )
-    dead_letter = (
-        group_errors.join(files_by_group, "group_pk", "left")
-        .select(
-            F.col("group_pk").alias("PK"),  # uppercase verbatim (transforms.py:184)
-            F.coalesce("files", F.array()).alias("files"),
-            "error",
-        )
+    dead_letter = local_frame(
+        spark,
+        # PK is uppercase verbatim (transforms.py:184)
+        [(pk, groups.get(pk, []), verdicts[pk]) for pk in sorted(verdicts)],
+        DEAD_LETTER_DDL,
     )
     # enforced first: it reads the endpoint caches, and dropping a
     # cache under a still-cached dependent re-plans the dependent
     cached = tuple(df for df in (enforced, teams, standings) if df is not None)
-    return TransformResult(good, dead_letter, norm.dropped, cached)
+    return TransformResult(good, dead_letter, norm.dropped, cached, groups, verdicts)
 
 
 def write_unified(df: DataFrame, out_path: str) -> dict:

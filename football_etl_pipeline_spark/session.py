@@ -15,8 +15,10 @@ chosen to also be the right default on a large multi-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -57,3 +59,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence, schema: str | T.StructType
+) -> DataFrame:
+    """``rows`` under ``schema`` (a DDL string or a ``StructType``) as
+    an Arrow-backed ``LocalRelation``. ``createDataFrame(<list>)``
+    instead parallelizes the pickled list, so every action on it runs
+    Python-worker tasks; collecting a ``LocalRelation`` fires no job
+    at all. The Arrow converter rejects an empty list, so zero rows go
+    in as the schema's empty table."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    if rows:
+        table = LocalDataToArrowConversion.convert(
+            rows, schema, use_large_var_types=False
+        )
+    else:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)

@@ -211,10 +211,11 @@ def read_endpoint(
 
     Cached: Spark refuses corrupt-record-only projections over raw JSON
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) unless the
-    parsed rows are materialized first, and the pipeline reads this
-    twice (corrupt routing + normalize). A run's landing files are
-    small (BASELINE.md: KBs/run; bulk backfills arrive via parquet) so
-    the cache is cheap."""
+    parsed rows are materialized first, and the pipeline's one group
+    verdict collect reads this twice (corrupt routing + normalize);
+    the load then reads the cached enforced frame, not this. A run's
+    landing files are small (BASELINE.md: KBs/run; bulk backfills
+    arrive via parquet) so the cache is cheap."""
     return with_group_pk(_read_json(spark, paths, schema)).cache()
 
 

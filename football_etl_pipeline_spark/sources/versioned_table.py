@@ -37,6 +37,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
@@ -401,7 +403,7 @@ def read_version(
         # zero referenced files (a pruned-out read, or an overwrite
         # commit of an empty frame whose writer emitted no parts):
         # an empty frame with the committed schema, not a read error
-        return spark.createDataFrame([], committed)
+        return local_frame(spark, [], committed)
     paths = [os.path.join(root, f) for f in files]
     # nullable-relaxed: files predating an evolved column have no
     # values for it, so the reader must be allowed to emit NULLs

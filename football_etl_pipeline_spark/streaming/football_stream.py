@@ -51,9 +51,8 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..plans.pipeline import run_transform
+from ..plans.pipeline import run_transform, write_unified
 
 _FILE_PREFIX = "file:"
 
@@ -204,8 +203,10 @@ def run_streaming_transform(
     pending_dir = os.path.join(checkpoint_dir, "pending_groups")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
+        # binaryFile emits one row per file: a set, not a Spark distinct
+        # (whose shuffle would cost a job per micro-batch)
         arrived = sorted(
-            _local_path(r.path) for r in batch_df.select("path").distinct().collect()
+            {_local_path(r.path) for r in batch_df.select("path").collect()}
         )
         pending = _read_pending(pending_dir, batch_id)
         files, still_pending = _split_ready(
@@ -215,10 +216,8 @@ def run_streaming_transform(
         if not files:
             return
         res = run_transform(spark, api_name, files, schema_data)
-        (
-            res.good.withColumn("update_timestamp", F.current_timestamp())
-            .write.mode("overwrite")
-            .parquet(os.path.join(warehouse_path, f"batch_id={batch_id}"))
+        metrics = write_unified(
+            res.good, os.path.join(warehouse_path, f"batch_id={batch_id}")
         )
         (
             res.dead_letter.coalesce(1)
@@ -226,6 +225,7 @@ def run_streaming_transform(
             .json(os.path.join(dead_letter_path, f"batch_id={batch_id}"))
         )
         res.release()
+        res.log_run(metrics, api_name, run_id=f"batch_id={batch_id}")
 
     writer = (
         read_landing_stream(spark, landing_root, api_name, max_files_per_trigger)
