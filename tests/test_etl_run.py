@@ -30,11 +30,14 @@ from football_etl_pipeline_spark.plans.pipeline import (
     write_unified,
 )
 
-# The whole batch op on the four-group fixture below fires 24 jobs on
+# The whole batch op on the four-group fixture below fires 18 jobs on
 # local[8], most of them while the verdicts are built; it fired 39
 # when the load and both dead-letter actions each re-derived the group
-# errors.
-BATCH_OP_JOBS = 24
+# errors, and 24 while the endpoint caches were filled lazily.
+BATCH_OP_JOBS = 18
+# Of those, run_transform fires this many on every run: one fill per
+# endpoint read, then the verdict collect.
+TRANSFORM_JOBS = 14
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 _spec = importlib.util.spec_from_file_location(
@@ -97,6 +100,21 @@ def test_dead_letter_is_a_local_relation_collected_without_a_job(spark, tmp_path
         assert res.verdicts == {r["PK"]: r["error"] for r in rows}
     finally:
         res.release()
+
+
+def test_transform_job_count_does_not_move_with_timing(spark, tmp_path):
+    """Each endpoint read fills its cache in one job before the verdict
+    collect plans its cache stages, so every run over one input fires
+    the same jobs. Left lazy, every cache stage planned before another
+    had finished loading the cache fired its own fill job, and the
+    count moved with timing."""
+    files = _faulty_batch(str(tmp_path))
+    counts = []
+    for _ in range(4):
+        res, n = _jobs(spark, lambda: run_transform(spark, "apifootball", files))
+        res.release()
+        counts.append(n)
+    assert counts == [TRANSFORM_JOBS] * 4, counts
 
 
 def test_batch_op_job_count_is_pinned(spark, tmp_path):
